@@ -1452,12 +1452,17 @@ object RelationalQueries {
       // aggregate keeps the store and the serving read delta-sized, which
       // is the shape that survives 100 TB (guide §2.3 aggregate-before-
       // shuffle). The store is wiped and rebuilt INSIDE every invocation —
-      // transport, not a cross-run cache.
-      val root = "/tmp/graft_basket_exec_stream"
+      // transport, not a cross-run cache. The root is scoped to this JVM,
+      // so the wipe of prior invocations' leftovers (never concurrent
+      // within one JVM) cannot reach another process's in-flight store,
+      // and the whole root goes when the JVM's file systems close.
+      val root = s"/tmp/graft_basket_exec_stream/pid_${ProcessHandle.current().pid()}"
       val store = s"$root/inv_${StreamSinkIds.next()}"
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(rootPath, true) // prior invocations' leftovers (never concurrent)
+      fs.delete(rootPath, true)
+      fs.mkdirs(rootPath)
+      fs.deleteOnExit(rootPath) // registers only a path that exists
       graft.streaming.StreamOps.withShufflePartitions(s, 8) {
         val q = graft.streaming.StreamOps
           .basketPairsStream(mem.toDF().toDF("order_id", "part_id", "ts"))

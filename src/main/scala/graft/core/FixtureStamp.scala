@@ -13,17 +13,18 @@ import org.apache.spark.sql.SparkSession
   * over and stale intermediates are never read again (the orphaned dirs
   * are /tmp-lifetime garbage, reaped by the OS).
   *
-  * One recursive listing per (JVM, dir) — memoized; fixture dirs are a
-  * handful of parquet files, so the listing is microseconds against any
-  * build this keys. */
+  * One recursive listing per (JVM, dir) — memoized once the dir exists;
+  * fixture dirs are a handful of parquet files, so the listing is
+  * microseconds against any build this keys. */
 object FixtureStamp {
   private val cache = scala.collection.concurrent.TrieMap[String, String]()
 
   /** 12-hex-char content stamp of `dir` (md5 over the sorted file
     * inventory, truncated — a cache discriminator, not a security
     * boundary). Missing dirs stamp as "absent": callers fail later with
-    * the real read error, not here. */
-  def of(s: SparkSession, dir: String): String = cache.getOrElseUpdate(dir, {
+    * the real read error, not here. "absent" is never memoized, so a dir
+    * generated after its first probe gets its content stamp from then on. */
+  def of(s: SparkSession, dir: String): String = cache.get(dir).getOrElse {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) "absent"
@@ -37,9 +38,9 @@ object FixtureStamp {
               .getBytes("UTF-8"))
         }
       walk(p)
-      md.digest().take(6).map(b => f"$b%02x").mkString
+      cache.getOrElseUpdate(dir, md.digest().take(6).map(b => f"$b%02x").mkString)
     }
-  })
+  }
 
   /** The standard cache-path component for a fixture dir: the sanitized
     * dir string (human-readable, the pre-r16 key) plus the content stamp

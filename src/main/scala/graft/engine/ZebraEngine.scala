@@ -46,6 +46,15 @@ final case class EngineConfig(
   *
   * The monotone `seq` column reproduces UUIDv7 insertion ordering
   * (lsh.rs:415) — "first-inserted wins" for deduplicate.
+  *
+  * Read-schema rule: every read of the vectors and index tables goes
+  * through [[readTable]], which hands parquet the table's schema instead
+  * of letting it infer one. Inference is a Spark job per read (a footer
+  * scan), and a single-query lookup reads both tables; with the schema
+  * supplied, building a query DataFrame launches no job. The
+  * schema is inferred at most once per table per engine instance, and
+  * dropped whenever the engine swaps, rebuilds or clears that table.
+  * Appends keep it (they write the same columns).
   */
 final class ZebraEngine private (
     val spark: SparkSession, val path: String, val config: EngineConfig) {
@@ -55,10 +64,29 @@ final class ZebraEngine private (
   private def indexDir = s"$path/index"
   private def modelFile = s"$path/index_model.bin"
 
+  /** Read schemas of the engine's tables, keyed by dir (see the class
+    * doc's read-schema rule). */
+  @volatile private var readSchemas: Map[String, StructType] = Map.empty
+
+  /** An engine table read with its cached schema: no inference job after
+    * the first read of `dir` on this instance. */
+  private def readTable(dir: String): DataFrame = {
+    val schema = readSchemas.getOrElse(dir, {
+      val inferred = spark.read.parquet(dir).schema
+      readSchemas += dir -> inferred
+      inferred
+    })
+    spark.read.schema(schema).parquet(dir)
+  }
+
+  /** Drop `dir`'s cached schema: the table was swapped, rebuilt or
+    * cleared, so the next read infers it again. */
+  private def forgetSchema(dir: String): Unit = readSchemas -= dir
+
   /** D1-adjacent: the vectors table (empty DF with the right schema when
     * nothing has been inserted yet). */
   def vectors: DataFrame =
-    if (hasData(vectorsDir)) spark.read.parquet(vectorsDir)
+    if (hasData(vectorsDir)) readTable(vectorsDir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], recordSchema)
 
@@ -129,7 +157,7 @@ final class ZebraEngine private (
     // vectors — silent index corruption (missing/phantom candidates at
     // query time). seq >= base selects exactly this batch, and parquet
     // min/max stats prune every older file from the read-back.
-    val written = spark.read.parquet(vectorsDir).filter(col("seq") >= base)
+    val written = readTable(vectorsDir).filter(col("seq") >= base)
     // advance the seq watermark (and the count cache) from the batch just
     // written — the filter prunes to the new files via footer stats, so
     // this never rescans the table the way the cold nextSeq() does
@@ -194,7 +222,10 @@ final class ZebraEngine private (
     // pre-filter budget and needs no caller-side scaling. At exhaustive
     // budget the result is algebraically the exact kNN of the filtered
     // records under any predicate.
-    val recs = where.map(vectors.filter).getOrElse(vectors)
+    // `vectors` once: `where.map(vectors.filter)` would read the table
+    // even when `where` is None (eta-expansion evaluates the receiver)
+    val all = vectors
+    val recs = where.fold(all)(all.filter)
     // Selectivity of the predicate, 1.0 when unfiltered; lazy so the
     // extra count job only runs on indexed filtered paths.
     lazy val keptCount = where.map(_ => recs.count()).getOrElse(count())
@@ -224,7 +255,7 @@ final class ZebraEngine private (
                 LshForest.scaledBudget(baseRerank, keptCount, count())
               else baseRerank
             IvfPq.topK(
-              queries, spark.read.parquet(indexDir), recs, model, k,
+              queries, readTable(indexDir), recs, model, k,
               nprobe = nprobe, rerank = rerank,
               metric = m, vecId = "id")
           case _ => exact
@@ -254,7 +285,7 @@ final class ZebraEngine private (
           // corpus: Int.MaxValue budgets mean "exhaustive", not "allocate"
           val cappedRerank =
             math.max(k, math.min(rerank.toLong, keptCount).toInt)
-          val codes0 = spark.read.parquet(indexDir)
+          val codes0 = readTable(indexDir)
           val codes = where
             .map(_ => codes0.join(recs.select("id"), Seq("id"), "left_semi"))
             .getOrElse(codes0)
@@ -277,7 +308,7 @@ final class ZebraEngine private (
               case None => searchK
             }
             LshForest.topK(
-              queries, spark.read.parquet(indexDir), recs, model, k,
+              queries, readTable(indexDir), recs, model, k,
               metric = m, searchKOpt = sk, vecId = "id")
           case _ => exact
         }
@@ -342,7 +373,8 @@ final class ZebraEngine private (
       where: Option[Column] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{array_distinct, filter => afilter, row_number, split => fsplit}
-    val recs = where.map(vectors.filter).getOrElse(vectors)
+    val all = vectors
+    val recs = where.fold(all)(all.filter)
     val docs = recs.select(
       col("id").as("doc_id"), col("document").cast("string").as("text"))
     // Per-query DISTINCT term sets, derived in-plan (no driver round-trip
@@ -383,7 +415,7 @@ final class ZebraEngine private (
     rewrite(vectorsDir, vectors.join(
       ids.select(col(idCol).as("id")), Seq("id"), "left_anti"))
     if (hasData(indexDir))
-      rewritePartitioned(indexDir, spark.read.parquet(indexDir).join(
+      rewritePartitioned(indexDir, readTable(indexDir).join(
         ids.select(col(idCol).as("id")), Seq("id"), "left_anti"))
   }
 
@@ -402,11 +434,12 @@ final class ZebraEngine private (
     val kept = vectors
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-    val keptIds = kept.select("id")
     rewrite(vectorsDir, kept)
+    // the index keep-set comes from the REWRITTEN table: `kept` is a plan
+    // over the files the swap just moved away
     if (hasData(indexDir))
-      rewritePartitioned(indexDir,
-        spark.read.parquet(indexDir).join(keptIds, Seq("id"), "left_semi"))
+      rewritePartitioned(indexDir, readTable(indexDir)
+        .join(vectors.select("id"), Seq("id"), "left_semi"))
   }
 
   /** The index's REACHABLE bucket rows: leaf-local splits (see
@@ -416,7 +449,7 @@ final class ZebraEngine private (
     * stats. The reachable set is a few-MB broadcast at most
     * (≈ sampleCap/maxNodeSize · numTrees pairs). */
   def liveIndex: DataFrame = {
-    val buckets = spark.read.parquet(indexDir)
+    val buckets = readTable(indexDir)
     loadModel() match {
       case None => buckets
       case Some(model) =>
@@ -455,7 +488,7 @@ final class ZebraEngine private (
       n, LshForest.byteBoundedCap(LshForest.Options().sampleCap, config.dim).toLong)
     val occupancyScale = math.max(1.0, n.toDouble / math.max(rebuildSample, 1L))
     val threshold = factor * config.maxNodeSize * occupancyScale
-    val buckets = spark.read.parquet(indexDir)
+    val buckets = readTable(indexDir)
     val live = liveIndex
     val overflowing = live.groupBy("tree_id", "leaf_id").count()
       .filter(col("count") > threshold)
@@ -513,7 +546,7 @@ final class ZebraEngine private (
     * ingest run). Returns the number of stale rows reclaimed. */
   def vacuumIndex(): Long = {
     if (!hasData(indexDir)) return 0L
-    val total = spark.read.parquet(indexDir).count()
+    val total = readTable(indexDir).count()
     // materialize the live view once: the count and the rewrite would
     // otherwise each re-run the scan + reachability semi-join
     val live = liveIndex.localCheckpoint()
@@ -581,7 +614,12 @@ final class ZebraEngine private (
   }
 
   /** Build (or rebuild — leaf-split compaction) the configured index. */
-  def refreshIndex(): Unit = config.indexKind match {
+  def refreshIndex(): Unit = {
+    forgetSchema(indexDir)
+    buildIndex()
+  }
+
+  private def buildIndex(): Unit = config.indexKind match {
     case "sq8" =>
       // exact per-dimension bounds (one aggregation, no RNG) + the 4x
       // codes table; a rebuild re-derives the bounds for today's corpus
@@ -678,6 +716,8 @@ final class ZebraEngine private (
   def clear(): Unit = {
     deleteRecursively(new File(vectorsDir))
     deleteRecursively(new File(indexDir))
+    forgetSchema(vectorsDir)
+    forgetSchema(indexDir)
     new File(modelFile).delete()
     new File(trainedOnFile).delete()
     seqWatermark = -1L
@@ -721,6 +761,7 @@ final class ZebraEngine private (
   }
 
   private def swap(dir: String, tmp: String): Unit = {
+    forgetSchema(dir)
     val old = new File(dir)
     val bak = new File(dir + ".old")
     deleteRecursively(bak)

@@ -455,13 +455,19 @@ object LshForest {
   /** Small-batch latency path for [[topK]]: the forest model already lives
     * on the driver, so a handful of queries can be routed locally —
     * probe lists, scan-pruning predicate, and the broadcast probe relation
-    * all come from driver arrays, collapsing the distributed path's probe
-    * job + checkpoint + distinct-collect + count into zero Spark jobs.
-    * Only the pruned bucket join and the rerank execute on the cluster
-    * (plus one bounded `take` when the candidate set is small enough to
-    * push into the vectors scan as a literal filter). At bench scale this
-    * is the difference between ~6 scheduler round-trips per query batch
-    * and 2; at 100 TB the routing cost is |Q|·numTrees tree walks —
+    * all come from driver arrays, so routing launches no Spark job where
+    * the distributed path runs a probe job, a checkpoint, a distinct-collect
+    * and a count. Only the pruned bucket join and the rerank execute on
+    * the cluster, when the result is collected (plus one bounded `take` at
+    * build time when the candidate set is small enough to push into the
+    * vectors scan as a literal filter).
+    *
+    * Candidate pairs are NOT deduplicated here: a (query, vec) pair found
+    * by several trees reaches the rerank once per tree, and the top-k
+    * aggregate ([[graft.ops.TopKAgg]], at most one entry per (dist, id))
+    * collapses the repeats inside its bounded buffer. A `dropDuplicates`
+    * would cost a shuffle stage per call to save a few distance
+    * evaluations. At 100 TB the routing cost is |Q|·numTrees tree walks —
     * microseconds against any corpus size. */
   private def topKSmall(
       qRows: Array[org.apache.spark.sql.Row],
@@ -478,10 +484,11 @@ object LshForest {
 
     // Driver-side routing: per-(query, tree) probe lists. `candEst` sums
     // the probed leaves' BUILD-SAMPLE occupancy: an exact upper bound on
-    // the candidate pair count when the sample was the whole corpus AND
-    // nothing was ingested since the build; an underestimate on capped
-    // samples and after incremental adds (which append bucket rows into
-    // existing leaves without touching the model). It therefore only ever
+    // the candidate row count (pairs repeated across trees included) when
+    // the sample was the whole corpus AND nothing was ingested since the
+    // build; an underestimate on capped samples and after incremental adds
+    // (which append bucket rows into existing leaves without touching the
+    // model). It therefore only ever
     // NOMINATES the cheapest tier below — a bounded take() verifies it
     // before anything trusts it.
     val leafCounts = model.trees.map(t => leafIds(t).size)
@@ -521,7 +528,6 @@ object LshForest {
     val cand0 = buckets.filter(pruned)
       .join(broadcast(probeRel), Seq("tree_id", "leaf_id"))
       .select(col(queryId), col(vecId))
-      .dropDuplicates(queryId, vecId)
 
     val v0 = vectors.select(
       col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
@@ -532,8 +538,8 @@ object LshForest {
     // once (localCheckpoint) and lets its TRUE count decide, exactly like
     // the distributed path — an estimate that undercounts can therefore
     // nominate a cheaper tier but never an unsafe one. Tiers:
-    //  - <= 1024 pairs: collect them (bounded), push the ids into the
-    //    vectors scan as a literal filter (row-group pruning of the fetch);
+    //  - <= 1024 candidate rows: collect them (bounded), push the ids into
+    //    the vectors scan as a literal filter (row-group pruning of the fetch);
     //  - <= 2M true pairs: broadcast (same bar as the distributed path);
     //  - beyond: plain hash join — both sides hash on vecId, nothing
     //    collects anywhere.

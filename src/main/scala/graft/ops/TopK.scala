@@ -24,6 +24,12 @@ final case class Scored[I](dist: Double, id: I)
   * touches only k·numPartitions survivors per query. Ties break on id for
   * cross-engine determinism.
   *
+  * Contract: at most one entry per (dist, id). An input equal to one
+  * already buffered is dropped, in `reduce` and in `merge` alike, so a
+  * candidate that reaches a group several times (an LSH pair found by
+  * more than one tree, say) is ranked once without a dedup shuffle in
+  * front of the aggregate.
+  *
   * Registered via `functions.udaf`, which wraps it in a
   * TypedImperativeAggregate — the buffer lives as a live object inside
   * ObjectHashAggregateExec and is only serialized (kryo) at the partial →
@@ -36,7 +42,8 @@ final class TopKAgg[I: TypeTag: Ordering](k: Int)
   private val ord: Ordering[Scored[I]] =
     Ordering.by((s: Scored[I]) => (s.dist, s.id))
 
-  /** Buffer invariant: sorted ascending by (dist, id), length <= k. */
+  /** Buffer invariant: sorted strictly ascending by (dist, id), so no
+    * two entries are equal; length <= k. */
   private def insert(b: ArrayBuffer[Scored[I]], a: Scored[I]): Unit = {
     if (b.length >= k && ord.gteq(a, b(b.length - 1))) return
     var lo = 0
@@ -45,6 +52,7 @@ final class TopKAgg[I: TypeTag: Ordering](k: Int)
       val mid = (lo + hi) >>> 1
       if (ord.lt(b(mid), a)) lo = mid + 1 else hi = mid
     }
+    if (lo < b.length && ord.equiv(b(lo), a)) return
     b.insert(lo, a)
     if (b.length > k) b.remove(b.length - 1)
   }

@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -181,5 +185,116 @@ class ZebraEngineSpec extends AnyFunSuite {
     assert(got == want)
     // every hit satisfies the predicate
     got.foreach(r => assert(r.getAs[String]("id") > "v000250"))
+  }
+
+  /** Exhaustive-budget indexed answer and the exact answer over the
+    * engine's current vectors, as comparable row sets. */
+  private def exhaustiveVsExact(eng: ZebraEngine, queries: DataFrame, k: Int)
+      : (Set[(String, String, Double)], Set[(String, String, Double)]) = {
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getAs[String]("query_id"), r.getAs[String]("id"),
+        r.getAs[Double]("dist"))).toSet
+    (rows(eng.queryVectors(queries, k, searchK = Some(Int.MaxValue))),
+      rows(graft.ops.SimSearch.exactTopK(queries, eng.vectors, k, vecId = "id")))
+  }
+
+  test("deduplicate on an indexed engine keeps the index within the vectors") {
+    val eng = freshEngine()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    // bit-exact copies routed into the existing index by the insert
+    eng.insertRecords(emb.limit(50)
+      .select(concat(lit("dup_"), col("id")).as("id"), col("embedding")))
+    assert(eng.count() == 550)
+    eng.deduplicate()
+    assert(eng.count() == 500)
+    val vecIds = eng.vectors.select("id").collect().map(_.getString(0)).toSet
+    val indexIds = eng.liveIndex.select("id").distinct().collect()
+      .map(_.getString(0)).toSet
+    assert(indexIds.nonEmpty && indexIds.subsetOf(vecIds),
+      s"${(indexIds diff vecIds).size} index ids name no stored vector")
+    val queries = emb.limit(4).select(col("id").as("query_id"), col("embedding"))
+    val (got, want) = exhaustiveVsExact(eng, queries, k = 5)
+    assert(got == want)
+  }
+
+  test("a second lookup on one engine builds without schema inference") {
+    val eng = freshEngine()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    val sc = spark.sparkContext
+    val phaseKey = "graft.test.phase"
+    // job starts by phase; a schema-inference job's stage is named after
+    // the DataFrameReader call ("parquet at ...")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val phase = Option(j.properties).map(_.getProperty(phaseKey)).orNull
+        if (phase != null)
+          j.stageInfos.foreach(st => seen.add((phase, st.name)))
+      }
+    }
+    def phase[T](name: String)(body: => T): T = {
+      sc.setLocalProperty(phaseKey, name)
+      try body finally sc.setLocalProperty(phaseKey, null)
+    }
+    def inferenceJobs(name: String): Int =
+      seen.asScala.count { case (p, st) => p == name && st.startsWith("parquet at") }
+    val q = emb.limit(1).select(lit(0L).as("query_id"), col("embedding"))
+      .collect()
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(q: _*), q.head.schema)
+    sc.addSparkListener(listener)
+    try {
+      val opened = ZebraEngine.open(spark, enginePath)
+      phase("first")(opened.queryVectors(queries, k = 10))
+      val second = phase("second")(opened.queryVectors(queries, k = 10))
+      // listener events arrive in order: once the marker job is seen,
+      // every earlier job start has been delivered
+      phase("marker")(spark.range(1).count())
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(_._1 == "marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(inferenceJobs("first") >= 1,
+        "a fresh engine instance infers its tables' schemas once")
+      assert(inferenceJobs("second") == 0)
+      assert(second.collect().length == 10)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the read-schema cache follows remove, deduplicate, clear and refresh") {
+    val eng = freshEngine()
+    eng.insertRecords(emb.limit(400))
+    eng.refreshIndex()
+    val queries = emb.limit(4).select(col("id").as("query_id"), col("embedding"))
+    def check(when: String): Unit = {
+      val (got, want) = exhaustiveVsExact(eng, queries, k = 5)
+      assert(got == want, s"indexed answer differs from exact after $when")
+    }
+    check("refreshIndex")
+    eng.remove(emb.limit(2).select("id"))
+    check("remove")
+    eng.insertRecords(emb.limit(30)
+      .select(concat(lit("dup_"), col("id")).as("id"), col("embedding")))
+    eng.deduplicate()
+    assert(eng.count() == 398 + 2)
+    check("deduplicate")
+    // a re-insert after clear() may store a DIFFERENT embedding type (the
+    // exact path takes doubles): reads must see the new table's schema
+    eng.clear()
+    eng.insertRecords(emb.select(col("id"),
+      col("embedding").cast("array<double>").as("embedding")))
+    assert(eng.vectors.schema("embedding").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType, containsNull = true))
+    assert(eng.count() == 500)
+    check("clear and a re-insert of another type")
+    eng.clear()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    assert(eng.vectors.schema("embedding").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, containsNull = true))
+    check("clear, re-insert and refreshIndex")
   }
 }

@@ -8,8 +8,10 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
-# 24g: the 8g default produced multi-ten-second full-GC stalls in the
-# heavier probes (PQ encode, 1M-row engine lifecycle) on this 128 GiB box
-exec java $OPENS -Xmx24g \
+# Heap: SPARK_DRIVER_MEM when set, else half of physical memory capped at
+# 24g (an 8g heap produced multi-ten-second full-GC stalls in the heavier
+# probes: PQ encode, the 1M-row engine lifecycle).
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+exec java $OPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
