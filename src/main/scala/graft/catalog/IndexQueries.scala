@@ -7,8 +7,8 @@ import graft.core.Tables
 import graft.index.LshForest
 
 /** The LSH random-projection forest surface (SURVEY.md §2.1 I4–I8, I12,
-  * I13): build on a bounded sample, persist the bucket table partitioned by
-  * tree_id, probe + backup-branch top-up, exact rerank. RNG-dependent (tree
+  * I13): build on a bounded sample, persist the flat leaf-sorted bucket
+  * table, probe + backup-branch top-up, exact rerank. RNG-dependent (tree
   * shape depends on the seed), so not SQL-expressible — the driver records
   * rows-only checks; recall and determinism are gated in LshForestSpec. */
 object IndexQueries {
@@ -19,8 +19,8 @@ object IndexQueries {
     private val cache = scala.collection.concurrent.TrieMap[
       String, (String, LshForest.ForestModel)]()
     // The loaded DataFrame is cached per session too: spark.read.parquet
-    // re-lists the partitioned index directory (numTrees dirs × slice
-    // files) on every call, which at per-query granularity costs more
+    // re-lists the index directory (numTrees × slice files) on every
+    // call, which at per-query granularity costs more
     // than the probe itself. The cached plan keeps its InMemoryFileIndex.
     private val dfCache = scala.collection.concurrent.TrieMap[
       (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()

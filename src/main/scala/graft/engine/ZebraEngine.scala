@@ -4,7 +4,7 @@ import java.io.{File, FileInputStream, FileOutputStream, ObjectInputStream, Obje
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,7 +34,8 @@ final case class EngineConfig(
   * {{{
   *   <path>/zebra.json        metadata (dim, metric, index options)  [.zebra file, core.rs:183-190]
   *   <path>/vectors/          parquet (id, seq, embedding, document) [fjall KV + doc files]
-  *   <path>/index/            LSH bucket table, partitionBy(tree_id) [tree blobs]
+  *   <path>/index/            LSH bucket table (id, tree_id, leaf_id),  [tree blobs]
+  *                            flat, files sorted by (tree_id, leaf_id)
   *   <path>/index_model.bin   broadcast-able forest (hyperplanes)
   * }}}
   *
@@ -53,8 +54,9 @@ final case class EngineConfig(
   * scan), and a single-query lookup reads both tables; with the schema
   * supplied, building a query DataFrame launches no job. The
   * schema is inferred at most once per table per engine instance, and
-  * dropped whenever the engine swaps, rebuilds or clears that table.
-  * Appends keep it (they write the same columns).
+  * dropped whenever the engine rebuilds or clears that table. Appends keep
+  * it (they write the same columns), and a rewrite that swaps a table in
+  * replaces it with the schema of the frame it wrote.
   */
 final class ZebraEngine private (
     val spark: SparkSession, val path: String, val config: EngineConfig) {
@@ -94,7 +96,7 @@ final class ZebraEngine private (
     * budget consults it on EVERY query call, and a parquet count() —
     * though footer-metadata-only — is still a scheduler round-trip that
     * would dominate small-batch query latency. Mutators invalidate
-    * (insertRecords advances it from the batch it just counted). */
+    * (insertRecords advances it by the row count its write observed). */
   @volatile private var countCache: Long = -1L
 
   def count(): Long = {
@@ -109,7 +111,7 @@ final class ZebraEngine private (
   /** Next free seq. The first call scans parquet footer stats across the
     * whole table — O(files), which at ingest rates of many batches against
     * a large table dominates the append — so the watermark is cached and
-    * advanced from each batch's read-back (a scan pruned to the new files).
+    * advanced from each batch's max seq, observed by the batch's own write.
     * Concurrent writers to one engine dir were never supported; the cache
     * doesn't change that contract. */
   @volatile private var seqWatermark: Long = -1L
@@ -149,7 +151,17 @@ final class ZebraEngine private (
       if (records.columns.contains("document")) withId
       else withId.withColumn("document", lit(null).cast(BinaryType))
     val batch = withDoc.select("id", "seq", "embedding", "document")
-    batch.write.mode(SaveMode.Append).parquet(vectorsDir)
+    // The batch's max seq and row count ride along the write as observed
+    // metrics (accumulators merged from committed task attempts only, so a
+    // retried task is counted once) instead of a second aggregate job.
+    val stats = Observation()
+    batch.observe(stats, max("seq").as("max_seq"),
+        org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Append).parquet(vectorsDir)
+    val observed = stats.get
+    // an empty batch observes a null max: the watermark stays at base
+    seqWatermark = Option(observed("max_seq")).fold(base)(_.asInstanceOf[Long] + 1L)
+    if (countCache >= 0L) countCache += observed("rows").asInstanceOf[Long]
     // Route the index from the rows JUST WRITTEN, not from the lazy `batch`
     // plan: monotonically_increasing_id() is non-deterministic across
     // re-executions and task retries, so running the plan a second time for
@@ -158,14 +170,6 @@ final class ZebraEngine private (
     // query time). seq >= base selects exactly this batch, and parquet
     // min/max stats prune every older file from the read-back.
     val written = readTable(vectorsDir).filter(col("seq") >= base)
-    // advance the seq watermark (and the count cache) from the batch just
-    // written — the filter prunes to the new files via footer stats, so
-    // this never rescans the table the way the cold nextSeq() does
-    val stats = written
-      .agg(coalesce(max("seq"), lit(base - 1L)),
-        org.apache.spark.sql.functions.count(lit(1))).head()
-    seqWatermark = stats.getLong(0) + 1L
-    if (countCache >= 0L) countCache += stats.getLong(1)
     config.indexKind match {
       case "ivfpq" =>
         // route the batch through the EXISTING quantizers (I7's shape):
@@ -193,10 +197,13 @@ final class ZebraEngine private (
             .write.mode(SaveMode.Append).parquet(indexDir)
         }
       case _ =>
+        // read back, route and append in one job: each read-back task
+        // sorts its own rows by (tree_id, leaf_id) and writes one flat
+        // file, so nothing shuffles
         loadModel().foreach { model =>
           LshForest.bucketTable(written, model, vecId = "id")
-            .repartition(col("tree_id"))
-            .write.mode(SaveMode.Append).partitionBy("tree_id").parquet(indexDir)
+            .sortWithinPartitions("tree_id", "leaf_id")
+            .write.mode(SaveMode.Append).parquet(indexDir)
         }
     }
   }
@@ -415,7 +422,7 @@ final class ZebraEngine private (
     rewrite(vectorsDir, vectors.join(
       ids.select(col(idCol).as("id")), Seq("id"), "left_anti"))
     if (hasData(indexDir))
-      rewritePartitioned(indexDir, readTable(indexDir).join(
+      rewriteIndex(readTable(indexDir).join(
         ids.select(col(idCol).as("id")), Seq("id"), "left_anti"))
   }
 
@@ -438,7 +445,7 @@ final class ZebraEngine private (
     // the index keep-set comes from the REWRITTEN table: `kept` is a plan
     // over the files the swap just moved away
     if (hasData(indexDir))
-      rewritePartitioned(indexDir, readTable(indexDir)
+      rewriteIndex(readTable(indexDir)
         .join(vectors.select("id"), Seq("id"), "left_semi"))
   }
 
@@ -527,8 +534,10 @@ final class ZebraEngine private (
     }
     val routed = newRows.result()
     if (routed.isEmpty) return false // every overflowing leaf unsplittable
-    routed.toDF("id", "tree_id", "leaf_id")
-      .write.mode(SaveMode.Append).partitionBy("tree_id").parquet(indexDir)
+    // sorted on the driver: each local partition is a contiguous slice, so
+    // every appended file is leaf-sorted without a sort stage
+    routed.sortBy(r => (r._2, r._3)).toDF("id", "tree_id", "leaf_id")
+      .write.mode(SaveMode.Append).parquet(indexDir)
     saveModel(model)
     true
   }
@@ -551,7 +560,7 @@ final class ZebraEngine private (
     // otherwise each re-run the scan + reachability semi-join
     val live = liveIndex.localCheckpoint()
     val stale = total - live.count()
-    if (stale > 0L) rewritePartitioned(indexDir, live)
+    if (stale > 0L) rewriteIndex(live)
     stale
   }
 
@@ -734,33 +743,41 @@ final class ZebraEngine private (
   private def rewrite(dir: String, df: DataFrame): Unit = {
     val tmp = dir + ".staging"
     df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swap(dir, tmp)
+    swap(dir, tmp, Some(df.schema))
   }
 
-  /** Partitioned index rewrite, restoring the leaf-sorted layout the probe
-    * path prunes against (writeIndex establishes it; a plain rewrite after
-    * remove/deduplicate would silently lose row-group pruning). Range
-    * partitioning on (tree_id, leaf_id) keeps the write parallel with
-    * bounded file counts; the extra sampling pass is fine for a
-    * maintenance op. */
-  private def rewritePartitioned(dir: String, df: DataFrame): Unit = {
-    val tmp = dir + ".staging"
+  /** Index rewrite in the layout its kind serves from. The LSH bucket
+    * table is flat and leaf-sorted: range partitioning on (tree_id,
+    * leaf_id) keeps the write parallel with one contiguous leaf range per
+    * file, so probe-time row-group pruning survives remove, deduplicate
+    * and vacuum (a plain rewrite would lose it); the extra sampling pass is
+    * fine for a maintenance op. The sq8/pq codes table is flat with no
+    * routing layout. IVF-PQ is the one index still partitioned on disk,
+    * by cell_id. */
+  private def rewriteIndex(df: DataFrame): Unit = {
+    val tmp = indexDir + ".staging"
     config.indexKind match {
       case "ivfpq" =>
         df.repartition(col("cell_id"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell_id").parquet(tmp)
+        // the partition column reads back last: infer on the next read
+        swap(indexDir, tmp, None)
       case "sq8" | "pq" =>
-        // flat codes table: no routing layout to restore
         df.write.mode(SaveMode.Overwrite).parquet(tmp)
+        swap(indexDir, tmp, Some(df.schema))
       case _ =>
         df.repartitionByRange(col("tree_id"), col("leaf_id"))
           .sortWithinPartitions("tree_id", "leaf_id")
-          .write.mode(SaveMode.Overwrite).partitionBy("tree_id").parquet(tmp)
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+        swap(indexDir, tmp, Some(df.schema))
     }
-    swap(dir, tmp)
   }
 
-  private def swap(dir: String, tmp: String): Unit = {
+  /** Swap `tmp` in as `dir`. `written` is the schema of the frame written
+    * to `tmp`: it becomes `dir`'s read schema, so the next read infers
+    * nothing (the file source makes a supplied schema nullable, as parquet
+    * stores it); None leaves the next read to infer it. */
+  private def swap(dir: String, tmp: String, written: Option[StructType]): Unit = {
     forgetSchema(dir)
     val old = new File(dir)
     val bak = new File(dir + ".old")
@@ -772,7 +789,16 @@ final class ZebraEngine private (
       throw new java.io.IOException(s"cannot swap in $tmp")
     }
     deleteRecursively(bak)
+    written.foreach(s => readSchemas += dir -> s)
   }
+
+  /** Bucket tables written before the flat layout sit in `tree_id=`
+    * directories. Parquet cannot read one directory holding both layouts,
+    * and a flat append would create exactly that, so [[ZebraEngine.open]]
+    * rewrites such a table flat once, before anything else touches it. */
+  private def flattenLegacyIndex(): Unit =
+    if (config.indexKind == "lsh" && hasLegacyLshLayout(indexDir))
+      rewriteIndex(spark.read.parquet(indexDir).select("id", "tree_id", "leaf_id"))
 }
 
 object ZebraEngine {
@@ -793,9 +819,13 @@ object ZebraEngine {
     new ZebraEngine(spark, path, config)
   }
 
-  /** D1 `open` (core.rs:92-102). */
-  def open(spark: SparkSession, path: String): ZebraEngine =
-    new ZebraEngine(spark, path, readMeta(path))
+  /** D1 `open` (core.rs:92-102). An LSH index still in the old
+    * `tree_id=` directory layout is rewritten flat here, once. */
+  def open(spark: SparkSession, path: String): ZebraEngine = {
+    val engine = new ZebraEngine(spark, path, readMeta(path))
+    engine.flattenLegacyIndex()
+    engine
+  }
 
   /** D3 `open_or_create` (core.rs:168-176). */
   def openOrCreate(spark: SparkSession, path: String, config: EngineConfig): ZebraEngine =
@@ -805,12 +835,14 @@ object ZebraEngine {
   /** Destroy an engine directory entirely (tests / tooling). */
   def destroy(path: String): Unit = deleteRecursively(new File(path))
 
-  private def hasData(dir: String): Boolean = {
-    val f = new File(dir)
-    f.exists() && f.listFiles() != null &&
-      f.listFiles().exists(x => x.getName.endsWith(".parquet") ||
-        x.getName.startsWith("tree_id=") || x.getName == "_SUCCESS")
-  }
+  private def hasData(dir: String): Boolean =
+    Option(new File(dir).listFiles()).exists(_.exists(x =>
+      x.getName.endsWith(".parquet") || x.getName == "_SUCCESS"))
+
+  /** True when `dir` holds an LSH bucket table in the pre-flat layout. */
+  private def hasLegacyLshLayout(dir: String): Boolean =
+    Option(new File(dir).listFiles())
+      .exists(_.exists(f => f.isDirectory && f.getName.startsWith("tree_id=")))
 
   // Metadata JSON — hand-rolled (flat schema, no dependency).
   private def writeMeta(path: String, c: EngineConfig): Unit = {

@@ -28,8 +28,10 @@ import graft.ops.SimSearch
   *    and broadcast to executors;
   *  - the corpus is routed through the broadcast forest in ONE narrow map
   *    (no shuffle), producing a `(vec_id, tree_id, leaf_id)` bucket table
-  *    written `partitionBy("tree_id")` + sorted by leaf_id within partitions
-  *    so probes prune at partition + row-group level;
+  *    written as one flat parquet table whose files are sorted by
+  *    (tree_id, leaf_id), so probes prune at file + row-group level (every
+  *    query probes every tree, so `tree_id` directories would prune
+  *    nothing);
   *  - a query probes |trees| · (1 + backups) leaves: the probe list is tiny,
   *    broadcast, and the bucket join never shuffles the corpus;
   *  - rerank reuses the bounded top-k aggregate (map-side partial).
@@ -341,16 +343,19 @@ object LshForest {
       .select(col(vecId), col("tl._1").as("tree_id"), col("tl._2").as("leaf_id"))
   }
 
-  /** Persist the bucket table partitioned by tree_id, leaf-sorted within
-    * partitions so leaf probes prune parquet row groups.
+  /** Persist the bucket table as one flat parquet table (tree_id is a data
+    * column, not a directory), each file sorted by (tree_id, leaf_id) so
+    * leaf probes prune files and row groups on their min/max stats.
     *
     * The shuffle key is a sub-leaf slice id, not tree_id: hashing on
     * tree_id alone caps write parallelism at numTrees (15 lumpy tasks for
     * a corpus-sized sort+encode — the build bottleneck at 10⁸+ rows).
     * Each tree's leaf range splits into `slices` contiguous chunks, every
-    * task sorts and writes its own chunk, and because a chunk is a
-    * contiguous leaf_id range the resulting files keep tight min/max
-    * leaf_id stats — probe-time file and row-group pruning is unchanged. */
+    * task sorts and writes its own chunk, and because a chunk is one
+    * tree's contiguous leaf_id range the resulting files keep a single
+    * tree_id and tight min/max leaf_id stats. Later appends (incremental
+    * inserts, compaction) add flat files of their own, each sorted the
+    * same way. */
   def writeIndex(
       vectors: DataFrame, model: ForestModel, path: String,
       vecId: String = "vec_id"): Unit = {
@@ -366,7 +371,7 @@ object LshForest {
       .repartition(model.numTrees * slices, col("slice_id"))
       .sortWithinPartitions("tree_id", "leaf_id")
       .drop("slice_id")
-      .write.mode("overwrite").partitionBy("tree_id").parquet(path)
+      .write.mode("overwrite").parquet(path)
   }
 
   def loadIndex(spark: SparkSession, path: String): DataFrame =
@@ -413,8 +418,9 @@ object LshForest {
     // row groups, so it must stay cheap PER ROW too (Spark re-applies pushed
     // filters post-scan): a per-leaf IN list beyond a few hundred literals
     // costs more evaluating than it saves (8s vs 0.4s at a 6M-row bucket
-    // table). Small probe sets keep exact literals (best stats pruning for
-    // the single-query latency path); larger ones use per-tree leaf_id
+    // table). This path serves batches above SmallBatchCap only (smaller
+    // ones take topKSmall, which has no predicate): probe sets of at most
+    // 256 leaves keep exact literals, larger ones use per-tree leaf_id
     // ranges — sargable, O(numTrees) per row, and still row-group-tight
     // against the leaf-sorted file layout.
     val probed = probes.select("tree_id", "leaf_id").distinct().collect()
@@ -454,10 +460,10 @@ object LshForest {
 
   /** Small-batch latency path for [[topK]]: the forest model already lives
     * on the driver, so a handful of queries can be routed locally —
-    * probe lists, scan-pruning predicate, and the broadcast probe relation
-    * all come from driver arrays, so routing launches no Spark job where
+    * probe lists and the broadcast probe relation both come from driver
+    * arrays, so routing launches no Spark job where
     * the distributed path runs a probe job, a checkpoint, a distinct-collect
-    * and a count. Only the pruned bucket join and the rerank execute on
+    * and a count. Only the bucket join and the rerank execute on
     * the cluster, when the result is collected (plus one bounded `take` at
     * build time when the candidate set is small enough to push into the
     * vectors scan as a literal filter).
@@ -491,41 +497,34 @@ object LshForest {
     // model). It therefore only ever
     // NOMINATES the cheapest tier below — a bounded take() verifies it
     // before anything trusts it.
-    val leafCounts = model.trees.map(t => leafIds(t).size)
-    var exhaustive = qEmbs.nonEmpty
     var candEst = 0L
     val probeRows = collection.mutable.ArrayBuffer.empty[Row]
-    val probedPerTree = collection.mutable.Map.empty[Int, collection.mutable.Set[Int]]
     for ((qid, p) <- qEmbs; t <- model.trees.indices) {
       val (leaves, got) = probeLeavesSized(model.trees(t), p, searchK)
-      if (leaves.size < leafCounts(t)) exhaustive = false
       candEst += got
-      val seen = probedPerTree.getOrElseUpdate(t, collection.mutable.Set.empty)
-      leaves.foreach { l => probeRows += Row(qid, t, l); seen += l }
+      leaves.foreach(l => probeRows += Row(qid, t, l))
     }
 
-    // Same two-tier scan-pruning predicate as the distributed path: exact
-    // leaf literals while the probe set is small, sargable per-tree ranges
-    // past that (pushed-filter evaluation cost, see candidates()).
-    val probed = probedPerTree.view.mapValues(_.toSeq).toMap
-    val totalLeaves = probed.valuesIterator.map(_.size).sum
-    val pruned =
-      if (exhaustive) lit(true)
-      else if (totalLeaves <= 256)
-        probed.map { case (t, leaves) =>
-          (col("tree_id") === t) && col("leaf_id").isin(leaves: _*)
-        }.reduceOption(_ || _).getOrElse(lit(false))
-      else
-        probed.map { case (t, leaves) =>
-          (col("tree_id") === t) && col("leaf_id").between(leaves.min, leaves.max)
-        }.reduceOption(_ || _).getOrElse(lit(false))
-
+    // No scan-pruning predicate on the bucket scan: the broadcast probe
+    // join below is the exact leaf selector. A predicate built from this
+    // call's leaf ids writes them into the generated code as literals, so
+    // every new lookup compiled fresh classes, and Spark re-evaluates it on
+    // every scanned row; it skipped almost nothing, since a lookup's
+    // probed leaves span nearly every file's (tree_id, leaf_id) range.
+    // Measured at 1M 64-d vectors (800k bulk + 4 appends of 50k, 4 CPUs,
+    // 20 distinct single-query lookups a stage, answers identical): rows
+    // read per lookup 12,855,386 with the predicate vs 12,858,096
+    // without, codegen compiles per lookup 2 vs 0, lookup median 6.1 s vs
+    // 2.1 s (5.5 s vs 2.4 s after the appends). The distributed
+    // candidates() keeps its predicate: one large batch amortizes one
+    // compile. The <= 1024 collect tier below does still push this call's
+    // candidate ids into the vectors scan as literals.
     val probeSchema = StructType(Seq(
       StructField(queryId, qIdType),
       StructField("tree_id", IntegerType),
       StructField("leaf_id", IntegerType)))
     val probeRel = spark.createDataFrame(probeRows.toSeq.asJava, probeSchema)
-    val cand0 = buckets.filter(pruned)
+    val cand0 = buckets
       .join(broadcast(probeRel), Seq("tree_id", "leaf_id"))
       .select(col(queryId), col(vecId))
 

@@ -2,8 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -218,48 +218,184 @@ class ZebraEngineSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  /** Per-phase record of the Spark jobs started (their stage names) and
+    * the shuffle bytes their tasks wrote; a phase is a block run under
+    * [[PhaseLog.phase]]. */
+  private final class PhaseLog extends SparkListener {
+    private val key = "graft.test.phase"
+    private val sc = spark.sparkContext
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    private val stagePhase = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    private val shuffled = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach { ph =>
+        jobs.add((ph, j.stageInfos.map(_.name)))
+        j.stageInfos.foreach(st => stagePhase.put(st.stageId, ph))
+      }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      for (ph <- Option(stagePhase.get(t.stageId)); m <- Option(t.taskMetrics))
+        shuffled.merge(ph, m.shuffleWriteMetrics.bytesWritten, (a, b) => a + b)
+    def phase[T](name: String)(body: => T): T = {
+      sc.setLocalProperty(key, name)
+      try body finally sc.setLocalProperty(key, null)
+    }
+    /** Waits for the events of every job started before the call: listener
+      * events arrive in order, so once a marker job is seen, every earlier
+      * job's events have been delivered. */
+    def drain(): Unit = {
+      phase("marker")(spark.range(1).count())
+      val deadline = System.currentTimeMillis() + 30000L
+      while (jobCount("marker") == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    }
+    def jobCount(ph: String): Int = jobs.asScala.count(_._1 == ph)
+    /** Schema-inference jobs: their stage is named after the
+      * DataFrameReader call ("parquet at ..."). */
+    def inferenceJobs(ph: String): Int =
+      jobs.asScala.filter(_._1 == ph).flatMap(_._2).count(_.startsWith("parquet at"))
+    def shuffleBytes(ph: String): Long =
+      Option(shuffled.get(ph)).map(_.longValue).getOrElse(0L)
+  }
+
+  private def withPhaseLog[T](body: PhaseLog => T): T = {
+    val log = new PhaseLog
+    spark.sparkContext.addSparkListener(log)
+    try body(log) finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** `rows` as a driver-local frame of `emb`'s schema: writing it reads no
+    * cached or limited plan, so only the engine's own jobs run. */
+  private def local(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, emb.schema)
+
   test("a second lookup on one engine builds without schema inference") {
     val eng = freshEngine()
     eng.insertRecords(emb)
     eng.refreshIndex()
-    val sc = spark.sparkContext
-    val phaseKey = "graft.test.phase"
-    // job starts by phase; a schema-inference job's stage is named after
-    // the DataFrameReader call ("parquet at ...")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val phase = Option(j.properties).map(_.getProperty(phaseKey)).orNull
-        if (phase != null)
-          j.stageInfos.foreach(st => seen.add((phase, st.name)))
-      }
-    }
-    def phase[T](name: String)(body: => T): T = {
-      sc.setLocalProperty(phaseKey, name)
-      try body finally sc.setLocalProperty(phaseKey, null)
-    }
-    def inferenceJobs(name: String): Int =
-      seen.asScala.count { case (p, st) => p == name && st.startsWith("parquet at") }
     val q = emb.limit(1).select(lit(0L).as("query_id"), col("embedding"))
       .collect()
     val queries = spark.createDataFrame(
       java.util.Arrays.asList(q: _*), q.head.schema)
-    sc.addSparkListener(listener)
-    try {
+    withPhaseLog { log =>
       val opened = ZebraEngine.open(spark, enginePath)
-      phase("first")(opened.queryVectors(queries, k = 10))
-      val second = phase("second")(opened.queryVectors(queries, k = 10))
-      // listener events arrive in order: once the marker job is seen,
-      // every earlier job start has been delivered
-      phase("marker")(spark.range(1).count())
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!seen.asScala.exists(_._1 == "marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(inferenceJobs("first") >= 1,
+      log.phase("first")(opened.queryVectors(queries, k = 10))
+      val second = log.phase("second")(opened.queryVectors(queries, k = 10))
+      log.drain()
+      assert(log.inferenceJobs("first") >= 1,
         "a fresh engine instance infers its tables' schemas once")
-      assert(inferenceJobs("second") == 0)
+      assert(log.inferenceJobs("second") == 0)
       assert(second.collect().length == 10)
-    } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("an LSH insert on an indexed engine runs 2 Spark jobs and shuffles nothing") {
+    val eng = freshEngine()
+    val rows = emb.orderBy("id").collect().toSeq
+    eng.insertRecords(local(rows.take(400)))
+    eng.refreshIndex()
+    withPhaseLog { log =>
+      log.phase("insert")(eng.insertRecords(local(rows.drop(400))))
+      log.drain()
+      // write the vectors; then read them back, route and append
+      assert(log.jobCount("insert") == 2)
+      assert(log.shuffleBytes("insert") == 0L)
+    }
+    assert(eng.count() == 500)
+    assert(spark.read.parquet(s"$enginePath/index").count() ==
+      500L * eng.config.numTrees)
+    val queries = local(rows.slice(395, 405))
+      .select(col("id").as("query_id"), col("embedding"))
+    val (got, want) = exhaustiveVsExact(eng, queries, k = 5)
+    assert(got == want)
+  }
+
+  test("insert stats come from the write: count and seq order hold across batches") {
+    val eng = freshEngine()
+    val rows = emb.orderBy("id").collect().toSeq
+    eng.insertRecords(local(rows.take(100)))
+    eng.refreshIndex()
+    assert(eng.count() == 100) // primes the count cache the inserts advance
+    def seqs(ids: Seq[Row]): Seq[Long] = eng.vectors
+      .filter(col("id").isin(ids.map(_.getString(0)): _*))
+      .select("seq").collect().map(_.getLong(0)).toSeq
+    var lastMax = seqs(rows.take(100)).max
+    val batches = Seq(rows.slice(100, 250), Nil, rows.slice(250, 251), Nil,
+      rows.slice(251, 500))
+    batches.foreach { batch =>
+      eng.insertRecords(local(batch))
+      assert(eng.count() == spark.read.parquet(s"$enginePath/vectors").count())
+      if (batch.nonEmpty) {
+        val got = seqs(batch)
+        assert(got.size == batch.size && got.min > lastMax,
+          s"a batch's seqs must lie above every earlier batch's ($lastMax)")
+        lastMax = got.max
+      }
+    }
+    assert(eng.count() == 500)
+    val queries = local(rows.slice(240, 260))
+      .select(col("id").as("query_id"), col("embedding"))
+    val (got, want) = exhaustiveVsExact(eng, queries, k = 5)
+    assert(got == want)
+  }
+
+  test("a rewrite hands the next read its schema: no inference after remove, deduplicate or vacuum") {
+    val eng = freshEngine()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    eng.insertRecords(emb.filter(col("id") < "v000020")
+      .select(concat(lit("dup_"), col("id")).as("id"), col("embedding")))
+    eng.compactIndexIfNeeded()
+    withPhaseLog { log =>
+      log.phase("remove")(eng.remove(emb.filter(col("id") >= "v000497").select("id")))
+      log.phase("after remove")(eng.vectors.count())
+      log.phase("dedup")(eng.deduplicate())
+      log.phase("after dedup")((eng.vectors.count(), eng.liveIndex.count()))
+      log.phase("vacuum")(eng.vacuumIndex())
+      log.phase("after vacuum")(eng.liveIndex.count())
+      log.drain()
+      Seq("remove", "after remove", "dedup", "after dedup", "vacuum", "after vacuum")
+        .foreach(ph => assert(log.inferenceJobs(ph) == 0, s"schema inferred in $ph"))
+    }
+    // the handed-on schema reads the same as one inferred from the files
+    assert(eng.vectors.schema == spark.read.parquet(s"$enginePath/vectors").schema)
+    // (liveIndex's semi join puts its join keys first)
+    assert(eng.liveIndex.schema.fields.sortBy(_.name).toSeq ==
+      spark.read.parquet(s"$enginePath/index").schema.fields.sortBy(_.name).toSeq)
+    assert(eng.count() == 497)
+    val queries = emb.limit(5).select(col("id").as("query_id"), col("embedding"))
+    val (got, want) = exhaustiveVsExact(eng, queries, k = 5)
+    assert(got == want)
+  }
+
+  test("an engine dir in the old tree_id= index layout is flattened on open, queries exactly and takes an insert") {
+    val eng = freshEngine()
+    val rows = emb.orderBy("id").collect().toSeq
+    eng.insertRecords(local(rows.take(400)))
+    eng.refreshIndex()
+    // rewrite the bucket table the way earlier versions stored it: one
+    // directory per tree
+    val index = s"$enginePath/index"
+    val legacy = s"$enginePath/legacy_index"
+    spark.read.parquet(index).repartition(col("tree_id"))
+      .write.partitionBy("tree_id").parquet(legacy)
+    ZebraEngine.destroy(index)
+    assert(new java.io.File(legacy).renameTo(new java.io.File(index)))
+    def legacyDirs: Int =
+      new java.io.File(index).list().count(_.startsWith("tree_id="))
+    assert(legacyDirs == eng.config.numTrees)
+
+    val opened = ZebraEngine.open(spark, enginePath)
+    assert(legacyDirs == 0, "open must rewrite the old layout flat")
+    val queries = local(rows.slice(390, 410))
+      .select(col("id").as("query_id"), col("embedding"))
+    val (got0, want0) = exhaustiveVsExact(opened, queries, k = 5)
+    assert(got0 == want0)
+    opened.insertRecords(local(rows.drop(400)))
+    assert(legacyDirs == 0)
+    assert(opened.count() == 500)
+    assert(spark.read.parquet(index).count() == 500L * opened.config.numTrees)
+    val (got, want) = exhaustiveVsExact(opened, queries, k = 5)
+    assert(got == want)
   }
 
   test("the read-schema cache follows remove, deduplicate, clear and refresh") {

@@ -2,6 +2,9 @@
 # Run a graft main class against the compiled classes + Spark jars,
 # bypassing sbt startup. Usage: tools/run.sh graft.Verify <args...>
 set -e
+# the checkout this script lives in: its own compiled classes, never
+# another checkout's
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -14,4 +17,4 @@ done
 HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 exec java $OPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
