@@ -589,30 +589,21 @@ object CurationQueries {
       val rows = StreamFeed
         .collectCapped(docs.as[(Long, String)], "stream_dsir_exec")
         .sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val sink = s"stream_dsir_exec_sink_${CapSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .dsirStream(mem.toDF().toDF("doc_id", "text"), wt)
-          .writeStream.format("memory").queryName(sink)
+      val run = StreamFeed.replay(s, "stream_dsir_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
+          .dsirStream(in.toDF("doc_id", "text"), wt)
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-        } finally q.stop()
       }
-      s.table(sink).orderBy("doc_id")
+      s.table(run.sink).orderBy("doc_id")
     },
     Some(s"""$dsirScoredCtes
       SELECT doc_id, n_feat, dsir_score FROM scored ORDER BY doc_id"""))
 
   /** The per-key ingest cap under REAL micro-batch execution (the
     * runtime gate for `StreamOps.capPerKey`, previously only
-    * MemoryStream-spec'd): documents replayed source-keyed in 4
+    * spec'd on an in-memory stream): documents replayed source-keyed in 4
     * doc_id-ordered chunks; the stateful counter must keep exactly the
     * FIRST 50 arrivals per source ACROSS batches — a later batch's doc
     * is dropped because of budget consumed in earlier batches. Event
@@ -629,24 +620,14 @@ object CurationQueries {
           col("doc_id").cast("string").as("id"))
         .as[(String, java.sql.Timestamp, String)], "stream_cap_exec")
         .sortBy(_._3.toLong)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, java.sql.Timestamp, String)]
-      val sink = s"stream_cap_exec_sink_${CapSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .capPerKey(mem.toDF().toDF("key", "ts", "id"),
-            cap = 50, lateness = "7 days")
-          .writeStream.format("memory").queryName(sink)
+      val run = StreamFeed.replay(s, "stream_cap_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
+          .capPerKey(in.toDF("key", "ts", "id"), cap = 50, lateness = "7 days")
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
       }
-      s.table(sink)
+      s.table(run.sink)
         .select(col("key").as("source"), col("id").cast("long").as("doc_id"))
         .orderBy("source", "doc_id")
     },
@@ -657,11 +638,6 @@ object CurationQueries {
                      AS rn
             FROM documents)
       WHERE rn <= 50 ORDER BY source, doc_id"""))
-
-  private object CapSinkIds {
-    private val n = new java.util.concurrent.atomic.AtomicLong(0)
-    def next(): Long = n.incrementAndGet()
-  }
 
   /** Deterministic curriculum ordering ([[graft.ops.Curation
     * .curriculumOrder]] — shortest-first with an md5 shuffle inside each

@@ -587,7 +587,7 @@ ${affineSigCtes("MATERIALIZED")},
 
   /** Streaming duplicate-cluster maintenance in the correctness gate —
     * the continuous form of [[clusterIncremental]]: the verified pair set
-    * replayed as EDGES through a MemoryStream in 4 ROUND-ROBIN chunks
+    * replayed as EDGES through an in-memory stream in 4 ROUND-ROBIN chunks
     * (so a cluster's pairs deliberately land in different micro-batches
     * and the store must merge components ACROSS epochs, not just label
     * within one), folded into the versioned parquet store by
@@ -605,33 +605,15 @@ ${affineSigCtes("MATERIALIZED")},
         PairsCache.get(s, dir).select("doc_a", "doc_b")
           .orderBy("doc_a", "doc_b"), "stream_cluster_exec")
         .map(r => (r.getLong(0), r.getLong(1)))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val runId = DedupSinkIds.next()
-      val store = s"/tmp/graft_stream_components/run_$runId"
-      val ckpt = s"/tmp/graft_stream_components_ckpt/run_$runId"
-      // the sink counter is per-JVM: a fresh process would otherwise pick
-      // up run_1's checkpoint from a PREVIOUS process and try to resume a
-      // MemoryStream whose offsets no longer exist
-      Seq(store, ckpt).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val q = graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        graft.streaming.StreamOps.maintainComponents(
-          mem.toDF().toDF("src", "dst"), store, ckpt)
-      }
-      try {
-        (0 until 4)
-          .map(k => pairs.zipWithIndex.collect { case (p, i) if i % 4 == k => p })
-          .filter(_.nonEmpty)
-          .foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-      } finally q.stop()
-      graft.streaming.StreamOps.currentComponents(s, store).get
+      val roundRobin = (0 until 4)
+        .map(k => pairs.zipWithIndex.collect { case (p, i) if i % 4 == k => p })
+        .filter(_.nonEmpty).map(_.toSeq)
+      val root = StreamFeed.replay(s, "stream_cluster_exec", 8, roundRobin) {
+        (in, run) =>
+          graft.streaming.StreamOps.maintainComponents(
+            in.toDF("src", "dst"), s"${run.dir}/store", s"${run.dir}/ckpt")
+      }.dir
+      graft.streaming.StreamOps.currentComponents(s, s"$root/store").get
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
         .orderBy("doc_id")
     },
@@ -698,32 +680,15 @@ ${affineSigCtes("MATERIALIZED")},
         .as[(java.sql.Timestamp, Long, String, String)],
         "stream_crawl_dedup_exec")
         .sortBy(_._2)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String, String)]
-      val runId = DedupSinkIds.next()
-      val root = s"/tmp/graft_stream_crawldedup/run_$runId"
-      val (docStore, bandStore, labelStore, ckpt) =
-        (s"$root/docs", s"$root/bands", s"$root/labels", s"$root/ckpt")
-      Seq(docStore, bandStore, labelStore, ckpt).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps.maintainCrawlDedup(
+      val root = StreamFeed.replay(s, "stream_crawl_dedup_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps.maintainCrawlDedup(
           graft.streaming.StreamOps.crawlIngestStream(
-            mem.toDF().toDF("ts", "doc_id", "url", "page"),
-            lateness = "7 days"),
-          docStore, bandStore, labelStore, ckpt,
-          bandsOf, minhashPairsDelta)
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-        } finally q.stop()
-      }
-      graft.streaming.StreamOps.currentComponents(s, labelStore).get
+            in.toDF("ts", "doc_id", "url", "page"), lateness = "7 days"),
+          s"${run.dir}/docs", s"${run.dir}/bands", s"${run.dir}/labels",
+          s"${run.dir}/ckpt", bandsOf, minhashPairsDelta)
+      }.dir
+      graft.streaming.StreamOps.currentComponents(s, s"$root/labels").get
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
         .orderBy("doc_id")
     },
@@ -1828,8 +1793,8 @@ ${affineSigCtes("MATERIALIZED")},
   /** A REAL micro-batch streaming dedup in the correctness gate (the
     * dedup analogue of stream_hourly_exec): the documents table is
     * planted with full-corpus duplicates under shifted ids, replayed
-    * through a MemoryStream in 4 doc_id-ordered chunks — so every planted
-    * copy arrives in a LATER micro-batch than its original and must be
+    * through an in-memory stream in 4 doc_id-ordered chunks — so every
+    * planted copy arrives in a LATER micro-batch than its original and must be
     * dropped by cross-batch state, not intra-batch distinct. The append
     * sink's surviving rows are projected to content-functional columns
     * (digest, length) because which doc_id survives an intra-batch
@@ -1856,25 +1821,16 @@ ${affineSigCtes("MATERIALIZED")},
         .as[(java.sql.Timestamp, Long, String)]
       val rows = StreamFeed.collectCapped(fed, "stream_dedup_exec")
         .sortBy(_._2)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String)]
-      val sink = s"stream_dedup_exec_sink_${DedupSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
+      val run = StreamFeed.replay(s, "stream_dedup_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
           .dedupByContentStream(
-            mem.toDF().toDF("ts", "doc_id", "text"), lateness = "7 days")
+            in.toDF("ts", "doc_id", "text"), lateness = "7 days")
           .select(col("content_md5"), length(col("text")).as("n_chars"))
-          .writeStream.format("memory").queryName(sink)
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-        } finally q.stop()
       }
-      s.table(sink)
+      s.table(run.sink)
         .select(col("content_md5"), col("n_chars").cast("long").as("n_chars"))
         .orderBy("content_md5")
     },
@@ -1882,11 +1838,6 @@ ${affineSigCtes("MATERIALIZED")},
       SELECT DISTINCT md5(text) AS content_md5,
              length(text)::BIGINT AS n_chars
       FROM documents ORDER BY content_md5"""))
-
-  private object DedupSinkIds {
-    private val n = new java.util.concurrent.atomic.AtomicLong(0)
-    def next(): Long = n.incrementAndGet()
-  }
 
   /** Streaming NEAR-dup in the correctness gate (the minhash sibling of
     * stream_dedup_exec, which only catches byte-identical text): every
@@ -1918,31 +1869,19 @@ ${affineSigCtes("MATERIALIZED")},
           col("doc_id"), col("text"))
         .as[(java.sql.Timestamp, Long, String)], "stream_neardup_exec")
         .sortBy(_._2)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String)]
-      val sink = s"stream_neardup_exec_sink_${DedupSinkIds.next()}"
       // drop observability: ring evictions from this run surface in the
       // QUALITY artifact via StreamDropStats (expected 0 on the fixture)
       val drops = s.sparkContext.longAccumulator("stream_neardup_exec_drops")
-      graft.streaming.StreamOps.withRocksDbStateStore(s) {
-        graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-          val q = graft.streaming.StreamOps
-            .nearDupPairsStream(
-              mem.toDF().toDF("ts", "doc_id", "text"), lateness = "7 days",
-              dropCounter = Some(drops))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try {
-            rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-              mem.addData(chunk.toSeq)
-              q.processAllAvailable() // micro-batch boundary per chunk
-            }
-          } finally q.stop()
-        }
+      val run = StreamFeed.replay(s, "stream_neardup_exec", 8,
+          StreamFeed.batches(rows, 4), rocksDb = true) { (in, run) =>
+        graft.streaming.StreamOps
+          .nearDupPairsStream(in.toDF("ts", "doc_id", "text"),
+            lateness = "7 days", dropCounter = Some(drops))
+          .writeStream.format("memory").queryName(run.sink)
+          .outputMode("append").start()
       }
       graft.streaming.StreamDropStats.record("stream_neardup_exec", drops.value)
-      s.table(sink)
+      s.table(run.sink)
         .select(col("doc_a"), col("doc_b"), col("n_agree").cast("long").as("n_agree"))
         .distinct().orderBy("doc_a", "doc_b")
     },
@@ -2008,31 +1947,19 @@ ${affineSigCtes("MATERIALIZED")},
           col("doc_id"), col("text"))
         .as[(java.sql.Timestamp, Long, String)], "stream_neardup_fast_exec")
         .sortBy(_._2)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String)]
-      val sink = s"stream_neardup_fast_exec_sink_${DedupSinkIds.next()}"
       val drops =
         s.sparkContext.longAccumulator("stream_neardup_fast_exec_drops")
-      graft.streaming.StreamOps.withRocksDbStateStore(s) {
-        graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-          val q = graft.streaming.StreamOps
-            .nearDupPairsStream(
-              mem.toDF().toDF("ts", "doc_id", "text"), lateness = "7 days",
-              family = "affine", dropCounter = Some(drops))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try {
-            rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-              mem.addData(chunk.toSeq)
-              q.processAllAvailable() // micro-batch boundary per chunk
-            }
-          } finally q.stop()
-        }
+      val run = StreamFeed.replay(s, "stream_neardup_fast_exec", 8,
+          StreamFeed.batches(rows, 4), rocksDb = true) { (in, run) =>
+        graft.streaming.StreamOps
+          .nearDupPairsStream(in.toDF("ts", "doc_id", "text"),
+            lateness = "7 days", family = "affine", dropCounter = Some(drops))
+          .writeStream.format("memory").queryName(run.sink)
+          .outputMode("append").start()
       }
       graft.streaming.StreamDropStats
         .record("stream_neardup_fast_exec", drops.value)
-      s.table(sink)
+      s.table(run.sink)
         .select(col("doc_a"), col("doc_b"), col("n_agree").cast("long").as("n_agree"))
         .distinct().orderBy("doc_a", "doc_b")
     },
@@ -2091,28 +2018,17 @@ ${affineSigCtes("MATERIALIZED")},
           col("vec_id"), col("embedding"))
         .as[(java.sql.Timestamp, Long, Seq[Float])], "stream_embdedup_exec")
         .sortBy(_._2)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, Seq[Float])]
-      val sink = s"stream_embdedup_exec_sink_${DedupSinkIds.next()}"
       val drops = s.sparkContext.longAccumulator("stream_embdedup_exec_drops")
-      graft.streaming.StreamOps.withRocksDbStateStore(s) {
-        graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-          val q = graft.streaming.StreamOps
-            .embNearDupStream(mem.toDF().toDF("ts", "vec_id", "embedding"),
-              model, cuts, dropCounter = Some(drops))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try {
-            rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-              mem.addData(chunk.toSeq)
-              q.processAllAvailable() // micro-batch boundary per chunk
-            }
-          } finally q.stop()
-        }
+      val run = StreamFeed.replay(s, "stream_embdedup_exec", 8,
+          StreamFeed.batches(rows, 4), rocksDb = true) { (in, run) =>
+        graft.streaming.StreamOps
+          .embNearDupStream(in.toDF("ts", "vec_id", "embedding"),
+            model, cuts, dropCounter = Some(drops))
+          .writeStream.format("memory").queryName(run.sink)
+          .outputMode("append").start()
       }
       graft.streaming.StreamDropStats.record("stream_embdedup_exec", drops.value)
-      s.table(sink)
+      s.table(run.sink)
         .select(col("vec_a"), col("vec_b"),
           col("cos_1e4").cast("long").as("cos_1e4"))
         .distinct().orderBy("vec_a", "vec_b")
@@ -2144,23 +2060,14 @@ ${affineSigCtes("MATERIALIZED")},
       val rows = StreamFeed
         .collectCapped(docs.as[(Long, String)], "stream_decontam_exec")
         .sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val sink = s"stream_decontam_exec_sink_${DedupSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .decontaminateStream(mem.toDF().toDF("doc_id", "text"), bench)
-          .writeStream.format("memory").queryName(sink)
+      val run = StreamFeed.replay(s, "stream_decontam_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
+          .decontaminateStream(in.toDF("doc_id", "text"), bench)
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-        } finally q.stop()
       }
-      s.table(sink)
+      s.table(run.sink)
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bench_matches"),
           round(max("jaccard"), 4).as("max_jaccard"))

@@ -195,8 +195,8 @@ object RelationalQueries {
   /** The Structured Streaming transform (graft.streaming.StreamOps
     * .hourlyEventStats) executed on the batch events table — the unified
     * DataFrame API means the STREAMING plan itself is what gets
-    * oracle-checked here (StreamingSpec proves stream/batch parity on a
-    * MemoryStream). */
+    * oracle-checked here (StreamingSpec proves stream/batch parity on an
+    * in-memory stream). */
   val eventsHourlyStream = Q(
     "q_events_hourly_stream",
     (s, dir) => {
@@ -214,7 +214,7 @@ object RelationalQueries {
       ORDER BY hour_start, event_type"""))
 
   /** A REAL micro-batch streaming execution in the correctness gate: the
-    * events table is replayed through a MemoryStream in 4 chunks, each
+    * events table is replayed through an in-memory stream in 4 chunks, each
     * chunk a separate micro-batch incrementally updating the windowed-agg
     * state, and the complete-mode memory sink's final table is
     * hash-checked against the same DuckDB oracle as the batch twin
@@ -230,23 +230,14 @@ object RelationalQueries {
       val rows = StreamFeed.collectCapped(Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("value"))
         .as[(java.sql.Timestamp, String, Double)], "stream_hourly_exec")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      val sink = s"stream_hourly_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .hourlyEventStats(mem.toDF().toDF("ts", "event_type", "value"))
-          .writeStream.format("memory").queryName(sink)
+      val run = StreamFeed.replay(s, "stream_hourly_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
+          .hourlyEventStats(in.toDF("ts", "event_type", "value"))
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("complete").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // force a micro-batch boundary per chunk
-          }
-        } finally q.stop()
       }
-      s.table(sink)
+      s.table(run.sink)
         .select(
           date_format(col("hour_start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n_events"), col("value_sum"))
@@ -258,14 +249,6 @@ object RelationalQueries {
       FROM events
       GROUP BY 1, 2
       ORDER BY hour_start, event_type"""))
-
-  /** Monotonic sink ids for [[eventsHourlyStreamExec]]: a fresh memory
-    * sink per execution (Bench runs the same entry three times in one
-    * JVM; complete-mode re-use of a stopped query's sink name fails). */
-  private object StreamSinkIds {
-    private val n = new java.util.concurrent.atomic.AtomicLong(0)
-    def next(): Long = n.incrementAndGet()
-  }
 
   /** Gap-based sessionization (30-min inactivity): lag + running sum —
     * the classic event-pipeline shape (shuffles once by user_id, exactly
@@ -310,7 +293,7 @@ object RelationalQueries {
 
   /** The same sessionization through the native `session_window` operator
     * (StreamOps.sessionize — identical plan on batch and stream, which
-    * StreamingSpec proves on a MemoryStream). The oracle rebuilds gap
+    * StreamingSpec proves on an in-memory stream). The oracle rebuilds gap
     * sessions with the lag/cumsum construction; strictly `>` on the gap
     * mirrors session_window's INCLUSIVE merge (windows [t, t+gap] merge
     * when the next start <= the previous end, so an event exactly gap
@@ -1104,31 +1087,19 @@ object RelationalQueries {
         .as[(java.sql.Timestamp, String)], "stream_anomaly_exec")
         .sortBy(_._1.getTime)
       val maxMs = rows.iterator.map(_._1.getTime).max
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String)]
-      val sink = s"stream_anomaly_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .hourlyCountsAppend(mem.toDF().toDF("ts", "event_type"))
-          .writeStream.format("memory").queryName(sink)
+      // first sentinel advances the watermark past every real hour; the
+      // second's batch emits the finalized tail against it
+      val sentinels = Seq(10L, 11L).map(d =>
+        Seq((new java.sql.Timestamp(maxMs + d * 86400000L), "__sentinel")))
+      val run = StreamFeed.replay(s, "stream_anomaly_exec", 8,
+          StreamFeed.batches(rows, 4) ++ sentinels) { (in, run) =>
+        graft.streaming.StreamOps
+          .hourlyCountsAppend(in.toDF("ts", "event_type"))
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          // first sentinel advances the watermark past every real hour;
-          // the second's batch emits the finalized tail against it
-          Seq(10L, 11L).foreach { d =>
-            mem.addData(Seq(
-              (new java.sql.Timestamp(maxMs + d * 86400000L), "__sentinel")))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
       }
       anomalyFlags(
-        s.table(sink).filter(col("event_type") =!= "__sentinel"))
+        s.table(run.sink).filter(col("event_type") =!= "__sentinel"))
     },
     Some("""
       WITH hc AS (SELECT event_type, date_trunc('hour', ts) AS h,
@@ -1435,9 +1406,6 @@ object RelationalQueries {
           timestamp_seconds(col("l_orderkey")).as("ts"))
         .orderBy("l_orderkey", "l_partkey")
         .as[(Long, Long, java.sql.Timestamp)], "stream_basket_exec")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
       // r16 transport (guide §5, the driver): the gate's ~900k pair
       // emissions were the catalog's largest memory-sink transport — every
       // pair row crossed the driver per micro-batch commit, a guaranteed
@@ -1451,39 +1419,23 @@ object RelationalQueries {
       // volume and pushes it through every serving read — the per-epoch
       // aggregate keeps the store and the serving read delta-sized, which
       // is the shape that survives 100 TB (guide §2.3 aggregate-before-
-      // shuffle). The store is wiped and rebuilt INSIDE every invocation —
-      // transport, not a cross-run cache. The root is scoped to this JVM,
-      // so the wipe of prior invocations' leftovers (never concurrent
-      // within one JVM) cannot reach another process's in-flight store,
-      // and the whole root goes when the JVM's file systems close.
-      val root = s"/tmp/graft_basket_exec_stream/pid_${ProcessHandle.current().pid()}"
-      val store = s"$root/inv_${StreamSinkIds.next()}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(rootPath, true)
-      fs.mkdirs(rootPath)
-      fs.deleteOnExit(rootPath) // registers only a path that exists
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = graft.streaming.StreamOps
-          .basketPairsStream(mem.toDF().toDF("order_id", "part_id", "ts"))
+      // shuffle). The store lives in the invocation's own dir — transport,
+      // not a cross-run cache. Cost is feed/emission volume, not batch
+      // count (2 vs 4 chunks measured equal within noise) — keep 4 for the
+      // stronger cross-batch split exercise.
+      val store = StreamFeed.replay(s, "stream_basket_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        graft.streaming.StreamOps
+          .basketPairsStream(in.toDF("order_id", "part_id", "ts"))
           .writeStream
-          .option("checkpointLocation", s"$store/ckpt")
+          .option("checkpointLocation", s"${run.dir}/ckpt")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             batch.groupBy("p1", "p2").agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$store/v=$id")
+              .write.mode("overwrite").parquet(s"${run.dir}/v=$id")
             ()
           }
           .start()
-        try {
-          // cost is feed/emission volume, not batch count (2 vs 4 chunks
-          // measured equal within noise) — keep 4 for the stronger
-          // cross-batch split exercise
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
+      }.dir
       s.read.parquet(s"$store/v=*")
         .groupBy("p1", "p2").agg(sum("n").as("n12"))
         .filter(col("n12") >= 2)
@@ -1986,7 +1938,7 @@ object RelationalQueries {
     * per-hour distinct-user sketch as a live, incrementally-updated
     * aggregate (the 100 TB dashboard shape: 4 KB of mergeable state per
     * window, updated per micro-batch, never a distinct shuffle of the
-    * raw stream). Events replay through a MemoryStream in 4 chunks, so
+    * raw stream). Events replay through an in-memory stream in 4 chunks, so
     * each hour's sketch buffer is serialized into the state store and
     * re-merged across batches; the final per-hour ESTIMATES are
     * hash-checked against DuckDB's exact distinct counts — valid because
@@ -2007,24 +1959,15 @@ object RelationalQueries {
       val rows = StreamFeed.collectCapped(Tables.events(s, dir)
         .select(col("ts"), col("user_id"))
         .as[(java.sql.Timestamp, Long)], "stream_sketch_exec")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long)]
-      val sink = s"stream_sketch_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        val q = mem.toDF().toDF("ts", "user_id")
+      val run = StreamFeed.replay(s, "stream_sketch_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        in.toDF("ts", "user_id")
           .groupBy(date_trunc("hour", col("ts")).as("hour_start"))
           .agg(expr("theta_sketch_agg(user_id)").as("sk"))
-          .writeStream.format("memory").queryName(sink)
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("complete").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
       }
-      val streamed = s.table(sink).select(col("hour_start"),
+      val streamed = s.table(run.sink).select(col("hour_start"),
         expr("theta_sketch_estimate(sk)").cast("long").as("est_users"))
       val batch = Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour_start"))
@@ -2047,7 +1990,7 @@ object RelationalQueries {
 
   /** A REAL micro-batch `session_window` run in the correctness gate (the
     * sessionization sibling of stream_hourly_exec): events replayed
-    * ts-ordered through a MemoryStream in 2 chunks (sessions straddling
+    * ts-ordered through an in-memory stream in 2 chunks (sessions straddling
     * the boundary prove cross-batch session-window state merging; the
     * entry's wall is per-batch planning overhead, ~1.1 s/batch, so the
     * chunk count is the minimum that still exercises it), and emission
@@ -2074,27 +2017,17 @@ object RelationalQueries {
       def sentinel(hours: Int) = (
         new java.sql.Timestamp(rows.last._1.getTime + hours * 3600 * 1000L),
         -1L)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long)]
-      val sink = s"stream_sessions_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 4) {
-        val q = graft.streaming.StreamOps
-          .sessionize(mem.toDF().toDF("ts", "user_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-          mem.addData(Seq(sentinel(4)))
-          q.processAllAvailable() // advances the watermark past all sessions
-          mem.addData(Seq(sentinel(8)))
-          q.processAllAvailable() // emits every real session against it
-        } finally q.stop()
+      // the first sentinel advances the watermark past all sessions, the
+      // second's batch emits every real session against it
+      val run = StreamFeed.replay(s, "stream_sessions_exec", 4,
+          StreamFeed.batches(rows, 2) :+ Seq(sentinel(4)) :+ Seq(sentinel(8))) {
+        (in, run) =>
+          graft.streaming.StreamOps
+            .sessionize(in.toDF("ts", "user_id"))
+            .writeStream.format("memory").queryName(run.sink)
+            .outputMode("append").start()
       }
-      s.table(sink)
+      s.table(run.sink)
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "sess_start_us")
     },
@@ -2137,29 +2070,20 @@ object RelationalQueries {
       def sentinel(hours: Int) = (
         new java.sql.Timestamp(rows.last._1.getTime + hours * 3600 * 1000L),
         -1L, "zz_sentinel")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String)]
-      val sink = s"stream_funnel_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 4) {
-        val q = graft.streaming.StreamOps
-          .funnelStream(mem.toDF().toDF("ts", "user_id", "event_type"),
-            steps = Seq("view", "click", "purchase"),
-            windowUs = 86400000000L)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-          mem.addData(Seq(sentinel(26))) // 24h window + 1h lateness + 1h
-          q.processAllAvailable() // advances the watermark past every window
-          mem.addData(Seq(sentinel(27)))
-          q.processAllAvailable() // fires the timeouts that emit
-        } finally q.stop()
+      // sentinel 26 h (24 h window + 1 h lateness + 1 h) advances the
+      // watermark past every window; the 27 h one fires the timeouts that emit
+      val fed =
+        StreamFeed.batches(rows, 2) :+ Seq(sentinel(26)) :+ Seq(sentinel(27))
+      val run = StreamFeed.replay(s, "stream_funnel_exec", 4, fed) {
+        (in, run) =>
+          graft.streaming.StreamOps
+            .funnelStream(in.toDF("ts", "user_id", "event_type"),
+              steps = Seq("view", "click", "purchase"),
+              windowUs = 86400000000L)
+            .writeStream.format("memory").queryName(run.sink)
+            .outputMode("append").start()
       }
-      s.table(sink)
+      s.table(run.sink)
         .agg(count(lit(1)).as("n_view"),
           sum(when(col("reached") >= 2, 1L).otherwise(0L)).as("n_click_24h"),
           sum(when(col("reached") >= 3, 1L).otherwise(0L)).as("n_purchase_24h"))
@@ -2189,29 +2113,19 @@ object RelationalQueries {
       def sentinel(hours: Int) = (
         new java.sql.Timestamp(rows.last._1.getTime + hours * 3600 * 1000L),
         -1L, -1L, "zz_sentinel")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, Long, String)]
-      val sink = s"stream_attribution_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 4) {
-        val q = graft.streaming.StreamOps
-          .attributionStream(
-            mem.toDF().toDF("ts", "user_id", "event_id", "event_type"),
-            lookbackUs = 7L * 86400000000L)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-          mem.addData(Seq(sentinel(2))) // 1h lateness + margin
-          q.processAllAvailable() // advances the watermark past every anchor
-          mem.addData(Seq(sentinel(3)))
-          q.processAllAvailable() // fires the timeouts that emit
-        } finally q.stop()
+      // sentinel 2 h (1 h lateness + margin) advances the watermark past
+      // every anchor; the 3 h one fires the timeouts that emit
+      val run = StreamFeed.replay(s, "stream_attribution_exec", 4,
+          StreamFeed.batches(rows, 2) :+ Seq(sentinel(2)) :+ Seq(sentinel(3))) {
+        (in, run) =>
+          graft.streaming.StreamOps
+            .attributionStream(
+              in.toDF("ts", "user_id", "event_id", "event_type"),
+              lookbackUs = 7L * 86400000000L)
+            .writeStream.format("memory").queryName(run.sink)
+            .outputMode("append").start()
       }
-      s.table(sink)
+      s.table(run.sink)
         .groupBy(col("model"), col("event_type").as("channel"))
         .agg(count(lit(1)).as("n_touches"), sum("bp").as("credit_bp"))
         .orderBy("model", "channel")
@@ -2256,27 +2170,17 @@ object RelationalQueries {
         val us = rows.map(_._3).max + hours * 3600000000L
         (-1L, new java.sql.Timestamp(us / 1000L), us, 0, -1L)
       }
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, Int, Long)]
-      val sink = s"stream_asof_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 4) {
-        val q = graft.streaming.StreamOps
-          .asofStream(mem.toDF().toDF("key", "ts", "us", "side", "id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-          mem.addData(Seq(sentinel(2))) // 1h lateness + margin
-          q.processAllAvailable() // advances the watermark past every left
-          mem.addData(Seq(sentinel(3)))
-          q.processAllAvailable() // fires the timeouts that emit
-        } finally q.stop()
+      // sentinel 2 h (1 h lateness + margin) advances the watermark past
+      // every left; the 3 h one fires the timeouts that emit
+      val run = StreamFeed.replay(s, "stream_asof_exec", 4,
+          StreamFeed.batches(rows, 2) :+ Seq(sentinel(2)) :+ Seq(sentinel(3))) {
+        (in, run) =>
+          graft.streaming.StreamOps
+            .asofStream(in.toDF("key", "ts", "us", "side", "id"))
+            .writeStream.format("memory").queryName(run.sink)
+            .outputMode("append").start()
       }
-      s.table(sink).filter(col("key") >= 0)
+      s.table(run.sink).filter(col("key") >= 0)
         .select(col("id").as("event_id"), col("key").as("user_id"),
           col("us").as("purchase_us"), col("match_id").as("click_id"),
           col("match_us").as("click_us"),
@@ -2300,7 +2204,7 @@ object RelationalQueries {
     * execution ([[graft.streaming.StreamOps.rangeJoinStream]]): the
     * q_events_range_join query (purchases attributed to the signup whose
     * one-hour window contains them) with BOTH sides streaming — signups
-    * and purchases each replayed through their own MemoryStream in 2
+    * and purchases each replayed through their own in-memory stream in 2
     * time-aligned chunks (splitting both streams at the same timestamp
     * keeps every cross-batch match inside the join-state horizon: an open
     * window is expired only when the watermark passes
@@ -2326,31 +2230,24 @@ object RelationalQueries {
         "stream_range_exec purchases").sortBy(_._2.getTime)
       val allMs = (signups ++ purchases).map(_._2.getTime)
       val midMs = (allMs.min + allMs.max) / 2
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val pMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val oMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val sink = s"stream_range_exec_sink_${StreamSinkIds.next()}"
-      graft.streaming.StreamOps.withShufflePartitions(s, 4) {
+      val (pIn, addP) = StreamFeed.source[(Long, java.sql.Timestamp, Long)](s)
+      val (oIn, addO) = StreamFeed.source[(Long, java.sql.Timestamp, Long)](s)
+      val run = StreamFeed.drive(s, "stream_range_exec", 4) { run =>
         val q = graft.streaming.StreamOps.rangeJoinStream(
-            pMem.toDF().toDF("user_id", "ts", "purchase_id"),
-            oMem.toDF().toDF("o_user_id", "open_ts", "signup_id"))
+            pIn.toDF("user_id", "ts", "purchase_id"),
+            oIn.toDF("o_user_id", "open_ts", "signup_id"))
           .select(col("signup_id"), col("purchase_id"),
             (unix_micros(col("ts")) - unix_micros(col("open_ts")))
               .as("delay_us"))
-          .writeStream.format("memory").queryName(sink)
+          .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
-        try {
-          Seq[java.sql.Timestamp => Boolean](
-            _.getTime <= midMs, _.getTime > midMs).foreach { inChunk =>
-            pMem.addData(purchases.filter(r => inChunk(r._2)).toSeq)
-            oMem.addData(signups.filter(r => inChunk(r._2)).toSeq)
-            q.processAllAvailable() // micro-batch boundary per chunk
-          }
-        } finally q.stop()
+        (q, Seq[java.sql.Timestamp => Boolean](
+            _.getTime <= midMs, _.getTime > midMs).map { inChunk => () =>
+          addP(purchases.filter(r => inChunk(r._2)).toSeq)
+          addO(signups.filter(r => inChunk(r._2)).toSeq)
+        })
       }
-      s.table(sink).orderBy("signup_id", "purchase_id")
+      s.table(run.sink).orderBy("signup_id", "purchase_id")
     },
     eventsRangeJoin.oracle)
 

@@ -52,13 +52,8 @@ object RetrievalQueries {
             FROM sc)
       WHERE rk <= 10 ORDER BY rk"""))
 
-  private object StreamRunIds {
-    private val n = new java.util.concurrent.atomic.AtomicLong(0)
-    def next(): Long = n.incrementAndGet()
-  }
-
   /** BM25 served from the MAINTAINED inverted index, in the correctness
-    * gate: the documents table replayed through a MemoryStream in 4
+    * gate: the documents table replayed through an in-memory stream in 4
     * doc_id-ordered chunks, each micro-batch APPENDING its postings epoch
     * (`Retrieval.maintainPostings` — per-epoch work is tokenizing the
     * batch, nothing existing rewritten; every BM25 statistic is additive
@@ -74,29 +69,13 @@ object RetrievalQueries {
         Tables.documents(s, dir).select(col("doc_id"), col("text"))
           .as[(Long, String)], "stream_bm25_exec")
         .sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val runId = StreamRunIds.next()
-      val store = s"/tmp/graft_stream_postings/run_$runId"
-      val ckpt = s"/tmp/graft_stream_postings_ckpt/run_$runId"
-      // per-JVM counter: scrub prior processes' leftovers (the stale-
-      // checkpoint lesson from stream_cluster_exec)
-      Seq(store, ckpt).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val q = graft.streaming.StreamOps.withShufflePartitions(s, 8) {
-        Retrieval.maintainPostings(mem.toDF().toDF("doc_id", "text"), store, ckpt)
-      }
-      try {
-        rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-          mem.addData(chunk.toSeq)
-          q.processAllAvailable() // micro-batch boundary per chunk
-        }
-      } finally q.stop()
+      val root = StreamFeed.replay(s, "stream_bm25_exec", 8,
+          StreamFeed.batches(rows, 4)) { (in, run) =>
+        Retrieval.maintainPostings(in.toDF("doc_id", "text"),
+          s"${run.dir}/store", s"${run.dir}/ckpt")
+      }.dir
       Retrieval.bm25TopKFromPostings[Long](
-        Retrieval.currentPostings(s, store).get, terms, 10)
+        Retrieval.currentPostings(s, s"$root/store").get, terms, 10)
         .orderBy("rk")
     },
     Some(s"""

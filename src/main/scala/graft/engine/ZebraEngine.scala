@@ -457,15 +457,34 @@ final class ZebraEngine private (
     * (≈ sampleCap/maxNodeSize · numTrees pairs). */
   def liveIndex: DataFrame = {
     val buckets = readTable(indexDir)
-    loadModel() match {
+    reachableLeaves match {
       case None => buckets
-      case Some(model) =>
-        import spark.implicits._
-        val reachable = model.trees.zipWithIndex.flatMap { case (t, i) =>
-          LshForest.leafIds(t).map(l => (i, l))
-        }.toSeq.toDF("tree_id", "leaf_id")
+      case Some(reachable) =>
         buckets.join(broadcast(reachable), Seq("tree_id", "leaf_id"), "left_semi")
     }
+  }
+
+  /** Every (tree_id, leaf_id) some tree of the LSH model routes to, each
+    * once (leaf ids are unique within a tree); None without a model. */
+  private def reachableLeaves: Option[DataFrame] = loadModel().map { model =>
+    import spark.implicits._
+    model.trees.zipWithIndex.flatMap { case (t, i) =>
+      LshForest.leafIds(t).map(l => (i, l))
+    }.toSeq.toDF("tree_id", "leaf_id")
+  }
+
+  /** Bucket rows no tree can reach, counted in one aggregate over one
+    * scan: a left join against the broadcast reachable set flags the live
+    * rows, where counting the table and [[liveIndex]] apart scans twice. */
+  private def staleIndexRows(): Long = reachableLeaves match {
+    case None => 0L
+    case Some(reachable) =>
+      readTable(indexDir)
+        .join(broadcast(reachable.withColumn("live", lit(true))),
+          Seq("tree_id", "leaf_id"), "left")
+        .agg(org.apache.spark.sql.functions.count(lit(1)) -
+          org.apache.spark.sql.functions.count(col("live")))
+        .head().getLong(0)
   }
 
   /** I8 leaf-split compaction (reference: lsh.rs:350-382 splits ONE
@@ -501,7 +520,7 @@ final class ZebraEngine private (
       .filter(col("count") > threshold)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     if (overflowing.isEmpty) return false
-    val staleRows = buckets.count() - live.count()
+    val staleRows = staleIndexRows()
     val memberRows = overflowing.map(_._3).sum
     // Fall back to a full rebuild when the dead weight dominates or the
     // overflow membership would strain the driver.
@@ -555,12 +574,8 @@ final class ZebraEngine private (
     * ingest run). Returns the number of stale rows reclaimed. */
   def vacuumIndex(): Long = {
     if (!hasData(indexDir)) return 0L
-    val total = readTable(indexDir).count()
-    // materialize the live view once: the count and the rewrite would
-    // otherwise each re-run the scan + reachability semi-join
-    val live = liveIndex.localCheckpoint()
-    val stale = total - live.count()
-    if (stale > 0L) rewriteIndex(live)
+    val stale = staleIndexRows()
+    if (stale > 0L) rewriteIndex(liveIndex)
     stale
   }
 
