@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Catalog.Q
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.functions.Distances
 import graft.index.LshForest
 
@@ -196,32 +196,11 @@ object DedupQueries {
     * `minhash_keep` share one computation of the band pipeline. Persisted
     * as parquet rather than collected — the pair set is proportional to the
     * corpus's duplication, which a 100 TB crawl makes arbitrarily large;
-    * readers get a distributed scan. Same pattern as the LSH/IVF caches. */
-  /** Per-JVM build-once parquet cache — the shared machinery behind every
-    * *Cache object in this file: one computation per (prefix, fixture
-    * dir) per JVM, persisted as parquet rather than collected (pair/label
-    * sets grow with corpus duplication, which a 100 TB crawl makes
-    * arbitrarily large; readers get a distributed scan). Paths are stable
-    * across JVMs, so a warm /tmp survives process restarts — and since
-    * r16 they embed [[graft.core.FixtureStamp]]'s content stamp, so a
-    * fixture REGENERATED at the same path rolls the cache over instead
-    * of serving intermediates built from the old data. */
-  private object ParquetCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    def get(s: SparkSession, prefix: String, dir: String)
-        (build: => DataFrame): DataFrame = {
-      val path = cache.getOrElseUpdate(s"$prefix|$dir", {
-        val p = s"/tmp/$prefix/v1_" + graft.core.FixtureStamp.key(s, dir)
-        build.write.mode("overwrite").parquet(p)
-        p
-      })
-      s.read.parquet(path)
-    }
-  }
-
+    * readers get a distributed scan. The file's other pair and label
+    * caches are [[Scratch.parquet]] frames too. */
   object PairsCache {
     def get(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_pairs", dir)(verifiedPairs(s, dir))
+      Scratch.parquet(s, "pairs", dir)(verifiedPairs(s, dir))
   }
 
   /** Exact doc dedup on md5(text), first (lowest doc_id) wins — the text
@@ -269,7 +248,7 @@ object DedupQueries {
     * the base it would never redo. */
   private object BaseBandsCache {
     def get(s: SparkSession, dir: String, split: Long): DataFrame =
-      ParquetCache.get(s, "graft_basebands", dir)(
+      Scratch.parquet(s, "basebands", dir)(
         bandsOf(Tables.documents(s, dir)
           .select(col("doc_id"), col("text"))
           .filter(col("doc_id") < split)))
@@ -289,7 +268,7 @@ object DedupQueries {
     * split-build-from-serve pattern as PairsCache/engine_build_docs. */
   private object DeltaPairsCache {
     def get(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_deltapairs", dir) {
+      Scratch.parquet(s, "deltapairs", dir) {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val split = deltaSplit(s, dir)
         val deltaBands = bandsOf(docs.filter(col("doc_id") >= split))
@@ -389,7 +368,7 @@ ${affineSigCtes()},
     * it belongs, in DedupScaleProbe's sigkernel leg. */
   private object FastPairsCache {
     def get(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_fastpairs", dir) {
+      Scratch.parquet(s, "fastpairs", dir) {
         val bands = bandsOfFast(Tables.documents(s, dir))
         val pairs = bands.as("a")
           .join(bands.as("b"),
@@ -541,7 +520,7 @@ ${affineSigCtes("MATERIALIZED")},
     * doc_b < split ⟺ both endpoints in the base). */
   private object BaseLabelsCache {
     def get(s: SparkSession, dir: String, split: Long): DataFrame =
-      ParquetCache.get(s, "graft_baselabels", dir)(
+      Scratch.parquet(s, "baselabels", dir)(
         graft.ops.ConnectedComponents.components(
           PairsCache.get(s, dir).filter(col("doc_b") < split)
             .select(col("doc_a").as("src"), col("doc_b").as("dst"))))
@@ -760,7 +739,7 @@ ${affineSigCtes("MATERIALIZED")},
     * and rationale as [[PairsCache]]). */
   object NgramPairsCache {
     def get(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_ngram_pairs", dir)(
+      Scratch.parquet(s, "ngram_pairs", dir)(
         ngramJaccardPairs(Tables.documents(s, dir)))
   }
 
@@ -945,7 +924,7 @@ ${affineSigCtes("MATERIALIZED")},
   /** Per-JVM cache of the containment pair set (PairsCache pattern). */
   private object ContainmentCache {
     def get(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_containpairs", dir) {
+      Scratch.parquet(s, "containpairs", dir) {
         val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         // plant contained docs: every 5th doc (>= 6 words) truncated to its
         // first ceil(2n/3) words - a sliding-shingle PREFIX is a strict
@@ -1169,16 +1148,11 @@ ${affineSigCtes("MATERIALIZED")},
     * round-2 entry rebuilt the forest inside every execution (6.9 s, the
     * most expensive bench query). Same pattern as LshCache/IvfCache. */
   object NearDupCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    def buckets(s: SparkSession, dir: String, planted: DataFrame): DataFrame = {
-      val path = cache.getOrElseUpdate(dir, {
-        val model = LshForest.build(planted)
-        val p = "/tmp/graft_neardup/v1_" + graft.core.FixtureStamp.key(s, dir)
-        LshForest.writeIndex(planted, model, p)
+    def buckets(s: SparkSession, dir: String, planted: DataFrame): DataFrame =
+      LshForest.loadIndex(s, Scratch.cached("neardup", dir) { p =>
+        LshForest.writeIndex(planted, LshForest.build(planted), p)
         p
       })
-      LshForest.loadIndex(s, path)
-    }
   }
 
   /** Target in-bucket occupancy for near-dup candidate generation and the
@@ -1433,7 +1407,7 @@ ${affineSigCtes("MATERIALIZED")},
     * production daily loop carries forward from the previous day: the
     * forest model built on the BASE corpus (per-JVM; the driver-side
     * build is sample-bounded), the per-leaf refinement cuts, and the
-    * sub-keyed base bucket table (both parquet via [[ParquetCache]]).
+    * sub-keyed base bucket table (both parquet via [[Scratch.parquet]]).
     * The entry's measured cost is then the delta work only: route +
     * frozen-cut assign + bucket join + cosine verify. */
   private object EmbBaseIndexCache {
@@ -1442,10 +1416,10 @@ ${affineSigCtes("MATERIALIZED")},
     def model(dir: String, base: DataFrame): LshForest.ForestModel =
       models.getOrElseUpdate(dir, LshForest.build(base))
     def cuts(s: SparkSession, dir: String, base: DataFrame): DataFrame =
-      ParquetCache.get(s, "graft_embcuts", dir)(
+      Scratch.parquet(s, "embcuts", dir)(
         bucketCuts(LshForest.bucketTable(base, model(dir, base)), base))
     def keyedBase(s: SparkSession, dir: String, base: DataFrame): DataFrame =
-      ParquetCache.get(s, "graft_embbase", dir)(
+      Scratch.parquet(s, "embbase", dir)(
         assignSubKeys(LshForest.bucketTable(base, model(dir, base)), base,
           cuts(s, dir, base)))
   }
@@ -1756,7 +1730,7 @@ ${affineSigCtes("MATERIALIZED")},
     * dir; both the pairs and keep entries read the cached parquet. */
   private object SemPairsCache {
     def pairs(s: SparkSession, dir: String): DataFrame =
-      ParquetCache.get(s, "graft_sempairs", dir)(
+      Scratch.parquet(s, "sempairs", dir)(
         graft.ops.SemDedup.dupPairsAssigned(md5Vectors(s, dir),
           EmbedQueries.KmAssignCache.assign(s, dir),
           tauNum = semTau._1, tauDen = semTau._2))

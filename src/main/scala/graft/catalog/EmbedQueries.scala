@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Catalog.Q
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.embed.HashingTextEmbedder
 import graft.engine.{EngineConfig, ZebraEngine}
 import graft.functions.Distances
@@ -145,11 +145,8 @@ object EmbedQueries {
     * run once. The instance is cached (not the path) so the model
     * stamp-cache and forest broadcast cache persist across executions. */
   object DocEngineCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, ZebraEngine]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      cache.getOrElseUpdate(dir, {
-        val p = "/tmp/graft_doc_engine/v1_" + graft.core.FixtureStamp.key(s, dir)
-        ZebraEngine.destroy(p)
+      Scratch.cached("doc_engine", dir) { p =>
         val eng = ZebraEngine.create(
           s, p, EngineConfig(dim = embedder.dim, metric = "cosine"))
         val docs = Tables.documents(s, dir)
@@ -161,7 +158,7 @@ object EmbedQueries {
         // stack (embed -> forest probe -> rerank -> document fetch)
         eng.refreshIndex()
         eng
-      })
+      }
   }
 
   /** D8+D10 end-to-end: documents inserted through `insert_documents`
@@ -185,12 +182,9 @@ object EmbedQueries {
   /** Per-JVM engine INSTANCE over the md5-count embedder (32-d, l2sq) —
     * the oracle-twin sibling of [[DocEngineCache]]. */
   object DocEngineMd5Cache {
-    private val cache = scala.collection.concurrent.TrieMap[String, ZebraEngine]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      cache.getOrElseUpdate(dir, {
+      Scratch.cached("doc_engine_md5", dir) { p =>
         val twin = graft.embed.Md5CountEmbedder()
-        val p = "/tmp/graft_doc_engine_md5/v1_" + graft.core.FixtureStamp.key(s, dir)
-        ZebraEngine.destroy(p)
         val eng = ZebraEngine.create(
           s, p, EngineConfig(dim = twin.dim, metric = "l2sq"))
         val docs = Tables.documents(s, dir)
@@ -201,7 +195,7 @@ object EmbedQueries {
         eng.insertDocuments(docs, twin)
         eng.refreshIndex()
         eng
-      })
+      }
   }
 
   /** The COMPLETE reference stack — D8 insert_documents (embed → store →
@@ -369,16 +363,9 @@ object EmbedQueries {
     * three-collect Lloyd loop runs once per fixture dir (the
     * NearDupCache/KnnJoinCache pattern). */
   private[catalog] object KmAssignCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    def assign(s: SparkSession, dir: String): DataFrame = {
-      val path = cache.getOrElseUpdate(dir, {
-        val p = "/tmp/graft_kmassign/v1_" + graft.core.FixtureStamp.key(s, dir)
-        graft.ops.KMeansInt.fitAssign(md5Vectors(s, dir), k = 4, iters = 3)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-      s.read.parquet(path)
-    }
+    def assign(s: SparkSession, dir: String): DataFrame =
+      Scratch.parquet(s, "kmassign", dir)(
+        graft.ops.KMeansInt.fitAssign(md5Vectors(s, dir), k = 4, iters = 3))
   }
 
   val kmeansCluster = Q(
@@ -492,30 +479,33 @@ object EmbedQueries {
   /** The engine BUILD cost as its own timed line (round-8 verdict: the
     * one-time `ensure` inside doc_knn_exact_budget's first execution read
     * as a 15× serving regression — serving and build belong on separate
-    * bench lines). Each execution is a COLD full build: destroy → create
-    * → insert_documents (embed + store) → refreshIndex over the dir's
-    * whole documents table, into a throwaway path that no serving entry
-    * shares — so bench's min-of-rounds times a genuine rebuild, while the
-    * serving entries keep hitting their per-JVM warm caches. Returns the
-    * indexed corpus size, which DuckDB hash-checks. */
+    * bench lines). Each execution is a COLD full build: create →
+    * insert_documents (embed + store) → refreshIndex over the dir's
+    * whole documents table, into a fresh throwaway path that no serving
+    * entry shares and that the execution destroys — so bench's
+    * min-of-rounds times a genuine rebuild, while the serving entries
+    * keep hitting their per-JVM warm caches. Returns the indexed corpus
+    * size, which DuckDB hash-checks. */
   val engineBuildDocs = Q(
     "engine_build_docs",
     (s, dir) => {
       val twin = graft.embed.Md5CountEmbedder()
-      val p = "/tmp/graft_doc_engine_build_probe"
-      ZebraEngine.destroy(p)
-      val eng = ZebraEngine.create(
-        s, p, EngineConfig(dim = twin.dim, metric = "l2sq"))
-      eng.insertDocuments(
-        Tables.documents(s, dir)
-          .filter(hasTokens)
-          .select(
-            format_string("d%06d", col("doc_id")).as("id"),
-            col("text").cast("binary").as("document")),
-        twin)
-      eng.refreshIndex()
+      val p = Scratch.dir("engine_build_docs")
+      val n = try {
+        val eng = ZebraEngine.create(
+          s, p, EngineConfig(dim = twin.dim, metric = "l2sq"))
+        eng.insertDocuments(
+          Tables.documents(s, dir)
+            .filter(hasTokens)
+            .select(
+              format_string("d%06d", col("doc_id")).as("id"),
+              col("text").cast("binary").as("document")),
+          twin)
+        eng.refreshIndex()
+        eng.count()
+      } finally ZebraEngine.destroy(p)
       import s.implicits._
-      Seq(eng.count()).toDF("n_indexed")
+      Seq(n).toDF("n_indexed")
     },
     Some("""
       SELECT count(*)::BIGINT AS n_indexed FROM documents

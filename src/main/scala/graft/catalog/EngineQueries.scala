@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.functions._
 
 import graft.Catalog.Q
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.engine.{EngineConfig, ZebraEngine}
 
 /** CRUD-as-table-rewrite surface (SURVEY.md §2.1 I9–I11, §2.2 D6/D7): the
@@ -66,25 +66,21 @@ object EngineQueries {
     * the instance/model identity: a fresh `open` per query would reload and
     * re-broadcast the model on every execution. */
   object EngineCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, ZebraEngine]()
     private def build(s: org.apache.spark.sql.SparkSession, dir: String,
-        suffix: String, indexed: Boolean): ZebraEngine =
-      cache.getOrElseUpdate(s"$dir|$suffix", {
-        val p = s"/tmp/graft_engine/v1_$suffix" +
-          graft.core.FixtureStamp.key(s, dir)
-        ZebraEngine.destroy(p)
+        name: String, indexed: Boolean): ZebraEngine =
+      Scratch.cached(name, dir) { p =>
         val eng = ZebraEngine.create(s, p, EngineConfig(dim = 64))
         eng.insertRecords(Tables.embeddings(s, dir)
           .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding")))
         if (indexed) eng.refreshIndex()
         eng
-      })
+      }
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      build(s, dir, "", indexed = false)
+      build(s, dir, "engine", indexed = false)
     /** Same corpus, but with the LSH forest built — queries take the
       * indexed branch of `queryVectors`. */
     def ensureIndexed(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      build(s, dir, "idx_", indexed = true)
+      build(s, dir, "engine_idx", indexed = true)
     /** Same corpus through the PLUGGABLE index kind: the engine built and
       * queried over an IVF-PQ codes index instead of the LSH forest. */
     def ensureIvfPq(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
@@ -93,17 +89,14 @@ object EngineQueries {
     def ensureKind(
         s: org.apache.spark.sql.SparkSession, dir: String,
         kind: String): ZebraEngine =
-      cache.getOrElseUpdate(s"$dir|${kind}_", {
-        val p = s"/tmp/graft_engine/v1_${kind}_" +
-          graft.core.FixtureStamp.key(s, dir)
-        ZebraEngine.destroy(p)
+      Scratch.cached(s"engine_$kind", dir) { p =>
         val eng = ZebraEngine.create(
           s, p, EngineConfig(dim = 64, indexKind = kind))
         eng.insertRecords(Tables.embeddings(s, dir)
           .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding")))
         eng.refreshIndex()
         eng
-      })
+      }
   }
 
   /** D1+D9+D11 through the real engine lifecycle: records inserted via

@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.functions._
 
 import graft.Catalog.Q
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.index.LshForest
 
 /** The LSH random-projection forest surface (SURVEY.md §2.1 I4–I8, I12,
@@ -16,8 +16,6 @@ object IndexQueries {
   /** Per-JVM forest cache: model built + bucket table persisted once per
     * (sfDir, options) — queries after the first are pruned scans. */
   object LshCache {
-    private val cache = scala.collection.concurrent.TrieMap[
-      String, (String, LshForest.ForestModel)]()
     // The loaded DataFrame is cached per session too: spark.read.parquet
     // re-lists the index directory (numTrees × slice files) on every
     // call, which at per-query granularity costs more
@@ -35,16 +33,13 @@ object IndexQueries {
     def ensurePath(s: org.apache.spark.sql.SparkSession, dir: String,
         opts: LshForest.Options = LshForest.Options())
         : (String, LshForest.ForestModel) = {
-      val key = s"$dir|${opts.numTrees}|${opts.maxNodeSize}|${opts.seed}"
-      cache.getOrElseUpdate(key, {
+      Scratch.cached(
+          s"lsh_${opts.numTrees}_${opts.maxNodeSize}_${opts.seed}", dir) { p =>
         val e = Tables.embeddings(s, dir)
         val m = LshForest.build(e, opts)
-        val p = "/tmp/graft_lsh/v1_" +
-          graft.core.FixtureStamp.key(s, dir) +
-          s"_${opts.numTrees}_${opts.maxNodeSize}_${opts.seed}"
         LshForest.writeIndex(e, m, p)
         (p, m)
-      })
+      }
     }
   }
 
@@ -101,20 +96,14 @@ object IndexQueries {
     * recomputing the brute-force scan on every execution measured the
     * oracle, not the index under observation. */
   object GroundTruthCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
     def topK10(s: org.apache.spark.sql.SparkSession, dir: String)
-        : org.apache.spark.sql.DataFrame = {
-      val path = cache.getOrElseUpdate(dir, {
-        val p = "/tmp/graft_truth/v1_" + graft.core.FixtureStamp.key(s, dir)
+        : org.apache.spark.sql.DataFrame =
+      Scratch.parquet(s, "truth", dir) {
         val e = Tables.embeddings(s, dir)
         val queries = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("query_id"), col("embedding"))
         graft.ops.SimSearch.exactTopK(queries, e, k = 10)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-      s.read.parquet(path)
-    }
+      }
   }
 
   /** Falsifiable gate for the rows-only approximate top-k entries (the

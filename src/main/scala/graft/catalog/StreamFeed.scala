@@ -24,10 +24,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     boundary: the loop lands one batch, then waits until the query has
   *     processed everything available;
   *   - every invocation gets its own memory-sink name and its own scratch
-  *     dir ([[Run]]). Dirs live under `pid_<pid>` below [[Root]], so two
-  *     JVMs never touch each other's stores; a gate's next invocation in
-  *     the same JVM deletes its earlier ones, and the JVM's dir goes when
-  *     its file systems close;
+  *     dir ([[Run]]). Dirs live under the JVM's [[graft.core.Scratch]]
+  *     root, so two JVMs never touch each other's stores; a gate's next
+  *     invocation in the same JVM deletes its earlier ones, and the root
+  *     goes when the JVM exits;
   *   - the query is always stopped, also when a batch or the query fails.
   *
   * Production streams read from a real source (`readStream`); nothing in
@@ -55,28 +55,20 @@ object StreamFeed {
     rows
   }
 
-  /** Where the gates keep their on-disk stores and checkpoints. */
-  val Root = "/tmp/graft_stream"
-
   /** One gate invocation: the memory-sink name and the scratch dir that
     * belong to it alone. The dir is not created; the gate's writers make
     * what they use under it. */
   final case class Run(sink: String, dir: String)
 
-  private val runIds = new java.util.concurrent.atomic.AtomicLong(0)
-
   private def newRun(s: SparkSession, gate: String): Run = {
-    val id = runIds.incrementAndGet()
-    val root = new org.apache.hadoop.fs.Path(
-      s"$Root/pid_${ProcessHandle.current().pid()}")
+    val root = new org.apache.hadoop.fs.Path(graft.core.Scratch.root)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    fs.deleteOnExit(root) // registers only a path that exists
     // a gate's earlier invocations in this JVM: their results were read
     // before this one started (one JVM never runs a gate concurrently)
     fs.globStatus(new org.apache.hadoop.fs.Path(root, s"${gate}_*"))
       .foreach(st => fs.delete(st.getPath, true))
-    Run(s"${gate}_sink_$id", s"$root/${gate}_$id")
+    val dir = graft.core.Scratch.dir(gate)
+    Run(new java.io.File(dir).getName, dir)
   }
 
   /** `rows` in `n` ordered batches of equal size, the last one shorter. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Catalog.Q
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.functions.{Distances, VectorOps}
 import graft.ops.{Ivf, IvfPq, KnnJoin, Pq, SimSearch, Sq}
 
@@ -119,18 +119,14 @@ object VectorQueries {
     * partition-pruned scan — the round-1 entry rebuilt the index inside
     * every execution. */
   object IvfCache {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, (String, Ivf.IvfModel)]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String, nlist: Int)
         : (org.apache.spark.sql.DataFrame, Ivf.IvfModel) = {
-      val (path, model) = cache.getOrElseUpdate(s"$dir|$nlist", {
+      val (path, model) = Scratch.cached(s"ivf_$nlist", dir) { p =>
         val e = Tables.embeddings(s, dir)
         val m = Ivf.chooseCentroids(e, nlist)
-        val p = "/tmp/graft_ivf/v2_" +
-          graft.core.FixtureStamp.key(s, dir) + s"_$nlist"
         Ivf.buildIndex(e, m, p)
         (p, m)
-      })
+      }
       (Ivf.loadIndex(s, path), model)
     }
   }
@@ -199,21 +195,18 @@ object VectorQueries {
   /** Per-JVM PQ model + persisted codes table (8 subspaces × 256 centroids
     * over the 64-d fixture: 8 bytes/vector, 32× smaller than the floats). */
   object PqCache {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, (String, Pq.PqModel)]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String)
         : (org.apache.spark.sql.DataFrame, Pq.PqModel) = {
-      val (path, model) = cache.getOrElseUpdate(dir, {
+      val (path, model) = Scratch.cached("pq", dir) { p =>
         val e = Tables.embeddings(s, dir)
         // trainPermuted: seeded coordinate-permutation search (OPQ-lite)
         // by measured codes-only recall on the build sample — the winner
         // rides inside the model, so every consumer (ADC scan, rerank
         // path, full-budget exact twin) stays coherent automatically
         val m = Pq.trainPermuted(e, m = 8, ksub = 256)
-        val p = "/tmp/graft_pq/v3_" + graft.core.FixtureStamp.key(s, dir)
         Pq.encode(e, m).write.mode("overwrite").parquet(p)
         (p, m)
-      })
+      }
       (s.read.parquet(path), model)
     }
   }
@@ -277,17 +270,14 @@ object VectorQueries {
   /** Per-JVM 16-byte PQ codes (m=16 subspaces, same trainPermuted
     * pipeline) — the code budget behind `ann_pq16_adc_only_recall_at10`. */
   private object Pq16Cache {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, (String, Pq.PqModel)]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String)
         : (org.apache.spark.sql.DataFrame, Pq.PqModel) = {
-      val (path, model) = cache.getOrElseUpdate(dir, {
+      val (path, model) = Scratch.cached("pq16", dir) { p =>
         val e = Tables.embeddings(s, dir)
         val m = Pq.trainPermuted(e, m = 16, ksub = 256)
-        val p = "/tmp/graft_pq16/v1_" + graft.core.FixtureStamp.key(s, dir)
         Pq.encode(e, m).write.mode("overwrite").parquet(p)
         (p, m)
-      })
+      }
       (s.read.parquet(path), model)
     }
   }
@@ -340,10 +330,9 @@ object VectorQueries {
   /** Per-JVM PQ codes over the variance-concentrated twin, plain and
     * Hadamard-rotated — the pair behind `ann_pq_rot_gain_at10`. */
   private object RotPqCache {
-    private val cache = scala.collection.concurrent.TrieMap[
-      String, ((String, Pq.PqModel), (String, Pq.PqModel))]()
-    def ensure(s: org.apache.spark.sql.SparkSession, dir: String) = {
-      cache.getOrElseUpdate(dir, {
+    def ensure(s: org.apache.spark.sql.SparkSession, dir: String)
+        : ((String, Pq.PqModel), (String, Pq.PqModel)) =
+      Scratch.cached("pqrot", dir) { p =>
         val twin = Tables.embeddings(s, dir)
           .select(col("vec_id"), mrlTrained(col("embedding")).as("embedding"))
           .localCheckpoint(eager = true)
@@ -352,14 +341,11 @@ object VectorQueries {
           .localCheckpoint(eager = true)
         def fit(e: org.apache.spark.sql.DataFrame, tag: String) = {
           val m = Pq.train(e, m = 8, ksub = 256)
-          val p = s"/tmp/graft_pqrot/${tag}_" +
-            graft.core.FixtureStamp.key(s, dir)
-          Pq.encode(e, m).write.mode("overwrite").parquet(p)
-          (p, m)
+          Pq.encode(e, m).write.mode("overwrite").parquet(s"$p/$tag")
+          (s"$p/$tag", m)
         }
         (fit(twin, "plain"), fit(rot, "rot"))
-      })
-    }
+      }
   }
 
   /** The rotation's recall EFFECT as a self-describing observable (the
@@ -402,17 +388,14 @@ object VectorQueries {
 
   /** Per-JVM IVF-PQ model + persisted compressed partitioned index. */
   object IvfPqCache {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, (String, IvfPq.IvfPqModel)]()
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String)
         : (org.apache.spark.sql.DataFrame, IvfPq.IvfPqModel) = {
-      val (path, model) = cache.getOrElseUpdate(dir, {
+      val (path, model) = Scratch.cached("ivfpq", dir) { p =>
         val e = Tables.embeddings(s, dir)
         val m = IvfPq.train(e, nlist = 16)
-        val p = "/tmp/graft_ivfpq/v1_" + graft.core.FixtureStamp.key(s, dir)
         IvfPq.buildIndex(e, m, p)
         (p, m)
-      })
+      }
       (IvfPq.loadIndex(s, path), model)
     }
   }
@@ -486,32 +469,22 @@ object VectorQueries {
     * bucket pipeline five times — 20.5 s of the sf0.1 bench; same pattern
     * and rationale as [[IndexQueries.GroundTruthCache]] / [[DedupQueries.PairsCache]]. */
   object KnnJoinCache {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    private def ensure(s: org.apache.spark.sql.SparkSession, key: String,
-        build: () => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val path = cache.getOrElseUpdate(key, {
-        val p = "/tmp/graft_knnjoin/" + key.replaceAll("[^A-Za-z0-9.]", "_")
-        build().write.mode("overwrite").parquet(p)
-        p
-      })
-      s.read.parquet(path)
-    }
     def exact3(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
-      ensure(s, "exact3_" + graft.core.FixtureStamp.key(s, dir), { () =>
+      Scratch.parquet(s, "knnjoin_exact3", dir) {
         val e = Tables.embeddings(s, dir)
         SimSearch.exactTopK(
           e.select(col("vec_id").as("query_id"), col("embedding")), e, k = 3)
-      })
+      }
     def approx3(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
-      ensure(s, "approx3_" + graft.core.FixtureStamp.key(s, dir), { () =>
+      Scratch.parquet(s, "knnjoin_approx3", dir) {
         val e = Tables.embeddings(s, dir)
         val (buckets, model) = IndexQueries.LshCache.ensure(s, dir)
         KnnJoin.knnJoin(
           e.select(col("vec_id").as("query_id"), col("embedding")),
           e, model, k = 3, corpusRoutes = Some(buckets))
-      })
+      }
   }
 
   /** Exact self-join kNN: EVERY corpus row is a query (top-3 neighbors,

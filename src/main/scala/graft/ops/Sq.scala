@@ -120,17 +120,14 @@ object Sq {
 
   /** Per-JVM model + persisted code table (the family cache pattern). */
   object Cache {
-    private val cache =
-      scala.collection.concurrent.TrieMap[String, (String, SqModel)]()
     def ensure(s: SparkSession, dir: String)
         : (DataFrame, SqModel) = {
-      val (path, model) = cache.getOrElseUpdate(dir, {
+      val (path, model) = graft.core.Scratch.cached("sq", dir) { p =>
         val e = graft.core.Tables.embeddings(s, dir)
         val m = train(e)
-        val p = "/tmp/graft_sq/v1_" + graft.core.FixtureStamp.key(s, dir)
         encode(e, m).write.mode("overwrite").parquet(p)
         (p, m)
-      })
+      }
       (s.read.parquet(path), model)
     }
   }

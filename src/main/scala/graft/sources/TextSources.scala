@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 
 /** Multi-format ingest for the documents corpus: JSONL and CSV readers
   * with EXPLICIT schemas (schema inference re-reads the data and guesses —
@@ -29,32 +29,27 @@ object TextSources {
   def readCsv(s: SparkSession, path: String): DataFrame =
     s.read.option("header", "true").schema(documentsSchema).csv(path)
 
-  /** Per-JVM conversion cache (fixture parquet → the target format under
-    * /tmp) so repeated catalog runs pay the write once. */
-  private val cache = scala.collection.concurrent.TrieMap[String, String]()
-
+  /** Per-JVM conversion of the fixture parquet into the target format,
+    * so repeated catalog runs pay the write once. */
   def jsonlFixture(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate(s"jsonl|$dir", {
-      val p = "/tmp/graft_sources/jsonl_" + graft.core.FixtureStamp.key(s, dir)
+    Scratch.cached("jsonl", dir) { p =>
       Tables.documents(s, dir).write.mode("overwrite").json(p)
       p
-    })
+    }
 
   def csvFixture(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate(s"csv|$dir", {
-      val p = "/tmp/graft_sources/csv_" + graft.core.FixtureStamp.key(s, dir)
+    Scratch.cached("csv", dir) { p =>
       Tables.documents(s, dir).write.mode("overwrite")
         .option("header", "true").csv(p)
       p
-    })
+    }
 
   def readOrc(s: SparkSession, path: String): DataFrame =
     s.read.schema(documentsSchema).orc(path)
 
   def orcFixture(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate(s"orc|$dir", {
-      val p = "/tmp/graft_sources/orc_" + graft.core.FixtureStamp.key(s, dir)
+    Scratch.cached("orc", dir) { p =>
       Tables.documents(s, dir).write.mode("overwrite").orc(p)
       p
-    })
+    }
 }

@@ -457,21 +457,16 @@ object Warc {
     bos.toByteArray
   }
 
-  private val cache = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Per-JVM archive fixture: the documents corpus as 8 concatenated
-    * archive files under /tmp — url `https://www.example.com/doc/<id>`,
-    * date epoch `1000000 + doc_id` seconds, payload the deterministic
-    * [[Html.wrapDocument]] page — so the DuckDB oracle can reconstruct
-    * every record field generatively from the original parquet (no frozen
-    * fixture). Task-side local-file writes: test scaffolding, not the
+    * archive files under this JVM's [[graft.core.Scratch]] root — url
+    * `https://www.example.com/doc/<id>`, date epoch `1000000 + doc_id`
+    * seconds, payload the deterministic [[Html.wrapDocument]] page — so
+    * the DuckDB oracle can reconstruct every record field generatively
+    * from the original parquet (no frozen fixture). Task-side local-file writes: test scaffolding, not the
     * production write path (a crawler writes archives, engines read them). */
   def warcFixture(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate(s"warc|$dir", {
-      val p = "/tmp/graft_sources/warc_" + graft.core.FixtureStamp.key(s, dir)
-      val f = new java.io.File(p)
-      org.apache.commons.io.FileUtils.deleteQuietly(f)
-      f.mkdirs()
+    graft.core.Scratch.cached("warc", dir) { p =>
+      new java.io.File(p).mkdirs()
       Tables.documents(s, dir)
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
         .repartition(8, col("doc_id"))
@@ -489,7 +484,7 @@ object Warc {
           } finally out.close()
         }
       p
-    })
+    }
 
   /** Per-JVM REAL-LAYOUT archive fixture (`q_source_warc_gz`): the same
     * corpus as [[warcFixture]] but in the Common Crawl shape — 8
@@ -502,11 +497,8 @@ object Warc {
     * — compression, HTTP stripping and type filtering must all be exact
     * inverses of this writer. */
   def warcGzFixture(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate(s"warcgz|$dir", {
-      val p = "/tmp/graft_sources/warcgz_" + graft.core.FixtureStamp.key(s, dir)
-      val f = new java.io.File(p)
-      org.apache.commons.io.FileUtils.deleteQuietly(f)
-      f.mkdirs()
+    graft.core.Scratch.cached("warcgz", dir) { p =>
+      new java.io.File(p).mkdirs()
       Tables.documents(s, dir)
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
         .repartition(8, col("doc_id"))
@@ -528,5 +520,5 @@ object Warc {
           } finally out.close()
         }
       p
-    })
+    }
 }

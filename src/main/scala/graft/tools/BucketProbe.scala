@@ -21,7 +21,7 @@ object BucketProbe {
     val users = math.max(n / 100, 1)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.warehouse.dir", graft.core.Scratch.dir("warehouse"))
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
@@ -53,10 +53,12 @@ object BucketProbe {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
 
     // same join on plain parquet: shuffles both sides at read time
-    synth(1).write.mode("overwrite").parquet("/tmp/graft_plain_l")
-    synth(2).write.mode("overwrite").parquet("/tmp/graft_plain_r")
-    val pl = spark.read.parquet("/tmp/graft_plain_l")
-    val pr = spark.read.parquet("/tmp/graft_plain_r")
+    val (plainL, plainR) =
+      (graft.core.Scratch.dir("plain_l"), graft.core.Scratch.dir("plain_r"))
+    synth(1).write.mode("overwrite").parquet(plainL)
+    synth(2).write.mode("overwrite").parquet(plainR)
+    val pl = spark.read.parquet(plainL)
+    val pr = spark.read.parquet(plainR)
     val plain = pl.join(pr, Seq("user_id"))
       .groupBy("user_id").agg(count(lit(1)).as("pairs"))
     val (nP, tP) = time(plain.collect().length)

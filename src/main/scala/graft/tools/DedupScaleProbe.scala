@@ -1066,17 +1066,16 @@ object DedupScaleProbe {
         pairs, allDocs.join(pairDocs, Seq("doc_id"), "left_semi"))
     }
 
+    val pruneRoot = graft.core.Scratch.dir("crawlprune")
     def runShape(
         tag: String,
         pairsDelta: (org.apache.spark.sql.DataFrame,
           org.apache.spark.sql.DataFrame,
           org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)
         : (org.apache.spark.sql.DataFrame, Seq[Double], Seq[Double]) = {
-      val root = s"/tmp/graft_crawlprune/$tag"
+      val root = s"$pruneRoot/$tag"
       val (docStore, bandStore, labelStore) =
         (s"$root/docs", s"$root/bands", s"$root/labels")
-      val rp = new org.apache.hadoop.fs.Path(root)
-      rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
       val walls = Seq.newBuilder[Double]
       val mbs = Seq.newBuilder[Double]
       (0 until epochs).foreach { e =>
@@ -1117,7 +1116,7 @@ object DedupScaleProbe {
     // their originals one epoch back (two contiguous id ranges, the
     // shape the doc_id-clustered layout serves).
     val finalDocs = graft.streaming.StreamOps
-      .currentCrawlDocs(spark, "/tmp/graft_crawlprune/pruned/docs").get
+      .currentCrawlDocs(spark, s"$pruneRoot/pruned/docs").get
       .select(col("doc_id"), array_join(col("kept"), " ").as("text"))
     val lastDelta = ((n - perEpoch) until n).filter(_ % 17 == 0).map(_.toLong)
     val endpointIds = (lastDelta ++ lastDelta.map(_ - perEpoch)).sorted

@@ -36,8 +36,7 @@ object EngineScaleProbe {
       r
     }
 
-    val path = s"/tmp/graft_engine_scale_$n"
-    ZebraEngine.destroy(path)
+    val path = graft.core.Scratch.dir(s"engine_scale_$n")
     val eng = ZebraEngine.create(spark, path, EngineConfig(dim = 64))
 
     val bulk = n * 8 / 10
@@ -66,8 +65,7 @@ object EngineScaleProbe {
     // rerank law end to end — a fixed 32·k shortlist decayed to recall
     // 0.41 at 1.6M (SURVEY §8.2); the law must hold ≥ 0.99 with no
     // explicit searchK.
-    val pathQ = s"/tmp/graft_engine_scale_ivfpq_$n"
-    ZebraEngine.destroy(pathQ)
+    val pathQ = graft.core.Scratch.dir(s"engine_scale_ivfpq_$n")
     val engQ = ZebraEngine.create(
       spark, pathQ, EngineConfig(dim = 64, indexKind = "ivfpq"))
     time(s"ivfpq_ingest_$n")(engQ.insertRecords(synth(0, n)))
@@ -88,7 +86,7 @@ object EngineScaleProbe {
     val vecsP = spark.read.parquet(s"$path/vectors")
     val model2 = time("raw_build")(
       graft.index.LshForest.build(vecsP, graft.index.LshForest.Options(), vecId = "id"))
-    val p2 = s"/tmp/graft_engine_scale_raw_$n"
+    val p2 = graft.core.Scratch.dir(s"engine_scale_raw_$n")
     time("raw_write")(
       graft.index.LshForest.writeIndex(vecsP, model2, p2, vecId = "id"))
     val b2 = graft.index.LshForest.loadIndex(spark, p2)

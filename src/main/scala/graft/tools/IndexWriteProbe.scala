@@ -34,7 +34,7 @@ object IndexWriteProbe {
     time("route_only")(
       LshForest.bucketTable(vecs, model).count())
     time("write_current")(
-      LshForest.writeIndex(vecs, model, s"/tmp/graft_iwp_cur_$n"))
+      LshForest.writeIndex(vecs, model, graft.core.Scratch.dir(s"iwp_cur_$n")))
     spark.stop()
   }
 }

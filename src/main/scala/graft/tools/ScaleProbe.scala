@@ -42,7 +42,7 @@ object ScaleProbe {
 
     val nt = if (args.length > 1) args(1).toInt else 15
     val (model, tBuild) = time(LshForest.build(vecs, LshForest.Options(numTrees = nt)))
-    val path = s"/tmp/graft_scale_probe_$n"
+    val path = graft.core.Scratch.dir(s"scale_probe_$n")
     val (_, tIndex) = time(LshForest.writeIndex(vecs, model, path))
     val buckets = LshForest.loadIndex(spark, path)
 

@@ -27,8 +27,8 @@ object ZorderProbe {
       (xxhash64(col("id"), lit(2)) % 4096).as("y"),
       col("id").as("payload"))
       .withColumn("x", abs(col("x"))).withColumn("y", abs(col("y")))
-    val linPath = s"/tmp/graft_zorder_lin_$n"
-    val zPath = s"/tmp/graft_zorder_z_$n"
+    val linPath = graft.core.Scratch.dir(s"zorder_lin_$n")
+    val zPath = graft.core.Scratch.dir(s"zorder_z_$n")
     val files = 64
     // small row groups (64 KB ≈ 2.5k rows) give BOTH layouts the same
     // sub-file pruning granularity, scaled so one row group's z-region is

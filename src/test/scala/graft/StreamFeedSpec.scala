@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{RetrievalQueries, StreamFeed}
+import graft.core.Scratch
 
 /** The exec gates' replay harness: the query is stopped whatever the feed
   * does, every invocation gets its own dirs under this JVM's root, no
@@ -52,7 +53,7 @@ class StreamFeedSpec extends AnyFunSuite {
     assert(rows1 == rows2)
     assert(dirs1.size == 1 && dirs2.size == 1 && dirs1 != dirs2)
     (dirs1 ++ dirs2).foreach(d =>
-      assert(d.contains(s"${StreamFeed.Root}/pid_$pid/"), s"$d is not this JVM's"))
+      assert(d.contains(s"${Scratch.Base}/pid_$pid/"), s"$d is not this JVM's"))
     assert(spark.streams.active.isEmpty)
   }
 
@@ -61,7 +62,7 @@ class StreamFeedSpec extends AnyFunSuite {
     // own pid, and in the shared run_<n> dirs of builds that numbered runs
     // per JVM (so every JVM's first run used run_1)
     val other = ProcessHandle.current().parent().get().pid()
-    val planted = (s"${StreamFeed.Root}/pid_$other/stream_bm25_exec_1/store" +:
+    val planted = (s"${Scratch.Base}/pid_$other/stream_bm25_exec_1/store" +:
       (1 to 8).map(n => s"/tmp/graft_stream_postings/run_$n"))
       .map(new File(_))
     val markers = planted.map { d =>
