@@ -17,30 +17,100 @@ import graft.engine.ZebraEngine
   */
 object StreamOps {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
-    * the previous value after. A streaming query pins its state-store
-    * partition count to this conf at START, so the gate's replay
-    * executions (thousands of rows through 4 micro-batches) paid
-    * 4 batches × 32 partitions of state commit + incremental-planning
-    * overhead for state that fits in a handful of partitions — measured
-    * ~40% of stream_*_exec wall at sf0.1. Production streams size this
-    * to their key cardinality instead; the semantics are
-    * partition-count-independent (gated by the same oracle either way). */
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `n` and no
+    * watermark-only micro-batches, restoring both after. A query pins its
+    * state-store partition count to this conf at START: the gates' replays
+    * paid 4 batches × 32 partitions of state commit and planning for state
+    * that fits a handful (~40% of stream_*_exec wall at sf0.1). The
+    * semantics are partition-count-independent. No gate waits on the
+    * watermark-only batch: the eager-emitting gates never do, and the
+    * watermark-riding ones (stream_sessions_exec, stream_funnel_exec)
+    * flush with two far-future sentinel DATA batches instead. */
   def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)
+      (body: => T): T =
+    withConfs(s, Seq("spark.sql.shuffle.partitions" -> n.toString,
+      NoDataBatches -> "false"))(body)
+
+  /** Run `body` with the session confs the near-dup `transformWithState`
+    * streams ([[nearDupPairsStream]], [[embNearDupStream]]) run under,
+    * restoring the previous values after:
+    *  - the RocksDB state-store provider, which `transformWithState`
+    *    requires. It is also what a long-lived stream runs anyway: the
+    *    default HDFS-backed store clones its whole in-memory map per
+    *    batch version, an O(total state) tax per batch;
+    *  - changelog checkpointing: each commit writes the batch's changed
+    *    keys to a changelog file instead of flushing, checkpointing and
+    *    zipping a RocksDB snapshot per state partition;
+    *  - no watermark-only micro-batches. Without it every data batch is
+    *    followed by an empty batch that only advances the watermark and
+    *    fires expiry timers, with its own planning, WAL/offset commit and
+    *    per-partition state commit. Dropping it is output-neutral for
+    *    these operators: their `handleInputRows` prunes priors at the
+    *    batch's eviction watermark in the call (`ts >= wm - 1`), and
+    *    `transformWithState` handles new data before timers, so an
+    *    arrival compares against the same live set either way; expired
+    *    state is reclaimed by the next data batch's timers instead.
+    *
+    * Do NOT wrap an operator whose OUTPUT waits on the watermark (a
+    * windowed append aggregation, a timer-emitting `transformWithState`):
+    * without the watermark-only batch its last rows stay unemitted until
+    * more data arrives. The confs are read at query START, so wrapping
+    * `.start()` + the drain is sufficient.
+    *
+    * The session conf is SHARED mutable state: a query started on the
+    * same session while a wrap holds its temporary confs, or restores
+    * them mid-start, could run under the wrong provider. Wraps therefore
+    * share a JVM-wide read-write lock. A wrap that MUTATES the confs
+    * holds the write lock for set → body → restore; a wrap that finds all
+    * three already set (production: set in the session builder) runs its
+    * body under a READ lock, so such a session keeps concurrent streams,
+    * and what it observed cannot be another wrap's temporary. Nesting on
+    * one thread is legal: write→write is reentrant, and a wrap nested
+    * under a write hold sees the confs set and takes the read lock. The
+    * one shape needing a read→write upgrade, which ReentrantReadWriteLock
+    * cannot do, is CROSS-SESSION nesting: a pass-through body (session A)
+    * wrapping a session B whose confs are not set. It throws instead of
+    * self-deadlocking (wrap B first, or set B's confs in its builder). */
+  def withRocksDbStateStore[T](s: org.apache.spark.sql.SparkSession)
       (body: => T): T = {
-    // noDataMicroBatches: after every data batch the engine schedules an
-    // extra empty batch to advance the watermark and flush state whose
-    // emission WAITS on it. That flush is pure per-batch overhead here
-    // (measured ~30% of exec-entry wall): the eager-emitting gates
-    // (content dedup, fMGWS pair/cap output) never wait on the watermark,
-    // and the watermark-riding gates (stream_sessions_exec,
-    // stream_funnel_exec) flush with TWO far-future sentinel DATA batches
-    // instead — the first advances the watermark, the second's batch
-    // emits/fires timeouts against it (see those entries' scaladocs), so
-    // no caller needs the engine's empty batches.
-    val confs = Seq(
-      "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    def held =
+      RocksDbConfs.forall { case (k, v) => s.conf.getOption(k).contains(v) }
+    val read = rocksLock.readLock()
+    read.lock()
+    // `finally` runs after `body`: the pass-through runs under the lock
+    try { if (held) return body }
+    finally read.unlock()
+    if (rocksLock.getReadHoldCount > 0)
+      throw new IllegalStateException(
+        "withRocksDbStateStore: cross-session nesting — this thread is " +
+          "inside a pass-through wrap (read lock held) and the inner " +
+          "session's state-store confs are not set; acquiring the write " +
+          "lock here would self-deadlock (no read->write upgrade). Wrap " +
+          "that session first, or set its confs in the builder.")
+    val write = rocksLock.writeLock()
+    write.lock()
+    // re-check under the write lock: the confs may have changed between
+    // the read-locked check and acquiring the write lock
+    try { if (held) body else withConfs(s, RocksDbConfs)(body) }
+    finally write.unlock()
+  }
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  private val RocksDbConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true",
+    NoDataBatches -> "false")
+
+  private val rocksLock =
+    new java.util.concurrent.locks.ReentrantReadWriteLock()
+
+  /** Run `body` with `confs` set on the session, restoring each previous
+    * value (or its absence) after, also when `body` throws. */
+  private def withConfs[T](s: org.apache.spark.sql.SparkSession,
+      confs: Seq[(String, String)])(body: => T): T = {
     val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach {
@@ -48,76 +118,6 @@ object StreamOps {
       case (k, None) => s.conf.unset(k)
     }
   }
-
-  /** Run `body` with the RocksDB state-store provider, restoring the
-    * previous provider after. `transformWithState` (the arbitrary-state
-    * operator behind [[embNearDupStream]]) requires it — and it is the
-    * provider a long-lived production stream runs anyway (the default
-    * HDFS-backed store clones its whole in-memory map per batch version,
-    * an O(total state) tax per batch). The conf is read at query START,
-    * so wrapping `.start()` + the drain is sufficient.
-    *
-    * The session conf is SHARED mutable state: a concurrent query start
-    * on the same session while this wrapper holds the temporary provider
-    * (or an overlapping wrap restoring it mid-body) could start under the
-    * wrong provider and fail at runtime. Wraps coordinate on a JVM-wide
-    * read-write lock: a wrap that MUTATES the conf holds the write lock
-    * for set → body → restore, while a wrap that finds RocksDB already
-    * configured runs its body under a READ lock — so a session
-    * permanently configured for RocksDB (production: provider set in the
-    * session builder) keeps concurrent streaming, and the already-rocks
-    * observation is still race-free (no mutating wrap is mid-flight while
-    * any read lock is held, so the observed value is the session's own
-    * stable setting, never another wrap's temporary). Nesting on one
-    * thread stays legal: write→write is reentrant, and a nested wrap
-    * under a held write lock sees rocks already set and takes the read
-    * lock, which the lock permits alongside its own write hold. A
-    * read-to-write upgrade cannot arise for one session — under a read
-    * lock that session's provider IS RocksDB, so nested wraps on it take
-    * the pass-through path. The one shape that would need an upgrade is
-    * CROSS-SESSION nesting: a pass-through body (session A, read lock
-    * held) wrapping a DIFFERENT session B that is not yet RocksDB.
-    * ReentrantReadWriteLock cannot upgrade, so that acquire would
-    * self-deadlock — guarded below with a loud IllegalStateException
-    * (wrap B before A, or configure B's provider in its builder; no
-    * caller in this codebase nests across sessions). */
-  def withRocksDbStateStore[T](s: org.apache.spark.sql.SparkSession)
-      (body: => T): T = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val rocks =
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val read = rocksLock.readLock()
-    read.lock()
-    // finally runs AFTER `body` is evaluated, so the pass-through body
-    // executes entirely under the read lock.
-    try { if (s.conf.getOption(k).contains(rocks)) return body }
-    finally read.unlock()
-    if (rocksLock.getReadHoldCount > 0)
-      throw new IllegalStateException(
-        "withRocksDbStateStore: cross-session nesting — this thread is " +
-          "inside a pass-through wrap (read lock held) and the inner " +
-          "session's provider is not RocksDB; acquiring the write lock " +
-          "here would self-deadlock (no read->write upgrade). Wrap the " +
-          "non-RocksDB session first, or set its provider in the builder.")
-    val write = rocksLock.writeLock()
-    write.lock()
-    try {
-      // re-read under the write lock: the conf may have changed between
-      // the read-locked check and acquiring the write lock
-      val prev = s.conf.getOption(k)
-      if (prev.contains(rocks)) body
-      else {
-        s.conf.set(k, rocks)
-        try body finally prev match {
-          case Some(v) => s.conf.set(k, v)
-          case None => s.conf.unset(k)
-        }
-      }
-    } finally write.unlock()
-  }
-
-  private val rocksLock =
-    new java.util.concurrent.locks.ReentrantReadWriteLock()
 
   /** Event-time windowed aggregation with a watermark: events per hour per
     * type (count + value sum). On a stream this is incremental state with

@@ -1124,6 +1124,126 @@ class StreamingSpec extends AnyFunSuite {
     assert(boiler > 0L, "cap-2 ring over 6 identical texts must report drops")
   }
 
+  test("near-dup streams under withRocksDbStateStore: one micro-batch per " +
+      "fed batch, changelog commits, pairs equal the watermark-only-batch run") {
+    import org.apache.spark.sql.{DataFrame, Encoder, Row}
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    // One run of `query` over `batches` under the wrapper, with a
+    // checkpoint dir; `noDataBatches` re-enables the watermark-only batch
+    // inside it (the wrapper restores the conf after).
+    def wrappedRun[T: Encoder](batches: Seq[Seq[T]], sink: String,
+        noDataBatches: Boolean)(query: DataFrame => DataFrame)
+        : (Set[Row], Array[StreamingQueryProgress], String) = {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val mem = MemoryStream[T]
+      val ckpt = tmpCkpt(sink)
+      val progress = StreamOps.withRocksDbStateStore(spark) {
+        if (noDataBatches)
+          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+        val q = query(mem.toDF()).writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", ckpt).outputMode("append").start()
+        try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+        finally q.stop()
+        q.recentProgress
+      }
+      (spark.table(sink).distinct().collect().toSet, progress, ckpt)
+    }
+
+    // Docs one second apart under a 5-second lateness: a twin pairs with a
+    // prior inside the horizon (2→12, 3→13, 4→14) and not with one that
+    // expired a batch earlier (0→10, 1→11), so timers fire mid-stream.
+    def twinFeed[T](doc: Int => T, twin: Int => T)
+        : Seq[Seq[(Timestamp, Long, T)]] = {
+      val t0 = 30L * 86400000L
+      def at(s: Int, id: Long, v: T) = (new Timestamp(t0 + s * 1000L), id, v)
+      Seq(
+        Seq(at(0, 0L, doc(0)), at(1, 1L, doc(1)), at(2, 2L, doc(2))),
+        Seq(at(10, 3L, doc(3)), at(11, 12L, twin(2))),
+        Seq(at(12, 10L, twin(0)), at(13, 13L, twin(3))),
+        Seq(at(30, 4L, doc(4))),
+        Seq(at(31, 14L, twin(4)), at(32, 11L, twin(1))))
+    }
+
+    def text(i: Int) = (0 until 40).map(w => s"w${i}x$w").mkString(" ")
+    val dim = 8
+    def vec(seed: Int): Seq[Float] =
+      (0 until dim).map(i => (((seed * 31 + i) * 2654435761L % 2001) - 1000)
+        .toFloat / 1000f)
+    val model = graft.index.LshForest.build(
+      Seq(0L -> vec(1), 1L -> vec(2), 2L -> vec(3)).toDF("vec_id", "embedding"))
+    // 3 sign bits split each tree's one leaf, so unlike vectors land in
+    // different buckets and an untouched bucket's timer can fire
+    val cuts = model.trees.indices
+      .map(t => (t, 0) -> (3, Array.fill(3)(0.0))).toMap
+    val textFeed = twinFeed[String](text, i => text(i) + " zzztwin")
+    val vecFeed = twinFeed[Seq[Float]](vec, vec)
+    def sig(in: DataFrame) = StreamOps.nearDupPairsStream(
+      in.toDF("ts", "doc_id", "text"), lateness = "5 seconds")
+    def emb(in: DataFrame) = StreamOps.embNearDupStream(
+      in.toDF("ts", "vec_id", "embedding"), model, cuts,
+      lateness = "5 seconds")
+    val runs = Seq(
+      ("sig", wrappedRun(textFeed, "tws_sig_one", false)(sig),
+        wrappedRun(textFeed, "tws_sig_nodata", true)(sig)),
+      ("emb", wrappedRun(vecFeed, "tws_emb_one", false)(emb),
+        wrappedRun(vecFeed, "tws_emb_nodata", true)(emb)))
+    runs.foreach { case (op, (pairs, progress, ckpt), (pairsND, progressND, _)) =>
+      val got = pairs.map(r => (r.getLong(0), r.getLong(1)))
+      assert(got == Set((2L, 12L), (3L, 13L), (4L, 14L)), s"$op pairs: $got")
+      assert(pairs == pairsND,
+        s"$op: dropping the watermark-only batch changed the output")
+      val batches = progress.map(_.batchId).distinct
+      assert(batches.length == textFeed.length,
+        s"$op: ${batches.length} micro-batches, ${textFeed.length} fed")
+      assert(progressND.map(_.batchId).distinct.length > textFeed.length,
+        s"$op: the reference run made no watermark-only batch")
+      val expired = progress.flatMap(_.stateOperators)
+        .flatMap(o => Option(o.customMetrics.get("numExpiredTimers")))
+        .map(_.longValue).sum
+      assert(expired > 0, s"$op: no timer fired")
+      val changelogs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+        .filter(_.toString.endsWith(".changelog")).count()
+      assert(changelogs > 0, s"$op: no .changelog file under $ckpt/state")
+    }
+  }
+
+  test("withRocksDbStateStore restores all three confs after a throwing " +
+      "body, and passes through without writing when they all hold") {
+    val confs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    def current = confs.map { case (k, _) => spark.conf.getOption(k) }
+    val before = current
+    try {
+      // one conf set to another value, the others unset or default
+      spark.conf.set(confs(2)._1, "true")
+      val outer = current
+      val e = intercept[IllegalStateException] {
+        StreamOps.withRocksDbStateStore(spark) {
+          assert(current == confs.map(c => Some(c._2)))
+          throw new IllegalStateException("body broke")
+        }
+      }
+      assert(e.getMessage == "body broke")
+      assert(current == outer, s"confs not restored: $current vs $outer")
+
+      // all three hold: the body's own conf write survives, so the wrap
+      // restored nothing
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      StreamOps.withRocksDbStateStore(spark) {
+        spark.conf.set(confs(1)._1, "false")
+      }
+      assert(spark.conf.get(confs(1)._1) == "false",
+        "a pass-through wrap wrote the session conf")
+    } finally confs.zip(before).foreach {
+      case ((k, _), Some(v)) => spark.conf.set(k, v)
+      case ((k, _), None) => spark.conf.unset(k)
+    }
+  }
+
   // -----------------------------------------------------------------------
   // Checkpoint-restart recovery for the flatMapGroupsWithState operators
   // (round 12 — completing the recovery story the transformWithState tests

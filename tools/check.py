@@ -17,6 +17,11 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 ok, bad, rows_only = [], [], []
+# A query that threw in Verify writes no dump: fail closed on it, or a
+# lost query would pass unnoticed.
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(out_dir, name)):
+        bad.append((name, "no dump: the query failed in Verify or never ran"))
 for name in sorted(os.listdir(out_dir)):
     d = os.path.join(out_dir, name)
     if not os.path.isdir(d):
