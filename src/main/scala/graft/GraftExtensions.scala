@@ -27,9 +27,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // The kNN index rewrite (SURVEY §4.2 custom piece 3): naive
     // ORDER-BY-distance-LIMIT-k SQL over a registered corpus hits the LSH
     // index path. No-op until KnnIndexRegistry.register names a corpus;
-    // opt-out via spark.graft.knn.rewrite.enabled=false. For sessions
-    // built without this extension, graft.plans.KnnIndexRewrite.install
-    // adds the same rule through spark.experimental.
+    // opt-out via Spark's own
+    // spark.sql.optimizer.excludedRules=graft.plans.KnnIndexRewrite. For
+    // sessions built without this extension,
+    // graft.plans.KnnIndexRewrite.install adds the same rule through
+    // spark.experimental.
     ext.injectOptimizerRule(s => new graft.plans.KnnIndexRewrite(s))
   }
 }

@@ -84,11 +84,6 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** [[verifyJaccard]] over an arbitrary (doc_id, text) corpus — probe
-    * surface (DedupScaleProbe's delta-vs-full comparison). */
-  private[graft] def verifyJaccardProbe(pairs: DataFrame, docs: DataFrame): DataFrame =
-    verifyJaccard(pairs, shingles(docs))
-
   /** Candidate pairs = docs sharing any band bucket (the ONLY pair
     * generation — never all-pairs), then verified with true n-gram Jaccard
     * computed on the candidate set alone. */
@@ -442,21 +437,13 @@ ${affineSigCtes()},
     * set, not just the planted diagonal. Output: one row per
     * contaminated corpus doc with its benchmark match count and worst
     * (max) Jaccard. */
-  /** The fuzzy-decontamination pipeline over arbitrary (doc_id, text)
-    * frames — the entry and the probe's decontam leg share it, so the
-    * probe always measures the entry's actual plan. Benchmark doc_ids
-    * must all be >= `benchFloor` and corpus doc_ids below it (the
-    * bench-involving filter keys on the split). */
-  private[graft] def decontaminateFuzzyFrom(
-      docs: DataFrame, bench: DataFrame, benchFloor: Long,
-      family: String = "affine"): DataFrame = {
-    require(family == "md5" || family == "affine",
-      s"unknown signature family: $family") // a silent fallback would let
-    // the probe misattribute its recall/wall numbers to the wrong kernel
-    val bandFn: DataFrame => DataFrame =
-      if (family == "md5") bandsOf else bandsOfFast
-    val benchBands = bandFn(bench)
-    val allBands = bandFn(docs).unionAll(benchBands)
+  /** The fuzzy-decontamination pipeline over (doc_id, text) frames.
+    * Benchmark doc_ids must all be >= `benchFloor` and corpus doc_ids
+    * below it (the bench-involving filter keys on the split). */
+  private def decontaminateFuzzyFrom(
+      docs: DataFrame, bench: DataFrame, benchFloor: Long): DataFrame = {
+    val benchBands = bandsOfFast(bench)
+    val allBands = bandsOfFast(docs).unionAll(benchBands)
     minhashPairsDelta(docs.unionAll(bench), allBands, benchBands)
       .filter(col("doc_b") >= benchFloor && col("doc_a") < benchFloor)
       .groupBy("doc_a")
@@ -1330,13 +1317,11 @@ ${affineSigCtes("MATERIALIZED")},
               0, (acc, x) -> acc + x)"""))
           .as("sub_key"))
 
-  /** Delta-involving verified pair set over sub-keyed bucket tables — the
-    * shared tail of `dedup_embedding_incremental` and the probe's embdelta
-    * leg (ONE definition, so the probe always measures the entry's actual
-    * pipeline): delta rows join the full keyed table on the bucket,
-    * ordered-dedup'd, cosine-verified at the near-dup threshold.
-    * `vectors` must cover both sides (base ∪ delta). */
-  private[graft] def embeddingDeltaPairs(
+  /** Delta-involving verified pair set over sub-keyed bucket tables, the
+    * tail of `dedup_embedding_incremental`: delta rows join the full keyed
+    * table on the bucket, ordered-dedup'd, cosine-verified at the near-dup
+    * threshold. `vectors` must cover both sides (base ∪ delta). */
+  private def embeddingDeltaPairs(
       baseKeyed: DataFrame, deltaKeyed: DataFrame,
       vectors: DataFrame): DataFrame = {
     val all = baseKeyed.unionAll(deltaKeyed)

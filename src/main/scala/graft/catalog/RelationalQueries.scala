@@ -837,7 +837,7 @@ object RelationalQueries {
       FROM events WHERE user_id < 50
       ORDER BY user_id, us, event_id"""))
 
-  /** The Z-order (Morton) kernel behind [[graft.ops.Layout.zorderWrite]],
+  /** The Z-order (Morton) kernel [[graft.ops.Layout.zValue]],
     * hash-gated: pure integer mask-cascade arithmetic replayed identically
     * in DuckDB (tools/ZorderProbe measures what the layout buys: 5x scan
     * reduction on random 2-D boxes at 4M rows). */

@@ -308,9 +308,8 @@ final class ZebraEngine private (
           case Some(model) if hasData(indexDir) =>
             val sk = where match {
               case Some(_) =>
-                val base = searchK.getOrElse( // keep in lockstep with LshForest.topK's default
-                  math.max(k * model.numTrees,
-                    math.max(4 * k, model.opts.maxNodeSize)))
+                val base =
+                  searchK.getOrElse(LshForest.defaultSearchK(k, model))
                 Some(LshForest.scaledBudget(base, keptCount, count()))
               case None => searchK
             }

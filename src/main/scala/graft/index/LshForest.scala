@@ -584,9 +584,23 @@ object LshForest {
     * larger batches keep the fully distributed probe pipeline. */
   private[graft] val SmallBatchCap = 128
 
+  /** Default candidate budget: k·numTrees sample points per tree — Annoy's
+    * documented serving default (search_k = n·n_trees), floored by the old
+    * 4·k knee. The 4·k default was measured on CLUSTERED corpora (where
+    * neighbors concentrate in few leaves and the probes saturate early —
+    * endurance probes hold recall 1.0 with it at 1M vectors); on a UNIFORM
+    * corpus the same budget decays with corpus size (LshTune at the 2,000-
+    * vector sf0.1 fixture: 0.765 at searchK=40 vs 0.975 at k·numTrees=150,
+    * the QUALITY_r9 finding). k·numTrees keeps the budget corpus-
+    * independent — the probe walk is still O(k·numTrees·depth) per query —
+    * while covering the geometry-adversarial case. Callers trade recall
+    * for latency by passing searchKOpt explicitly. */
+  private[graft] def defaultSearchK(k: Int, model: ForestModel): Int =
+    math.max(k * model.numTrees, math.max(4 * k, model.opts.maxNodeSize))
+
   /** `search` (reference: lsh.rs:544-565): candidates from every tree,
-    * exact-metric rerank, take k. searchK defaults to the leaf budget
-    * max(k, maxNodeSize) per tree.
+    * exact-metric rerank, take k. searchK defaults to
+    * [[defaultSearchK]] per tree.
     *
     * The candidate pipeline executes exactly ONCE via an eager
     * localCheckpoint — the probe + bucket join runs a single time and its
@@ -607,19 +621,7 @@ object LshForest {
       searchKOpt: Option[Int] = None,
       queryId: String = "query_id", vecId: String = "vec_id",
       roundTo: Int = 4): DataFrame = {
-    // Default candidate budget: k·numTrees sample points per tree — Annoy's
-    // documented serving default (search_k = n·n_trees), floored by the old
-    // 4·k knee. The 4·k default was measured on CLUSTERED corpora (where
-    // neighbors concentrate in few leaves and the probes saturate early —
-    // endurance probes hold recall 1.0 with it at 1M vectors); on a UNIFORM
-    // corpus the same budget decays with corpus size (LshTune at the 2,000-
-    // vector sf0.1 fixture: 0.765 at searchK=40 vs 0.975 at k·numTrees=150,
-    // the QUALITY_r9 finding). k·numTrees keeps the budget corpus-
-    // independent — the probe walk is still O(k·numTrees·depth) per query —
-    // while covering the geometry-adversarial case. Callers trade recall
-    // for latency by passing searchKOpt explicitly.
-    val searchK = searchKOpt.getOrElse(
-      math.max(k * model.numTrees, math.max(4 * k, model.opts.maxNodeSize)))
+    val searchK = searchKOpt.getOrElse(defaultSearchK(k, model))
     // Latency path: a small query batch (the reference CLI's k-NN lookups,
     // the engine's per-call batches) never needs the distributed probe
     // pipeline — one bounded take() decides, and the take's partial scan is

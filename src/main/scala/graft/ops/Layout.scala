@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering — the
@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * coordinates' min/max tight per file and per row group, so a box
   * predicate (a BETWEEN .. AND b BETWEEN ..) skips most of the data at
   * scan time, where a linear sort only prunes its leading column.
-  * (The same trick Delta/Iceberg OPTIMIZE ZORDER applies; here it is a
-  * plain write option on any DataFrame.)
+  * (The same trick Delta/Iceberg OPTIMIZE ZORDER applies; here the key
+  * is a plain Column, so any write can range-partition and sort by it.)
   */
 object Layout {
 
@@ -35,17 +35,4 @@ object Layout {
     val cb = b.cast("long").bitwiseAND(lit(mask))
     spread16(ca).bitwiseOR(shiftleft(spread16(cb), 1))
   }
-
-  /** Write `df` Z-ordered on (a, b): range-partition by the Morton key
-    * (balanced files in z-space) and sort within partitions so row groups
-    * inherit the locality. One shuffle — the price any clustering write
-    * pays — then parquet min/max stats do the pruning forever after. */
-  def zorderWrite(
-      df: DataFrame, path: String, a: String, b: String,
-      numFiles: Int, bits: Int = 16): Unit =
-    df.withColumn("_z", zValue(col(a), col(b), bits))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 }

@@ -104,7 +104,7 @@ object Pq {
 
   /** Candidate `p` of [[trainPermuted]]'s seeded Fisher–Yates family
     * (candidate 0 = identity = null). Deterministic in (dim, seed, p). */
-  def seededPerm(dim: Int, seed: Long, p: Int): Array[Int] =
+  private def seededPerm(dim: Int, seed: Long, p: Int): Array[Int] =
     if (p == 0) null
     else {
       val perm = Array.tabulate(dim)(identity)
@@ -124,18 +124,6 @@ object Pq {
       }
       perm
     }
-
-  /** Codebooks for one FIXED permutation — [[trainPermuted]]'s
-    * per-candidate unit, exposed for probes measuring the selection
-    * family's ceiling. */
-  def trainWithPerm(
-      vectors: DataFrame, perm: Array[Int], m: Int = 8, ksub: Int = 16,
-      seed: Long = 42L, iters: Int = 10, sampleCap: Int = 4096,
-      vecId: String = "vec_id"): PqModel = {
-    val (sample, subdim) = sampleFor(vectors, m, ksub, seed, sampleCap, vecId)
-    PqModel(booksFor(sample.map(applyPerm(_, perm)), m, subdim, ksub, iters),
-      perm)
-  }
 
   /** OPQ-lite, the zero-float-parameter form: choose the coordinate
     * PERMUTATION — out of `nPerms` seeded Fisher–Yates candidates,

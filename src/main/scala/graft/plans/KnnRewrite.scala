@@ -46,8 +46,11 @@ import graft.index.LshForest
   * ([[graft.ops.SimSearch.takeTopK]]), so plans whose trailing sort key
   * is the id column (or whose boundary is tie-free) are exact.
   *
-  * Opt-out: `SET spark.graft.knn.rewrite.enabled=false` (default true;
-  * the rule additionally never fires on corpora nobody registered).
+  * Opt-out: Spark's own
+  * `SET spark.sql.optimizer.excludedRules=graft.plans.KnnIndexRewrite`,
+  * which drops the rule by name whether it came in through
+  * [[graft.GraftExtensions]] or [[KnnIndexRewrite.install]] (the rule
+  * additionally never fires on corpora nobody registered).
   */
 object KnnIndexRegistry {
 
@@ -110,10 +113,6 @@ class KnnIndexRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KnnIndexRewrite.rewriting.get()) return plan
-    val enabled =
-      try session.conf.get("spark.graft.knn.rewrite.enabled", "true").toBoolean
-      catch { case NonFatal(_) => true }
-    if (!enabled) return plan
     plan.transformDown {
       // Limit.unapply would also match, but matching the full
       // GlobalLimit/LocalLimit pair keeps the replaced region explicit.

@@ -123,10 +123,11 @@ class KnnRewriteSpec extends AnyFunSuite {
 
   test("opt-out config disables the rewrite; re-enable restores it") {
     withIndex(Some(Int.MaxValue)) {
-      spark.conf.set("spark.graft.knn.rewrite.enabled", "false")
-      try assert(!hasJoin(naivePlan()), "rewrite fired while disabled")
-      finally spark.conf.set("spark.graft.knn.rewrite.enabled", "true")
-      assert(hasJoin(naivePlan()), "rewrite did not restore after re-enable")
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.KnnIndexRewrite")
+      try assert(!hasJoin(naivePlan()), "rewrite fired while excluded")
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+      assert(hasJoin(naivePlan()), "rewrite did not restore after unset")
     }
   }
 

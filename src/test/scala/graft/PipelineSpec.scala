@@ -70,7 +70,7 @@ class PipelineSpec extends AnyFunSuite {
     val passText = (Seq.fill(48)("ab.") :+ "the" :+ "ab....").mkString(" ")
     val failText = (Seq.fill(48)("ab.") :+ "the" :+ "a.....").mkString(" ")
     val truncText = (Seq.fill(31)("abc") :+ "the" :+ "zzzzzz").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_planted").toString
+    val tmp = SparkTestBase.tmpDir("graft_planted")
     import spark.implicits._
     Seq((1L, passText, "en", "planted", passText.length.toLong),
         (2L, failText, "en", "planted", failText.length.toLong),

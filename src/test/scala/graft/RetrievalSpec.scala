@@ -51,7 +51,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("maintained postings: epochs append, replay no-ops, serving == batch") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("postings").toString
+    val store = SparkTestBase.tmpDir("postings")
     val docs = Seq(
       (1L, "spark joins a window"), (2L, "window window spark"),
       (3L, "nothing relevant here"), (4L, "spark alone"))

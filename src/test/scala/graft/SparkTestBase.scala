@@ -19,4 +19,12 @@ object SparkTestBase {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** A fresh, existing dir under this JVM's [[graft.core.Scratch]] root,
+    * so the JVM deletes it at exit. */
+  def tmpDir(tag: String): String = {
+    val p = graft.core.Scratch.dir(tag)
+    new java.io.File(p).mkdirs()
+    p
+  }
 }

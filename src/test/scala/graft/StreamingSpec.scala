@@ -495,8 +495,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("maintained rollup: streamed deltas converge to the batch aggregate") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("rollup_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rollup_ckpt").toString
+    val store = SparkTestBase.tmpDir("rollup_store")
+    val ckpt = SparkTestBase.tmpDir("rollup_ckpt")
     val wave1 = Seq(("a", 10L), ("a", 5L), ("b", 1L))
     val wave2 = Seq(("a", 2L), ("c", 7L))
     val mem = MemoryStream[(String, Long)]
@@ -561,7 +561,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("maintained components: epochs fold to the union graph; replay no-ops") {
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("cc_store").toString
+    val store = SparkTestBase.tmpDir("cc_store")
     def current() = StreamOps.currentComponents(spark, store).get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // epoch 0: two separate components
@@ -587,7 +587,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("maintained rollup: a replayed epoch is a no-op (no double count)") {
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("rollup_replay").toString
+    val store = SparkTestBase.tmpDir("rollup_replay")
     def current() = StreamOps.currentRollup(spark, store).get.orderBy("k")
     val batch = Seq(("a", 10L), ("b", 1L)).toDF("k", "v")
     StreamOps.applyRollupBatch(batch, 0L, store, Seq("k"), Seq("v"))
@@ -935,7 +935,7 @@ class StreamingSpec extends AnyFunSuite {
   // -----------------------------------------------------------------------
 
   private def tmpCkpt(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag").toString
+    SparkTestBase.tmpDir(s"graft_ckpt_$tag")
 
   test("embNearDupStream: checkpoint restart restores state + timers; " +
       "pair set equals the uninterrupted run") {
@@ -1275,10 +1275,8 @@ class StreamingSpec extends AnyFunSuite {
     def run(stopAfter: Option[Int], tag: String)
         : Set[(Long, Long, Option[Long], Option[Long])] = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_asof_$tag").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_asof_${tag}_out").toString
+      val ckpt = SparkTestBase.tmpDir(s"graft_ckpt_asof_$tag")
+      val outDir = SparkTestBase.tmpDir(s"graft_ckpt_asof_${tag}_out")
       val mem = MemoryStream[(Long, Timestamp, Long, Int, Long)]
       def start() = StreamOps
         .asofStream(mem.toDF().toDF("key", "ts", "us", "side", "id"),
@@ -1333,10 +1331,8 @@ class StreamingSpec extends AnyFunSuite {
 
     def run(stopAfter: Option[Int], tag: String): Set[String] = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_cap_$tag").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_cap_${tag}_out").toString
+      val ckpt = SparkTestBase.tmpDir(s"graft_ckpt_cap_$tag")
+      val outDir = SparkTestBase.tmpDir(s"graft_ckpt_cap_${tag}_out")
       val mem = MemoryStream[(String, Timestamp, String)]
       def start() = StreamOps
         .capPerKey(mem.toDF().toDF("key", "ts", "id"), cap = 2,
@@ -1382,10 +1378,8 @@ class StreamingSpec extends AnyFunSuite {
     def run(stopAfter: Option[Int], tag: String)
         : Map[Long, Seq[(Long, Double, Long)]] = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_topk_$tag").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_topk_${tag}_out").toString
+      val ckpt = SparkTestBase.tmpDir(s"graft_ckpt_topk_$tag")
+      val outDir = SparkTestBase.tmpDir(s"graft_ckpt_topk_${tag}_out")
       val mem = MemoryStream[(Long, Long, Double)]
       def start() = StreamOps
         .topKStream(mem.toDF().toDF("query_id", "vec_id", "dist"), k = 3)

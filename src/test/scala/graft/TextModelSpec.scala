@@ -66,7 +66,7 @@ class TextModelSpec extends AnyFunSuite {
     // entry must return exactly 2048. Written through a fixture-shaped
     // temp dir so the test exercises the real entry end to end.
     val docs = (1L to 16L).map(i => (i, "x y")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("pmi").toString
+    val tmp = SparkTestBase.tmpDir("pmi")
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")

@@ -259,7 +259,7 @@ class WarcSpec extends AnyFunSuite {
   test("mixed archive directory: .warc and .warc.gz both read; in-flight " +
       ".tmp names ignored") {
     val spark = SparkTestBase.spark
-    val dir = Files.createTempDirectory("warcmix").toFile
+    val dir = new java.io.File(SparkTestBase.tmpDir("warcmix"))
     val plainRec = rec("https://mix/plain", 1000001L, "plain archive page")
     val gzRec = Warc.gzipMember(rec("https://mix/gz", 1000002L, "gz archive page"))
     Files.write(new java.io.File(dir, "a.warc").toPath, plainRec)
@@ -315,7 +315,7 @@ class WarcSpec extends AnyFunSuite {
         minDf = 3, minChunks = 1).collect().map(_.toSeq).toVector
 
     def run(restartBetween: Boolean, tag: String): Vector[Seq[Any]] = {
-      val root = Files.createTempDirectory(s"warcstream_$tag").toString
+      val root = SparkTestBase.tmpDir(s"warcstream_$tag")
       val landing = s"$root/landing"; new java.io.File(landing).mkdirs()
       val (docStore, dfStore, ckpt) =
         (s"$root/docs", s"$root/df", s"$root/ckpt")
@@ -367,7 +367,7 @@ class WarcSpec extends AnyFunSuite {
       val uniq = Seq.fill(10)(s"prose$i").mkString(" ")
       (i, s"$shared $uniq")
     }
-    val dir = Files.createTempDirectory("warcspec").toFile
+    val dir = new java.io.File(SparkTestBase.tmpDir("warcspec"))
     // two archive files, records interleaved across them
     val (evens, odds) = docs.partition(_._1 % 2 == 0)
     for ((name, part) <- Seq("a.warc" -> evens, "b.warc" -> odds)) {
