@@ -26,19 +26,23 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val attempted = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          System.err.println(
-            f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    // every name this run attempts, written first: check.py fails a name
+    // with no dump, rows-only queries (no oracle entry) included
+    Files.writeString(Paths.get(s"$outDir/attempted.txt"),
+      attempted.map(_._1).mkString("", "\n", "\n"))
+    attempted.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(
+          f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -258,9 +258,9 @@ object HtmlQueries {
     * so stage 0's keyed first-wins state must drop every refetch across
     * batch boundaries before its markup is parsed. Survivors flow
     * through per-row extraction into the maintenance sink
-    * ([[graft.streaming.StreamOps.maintainCrawl]]): an append-only
-    * parsed-page store plus the incrementally-maintained chunk-df
-    * rollup (the `stream_bm25_exec` maintained-store pattern). Serving
+    * ([[graft.streaming.StreamOps.maintainCrawl]]): a parsed-page store
+    * plus per-epoch chunk-df deltas, both append
+    * [[graft.streaming.EpochStore]]s. Serving
     * reads both and finishes the cascade via the SAME [[assembleClean]]
     * stage as the batch entry. Oracle: `doc_pipeline_crawl`'s, verbatim
     * — the continuously-maintained front-end must land on the identical

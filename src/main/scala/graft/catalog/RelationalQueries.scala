@@ -1410,7 +1410,7 @@ object RelationalQueries {
       // emissions were the catalog's largest memory-sink transport — every
       // pair row crossed the driver per micro-batch commit, a guaranteed
       // driver bottleneck at 100 TB. The stream now lands DISTRIBUTED
-      // per-epoch partial counts (foreachBatch → groupBy → parquet, the
+      // per-epoch partial counts in an append EpochStore (the
       // applyCrawlBatch delta-rollup idiom; count-of-pairs = sum of
       // per-epoch counts, exact integer algebra, so the declared aggregate
       // is unchanged) and the driver never sees a pair row. A raw-emission
@@ -1423,20 +1423,22 @@ object RelationalQueries {
       // not a cross-run cache. Cost is feed/emission volume, not batch
       // count (2 vs 4 chunks measured equal within noise) — keep 4 for the
       // stronger cross-batch split exercise.
+      def pairCounts(
+          df: org.apache.spark.sql.DataFrame, n: org.apache.spark.sql.Column) =
+        df.groupBy("p1", "p2").agg(n.as("n"))
       val store = StreamFeed.replay(s, "stream_basket_exec", 8,
           StreamFeed.batches(rows, 4)) { (in, run) =>
-        graft.streaming.StreamOps
-          .basketPairsStream(in.toDF("order_id", "part_id", "ts"))
-          .writeStream
-          .option("checkpointLocation", s"${run.dir}/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            batch.groupBy("p1", "p2").agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"${run.dir}/v=$id")
-            ()
-          }
-          .start()
-      }.dir
-      s.read.parquet(s"$store/v=*")
+        val pairs = graft.streaming.EpochStore.Append(
+          s"${run.dir}/store", pairCounts(_, sum("n")))
+        graft.streaming.EpochStore.maintain(
+            graft.streaming.StreamOps
+              .basketPairsStream(in.toDF("order_id", "part_id", "ts")),
+            s"${run.dir}/ckpt", Seq(pairs)) { (batch, id) =>
+          graft.streaming.EpochStore.append(s, pairs.path, id)(
+            pairCounts(batch, count(lit(1))))
+        }
+      }.dir + "/store"
+      graft.streaming.EpochStore.read(s, store).get
         .groupBy("p1", "p2").agg(sum("n").as("n12"))
         .filter(col("n12") >= 2)
         .orderBy("p1", "p2")
@@ -2204,8 +2206,9 @@ object RelationalQueries {
     * execution ([[graft.streaming.StreamOps.rangeJoinStream]]): the
     * q_events_range_join query (purchases attributed to the signup whose
     * one-hour window contains them) with BOTH sides streaming — signups
-    * and purchases each replayed through their own in-memory stream in 2
-    * time-aligned chunks (splitting both streams at the same timestamp
+    * and purchases replayed as tagged rows of ONE in-memory stream, split
+    * by the tag, in 2 time-aligned chunks, so both sides of a chunk land
+    * in the same micro-batch (splitting both sides at the same timestamp
     * keeps every cross-batch match inside the join-state horizon: an open
     * window is expired only when the watermark passes
     * `open_ts + window + lateness`, and a later-batch point inside that
@@ -2230,22 +2233,30 @@ object RelationalQueries {
         "stream_range_exec purchases").sortBy(_._2.getTime)
       val allMs = (signups ++ purchases).map(_._2.getTime)
       val midMs = (allMs.min + allMs.max) / 2
-      val (pIn, addP) = StreamFeed.source[(Long, java.sql.Timestamp, Long)](s)
-      val (oIn, addO) = StreamFeed.source[(Long, java.sql.Timestamp, Long)](s)
-      val run = StreamFeed.drive(s, "stream_range_exec", 4) { run =>
-        val q = graft.streaming.StreamOps.rangeJoinStream(
-            pIn.toDF("user_id", "ts", "purchase_id"),
-            oIn.toDF("o_user_id", "open_ts", "signup_id"))
-          .select(col("signup_id"), col("purchase_id"),
-            (unix_micros(col("ts")) - unix_micros(col("open_ts")))
-              .as("delay_us"))
-          .writeStream.format("memory").queryName(run.sink)
-          .outputMode("append").start()
-        (q, Seq[java.sql.Timestamp => Boolean](
-            _.getTime <= midMs, _.getTime > midMs).map { inChunk => () =>
-          addP(purchases.filter(r => inChunk(r._2)).toSeq)
-          addO(signups.filter(r => inChunk(r._2)).toSeq)
-        })
+      // ONE source of tagged rows, split by the tag: each step lands its
+      // purchases and signups in one append, so no micro-batch can start
+      // between the two sides of a step
+      val steps = Seq[java.sql.Timestamp => Boolean](
+          _.getTime <= midMs, _.getTime > midMs).map { inChunk =>
+        def tagged(rows: Array[(Long, java.sql.Timestamp, Long)],
+            purchase: Boolean) = rows.toSeq.filter(r => inChunk(r._2))
+          .map { case (u, t, id) => (purchase, u, t, id) }
+        tagged(purchases, purchase = true) ++ tagged(signups, purchase = false)
+      }
+      val run = StreamFeed.replay(s, "stream_range_exec", 4, steps) {
+        (in, run) =>
+          val rows = in.toDF("purchase", "user_id", "ts", "id")
+          graft.streaming.StreamOps.rangeJoinStream(
+              rows.filter(col("purchase"))
+                .select(col("user_id"), col("ts"), col("id").as("purchase_id")),
+              rows.filter(!col("purchase"))
+                .select(col("user_id").as("o_user_id"), col("ts").as("open_ts"),
+                  col("id").as("signup_id")))
+            .select(col("signup_id"), col("purchase_id"),
+              (unix_micros(col("ts")) - unix_micros(col("open_ts")))
+                .as("delay_us"))
+            .writeStream.format("memory").queryName(run.sink)
+            .outputMode("append").start()
       }
       s.table(run.sink).orderBy("signup_id", "purchase_id")
     },

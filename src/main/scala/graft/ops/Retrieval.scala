@@ -120,123 +120,54 @@ object Retrieval {
     topKByScore[I](bm25ScoresBatch(docs, qterms, docId, textCol, queryId),
       k, "bm25_1e4", docId, Seq(queryId))
 
-  /** MAINTAINED inverted index — the production form of the BM25 surface:
-    * a batch rebuild re-tokenizes the whole corpus per query session,
-    * while a crawl appends documents continuously. The store is
-    * append-only epoch-partitioned postings (`epoch=<batchId>/` of
-    * (doc_id, word, tf) rows, `_SUCCESS` the commit marker): per epoch
-    * the work is tokenizing THE BATCH — nothing existing is rewritten
-    * (contrast the rollup store's merge-rewrite; postings need no merge
-    * because every BM25 statistic is additive: dl = Σ tf per doc,
-    * N/S = doc count / token count, df = per-word doc count, all
-    * derivable from the union of epochs). Replayed epochs no-op on the
-    * committed marker. Empty-token postings are retained deliberately:
-    * dl must equal the raw split length for score parity with
-    * [[bm25Scores]]. */
-  /** Committed epoch dir names, minus those a committed compaction
-    * superseded, plus the full superseded-name set (for replay checks). */
-  private def epochState(
-      s: org.apache.spark.sql.SparkSession,
-      storePath: String): (Seq[org.apache.hadoop.fs.Path], Set[String]) = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (Seq.empty, Set.empty)
-    val committed = fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath)
-    val superseded = committed.flatMap { d =>
-      val m = new org.apache.hadoop.fs.Path(d, "_SUPERSEDES")
-      if (!fs.exists(m)) Nil
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in).getLines().toList
-        finally in.close()
-      }
-    }.toSet
-    (committed.filterNot(d => superseded.contains(d.getName)), superseded)
-  }
-
-  def applyPostingsBatch(
-      batch: DataFrame, batchId: Long, storePath: String,
-      docId: String = "doc_id", textCol: String = "text"): Unit = {
-    val s = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$storePath/epoch=$batchId")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // replayed epoch: already committed, OR folded into a compaction (its
-    // dir may already be GC'd — the manifest is what remembers it)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) return
-    if (epochState(s, storePath)._2.contains(dir.getName)) return
+  /** A batch's postings: (doc_id, word, tf) rows. Empty-token postings
+    * are retained deliberately: dl must equal the raw split length for
+    * score parity with [[bm25Scores]]. */
+  private def postingsOf(
+      batch: DataFrame, docId: String, textCol: String): DataFrame =
     batch
       .select(col(docId), explode(split(lower(col(textCol)), " ")).as("word"))
       .groupBy(docId, "word").agg(count(lit(1)).as("tf"))
-      .write.mode("overwrite").parquet(dir.toString)
-  }
 
-  /** The maintained postings (union of committed, non-superseded epochs),
-    * if any. */
+  /** MAINTAINED inverted index — the production form of the BM25 surface:
+    * a batch rebuild re-tokenizes the whole corpus per query session,
+    * while a crawl appends documents continuously. The store is an append
+    * [[graft.streaming.EpochStore]] of postings epochs: per epoch the work
+    * is tokenizing THE BATCH — nothing existing is rewritten (contrast the
+    * rollup store's merge-rewrite; postings need no merge because every
+    * BM25 statistic is additive: dl = Σ tf per doc, N/S = doc count /
+    * token count, df = per-word doc count, all derivable from the union of
+    * epochs). Replayed epochs no-op. */
+  def applyPostingsBatch(
+      batch: DataFrame, batchId: Long, storePath: String,
+      docId: String = "doc_id", textCol: String = "text"): Unit =
+    graft.streaming.EpochStore.append(batch.sparkSession, storePath, batchId)(
+      postingsOf(batch, docId, textCol))
+
+  /** The maintained postings (union of the live epochs), if any. */
   def currentPostings(
       s: org.apache.spark.sql.SparkSession,
-      storePath: String): Option[DataFrame] = {
-    val dirs = epochState(s, storePath)._1.map(_.toString)
-    if (dirs.isEmpty) None else Some(s.read.parquet(dirs: _*))
-  }
+      storePath: String): Option[DataFrame] =
+    graft.streaming.EpochStore.read(s, storePath)
 
   /** COMPACT the maintained postings store — the LSM step: merge every
-    * live epoch into one directory and supersede the sources, so serving
-    * reads one partition set instead of one per ingest batch. Crash-safe
-    * by construction: the merged data + a `_SUPERSEDES` manifest (naming
-    * the source dirs) are written to a staging dir and RENAMED into the
-    * `epoch=` namespace in one move — an unrenamed staging dir is
-    * invisible, and once visible the manifest excludes the sources even
-    * before their (best-effort) deletion, so readers never double-count
-    * and a replayed superseded batch id still no-ops through the
-    * manifest. Returns true when a compaction happened. */
+    * live epoch into one, so serving reads one partition set instead of
+    * one per ingest batch. Returns true when a compaction happened. */
   def compactPostings(
-      s: org.apache.spark.sql.SparkSession, storePath: String): Boolean = {
-    val (live, priorSuperseded) = epochState(s, storePath)
-    if (live.size <= 1) return false
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      storePath, s"compact_staging_${System.nanoTime()}")
-    s.read.parquet(live.map(_.toString): _*)
-      .write.mode("overwrite").parquet(staging.toString)
-    // the manifest carries prior manifests FORWARD: once a superseded
-    // compact dir is GC'd, its manifest is gone, and without the
-    // transitive closure a replayed ancient batch id would re-apply
-    val names = (live.map(_.getName).toSet ++ priorSuperseded).toSeq.sorted
-    val manifest = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_SUPERSEDES"))
-    try manifest.write(names.mkString("\n").getBytes("UTF-8"))
-    finally manifest.close()
-    val target = new org.apache.hadoop.fs.Path(
-      storePath, s"epoch=compact_${System.nanoTime()}")
-    require(fs.rename(staging, target), s"compaction rename failed: $target")
-    // Retention window (the applyRollupBatch reader contract): a reader
-    // that resolved currentPostings just before this commit is still
-    // scanning THIS compaction's sources, so they survive until the NEXT
-    // compaction — only dirs superseded a full cycle ago are reclaimed.
-    priorSuperseded.foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(storePath, name), true)
-    }
-    true
-  }
+      s: org.apache.spark.sql.SparkSession, storePath: String): Boolean =
+    graft.streaming.EpochStore.compact(
+      s, graft.streaming.EpochStore.Append(storePath))
 
   /** Streaming index maintenance: each micro-batch of documents appends
-    * its postings epoch (the foreachBatch store-maintenance shape shared
-    * with StreamOps.maintainRollup/maintainComponents). */
+    * its postings epoch. */
   def maintainPostings(
       stream: DataFrame, storePath: String, checkpoint: String,
       docId: String = "doc_id", textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) applyPostingsBatch(batch, id, storePath, docId, textCol)
-      }
-      .start()
+    graft.streaming.EpochStore.maintain(stream, checkpoint,
+        Seq(graft.streaming.EpochStore.Append(storePath))) { (batch, id) =>
+      applyPostingsBatch(batch, id, storePath, docId, textCol)
+    }
 
   /** BM25 top-k SERVED FROM the maintained postings — must equal
     * [[bm25TopK]] over the same corpus (the catalog gate's claim): dl,

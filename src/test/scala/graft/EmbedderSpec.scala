@@ -49,7 +49,7 @@ class EmbedderSpec extends AnyFunSuite {
   }
 
   test("document path end-to-end: a document's top-1 is itself at dist 0") {
-    val path = "/tmp/graft_test_doc_engine"
+    val path = SparkTestBase.tmpDir("test_doc_engine")
     ZebraEngine.destroy(path)
     val eng = ZebraEngine.create(
       spark, path, EngineConfig(dim = 384, metric = "cosine"))

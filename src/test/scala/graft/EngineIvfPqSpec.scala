@@ -13,7 +13,7 @@ import graft.ops.SimSearch
 class EngineIvfPqSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val dir = SparkTestBase.sf0001
-  private val path = "/tmp/graft_test_engine_ivfpq"
+  private val path = SparkTestBase.tmpDir("test_engine_ivfpq")
 
   private lazy val eng: ZebraEngine = {
     ZebraEngine.destroy(path)
@@ -80,7 +80,7 @@ class EngineIvfPqSpec extends AnyFunSuite {
   }
 
   test("staleness retrain: maintainIvfPqIfNeeded fires at 4x growth, not before") {
-    val p2 = "/tmp/graft_test_engine_ivfpq_stale"
+    val p2 = SparkTestBase.tmpDir("test_engine_ivfpq_stale")
     ZebraEngine.destroy(p2)
     val e = ZebraEngine.create(
       spark, p2, EngineConfig(dim = 16, indexKind = "ivfpq"))
@@ -120,7 +120,7 @@ class EngineIvfPqSpec extends AnyFunSuite {
   test("metadata round-trips the index kind; legacy metadata reads as lsh") {
     val reopened = ZebraEngine.open(spark, path)
     assert(reopened.config.indexKind == "ivfpq")
-    val legacy = "/tmp/graft_test_engine_legacy"
+    val legacy = SparkTestBase.tmpDir("test_engine_legacy")
     ZebraEngine.destroy(legacy)
     ZebraEngine.create(spark, legacy, EngineConfig(dim = 8))
     // strip index_kind from the metadata as a pre-pluggability file would be

@@ -18,7 +18,7 @@ class EngineQuantizedSpec extends AnyFunSuite {
   private val dir = SparkTestBase.sf0001
 
   private def build(kind: String): ZebraEngine = {
-    val path = s"/tmp/graft_test_engine_$kind"
+    val path = SparkTestBase.tmpDir(s"test_engine_$kind")
     ZebraEngine.destroy(path)
     val e = ZebraEngine.create(
       spark, path, EngineConfig(dim = 64, indexKind = kind))
@@ -102,7 +102,7 @@ class EngineQuantizedSpec extends AnyFunSuite {
   test("quantized staleness maintenance: retrains past 4x growth, no-ops " +
       "inside it, and full-budget stays exact after the retrain") {
     import spark.implicits._
-    val path = "/tmp/graft_test_engine_sq_maint"
+    val path = SparkTestBase.tmpDir("test_engine_sq_maint")
     ZebraEngine.destroy(path)
     val e = ZebraEngine.create(
       spark, path, EngineConfig(dim = 64, indexKind = "sq8"))

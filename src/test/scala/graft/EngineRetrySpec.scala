@@ -30,7 +30,7 @@ object EngineRetrySpec {
 
 class EngineRetrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val path = "/tmp/graft_retry_engine"
+  private val path = SparkTestBase.tmpDir("retry_engine")
 
   private lazy val emb = Tables.embeddings(spark, SparkTestBase.sf0001)
     .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding"))

@@ -15,7 +15,7 @@ import graft.engine.{EngineConfig, ZebraEngine}
   * tables (string ids, binary documents). */
 class HybridRetrievalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val path = "/tmp/graft_test_hybrid_engine"
+  private val path = SparkTestBase.tmpDir("test_hybrid_engine")
   private val embedder = HashingTextEmbedder()
 
   private lazy val eng: ZebraEngine = {
@@ -112,7 +112,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // A second engine built from ONLY the surviving documents: the where=
     // contract says corpus statistics (dl, df, N) and both rankings are
     // those of the filtered corpus, so the two engines must agree exactly.
-    val path2 = "/tmp/graft_test_hybrid_engine_prefiltered"
+    val path2 = SparkTestBase.tmpDir("test_hybrid_engine_prefiltered")
     ZebraEngine.destroy(path2)
     val e2 = ZebraEngine.create(
       spark, path2, EngineConfig(dim = 384, metric = "cosine"))

@@ -27,14 +27,11 @@ class KnnRewriteSpec extends AnyFunSuite {
     * spec-owned path keeps these plan-shape tests deterministic under
     * any suite ordering. */
   private lazy val dir: String = {
-    val d = new java.io.File("/tmp/graft_knnrw_fixture")
-    if (!new java.io.File(d, "embeddings.parquet").exists()) {
-      d.mkdirs()
-      org.apache.commons.io.FileUtils.copyFile(
-        new java.io.File(SparkTestBase.sf0001, "embeddings.parquet"),
-        new java.io.File(d, "embeddings.parquet"))
-    }
-    d.getAbsolutePath
+    val d = SparkTestBase.tmpDir("knnrw_fixture")
+    org.apache.commons.io.FileUtils.copyFile(
+      new java.io.File(SparkTestBase.sf0001, "embeddings.parquet"),
+      new java.io.File(d, "embeddings.parquet"))
+    d
   }
 
   private def naivePlan(k: Int = 10) = {

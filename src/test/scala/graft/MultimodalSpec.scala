@@ -74,7 +74,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("engine round-trip with image documents: top-1 is self at dist 0") {
-    val path = "/tmp/graft_test_img_engine"
+    val path = SparkTestBase.tmpDir("test_img_engine")
     ZebraEngine.destroy(path)
     val eng = ZebraEngine.create(
       spark, path, EngineConfig(dim = 768, metric = "cosine"))

@@ -44,7 +44,7 @@ class PqSpec extends AnyFunSuite {
   test("IVF-PQ: both budgets exhaustive degenerates to exact kNN; probed is close") {
     import graft.ops.IvfPq
     val model = IvfPq.train(e, nlist = 16)
-    val path = "/tmp/graft_test_ivfpq"
+    val path = SparkTestBase.tmpDir("test_ivfpq")
     IvfPq.buildIndex(e, model, path)
     val index = IvfPq.loadIndex(spark, path)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -431,8 +431,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch vector ingest: stream -> engine -> query round trip") {
-    val path = "/tmp/graft_test_stream_engine"
-    val ckpt = "/tmp/graft_test_stream_ckpt"
+    val path = SparkTestBase.tmpDir("test_stream_engine")
+    val ckpt = SparkTestBase.tmpDir("test_stream_ckpt")
     ZebraEngine.destroy(path)
     ZebraEngine.destroy(ckpt)
     val eng = ZebraEngine.create(spark, path, EngineConfig(dim = 4))
@@ -1503,9 +1503,11 @@ class StreamingSpec extends AnyFunSuite {
     def chunkOf(ids: Seq[Long]): Seq[(Timestamp, Long, String, String)] =
       ids.map(i => (new Timestamp(30L * 86400000L + i * 1000L), i,
         s"https://www.example.com/doc/$i", page(i)))
-    // 6 micro-batches of 2 pages; compactEvery = 2 fires on epochs 2 and 4
+    // 6 micro-batches of 2 pages, below EpochStore.MaxLiveEpochs, so the
+    // writer never compacts; the compacting run folds the stores between
+    // micro-batches, after epochs 2 and 4
     val chunks = (0 until 6).map(b => chunkOf(Seq(2L * b, 2L * b + 1)))
-    def run(compactEvery: Int, tag: String): (Vector[Seq[Any]], Int) = {
+    def run(compact: Boolean, tag: String): (Vector[Seq[Any]], Int) = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val (docStore, dfStore, ckpt) = (tmpCkpt(s"${tag}_docs"),
         tmpCkpt(s"${tag}_df"), tmpCkpt(s"${tag}_ckpt"))
@@ -1513,9 +1515,12 @@ class StreamingSpec extends AnyFunSuite {
       val q = StreamOps.maintainCrawl(
         StreamOps.crawlIngestStream(
           mem.toDF().toDF("ts", "doc_id", "url", "page"), lateness = "7 days"),
-        docStore, dfStore, ckpt, compactEvery = compactEvery)
-      try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-      finally q.stop()
+        docStore, dfStore, ckpt)
+      try chunks.zipWithIndex.foreach { case (c, i) =>
+        mem.addData(c); q.processAllAvailable()
+        if (compact && i > 0 && i % 2 == 0)
+          StreamOps.compactCrawlStores(spark, docStore, dfStore)
+      } finally q.stop()
       val served = graft.catalog.HtmlQueries.serveCrawl(
           spark, docStore, dfStore, minDf = 3, minChunks = 1)
         .collect().map(_.toSeq).toVector
@@ -1524,12 +1529,12 @@ class StreamingSpec extends AnyFunSuite {
         .count(d => d.isDirectory && d.getName.startsWith("v="))
       (served, nDirs)
     }
-    val (plain, plainDirs) = run(0, "autocompact_off")
-    val (compacted, compactedDirs) = run(2, "autocompact_on")
+    val (plain, plainDirs) = run(compact = false, "autocompact_off")
+    val (compacted, compactedDirs) = run(compact = true, "autocompact_on")
     assert(plain.map(_.head) == (0L to 11L).toVector)
     assert(compacted == plain,
       s"auto-compaction changed serving:\n$compacted\nvs\n$plain")
-    // 6 epochs uncompacted; with compactEvery=2 the on-disk dir count is
+    // 6 epochs uncompacted; compacting every 2nd epoch the on-disk dir count is
     // bounded (compact dirs + post-compaction epochs + one retention cycle)
     assert(plainDirs == 6, s"expected 6 raw epochs, got $plainDirs")
     assert(compactedDirs < 6, s"auto-compaction never fired: $compactedDirs dirs")
@@ -1542,8 +1547,10 @@ class StreamingSpec extends AnyFunSuite {
     // differ in a short tail (J ≈ 0.9 ≥ 0.8). Evens stream in batches
     // 0-2, odds in batches 3-5, so every verified pair is CROSS-batch —
     // each odd member's bands must join the maintained band table built
-    // epochs earlier, THROUGH the compactions (compactEvery = 2 fires on
-    // epochs 2 and 4, i.e. between the evens and while odds arrive).
+    // epochs earlier, THROUGH the compactions (the compacting run folds
+    // the stores after epochs 2 and 4, i.e. between the evens and while
+    // odds arrive; 6 epochs stay below EpochStore.MaxLiveEpochs, so the
+    // writer itself never compacts).
     def page(i: Long): String = {
       val shared = (0 until 100).map(w => s"prose${i / 2}w$w").mkString(" ")
       val tail =
@@ -1557,7 +1564,7 @@ class StreamingSpec extends AnyFunSuite {
     val feed = (0 until 3).map(b => chunkOf(Seq(4L * b, 4L * b + 2))) ++
       (0 until 3).map(b => chunkOf(Seq(4L * b + 1, 4L * b + 3)))
 
-    def run(compactEvery: Int, tag: String)
+    def run(compact: Boolean, tag: String)
         : (Vector[(Long, Long)], Int, (String, String, String)) = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val (docStore, bandStore, labelStore, ckpt) = (tmpCkpt(s"${tag}_docs"),
@@ -1569,10 +1576,12 @@ class StreamingSpec extends AnyFunSuite {
           mem.toDF().toDF("ts", "doc_id", "url", "page"), lateness = "7 days"),
         docStore, bandStore, labelStore, ckpt,
         graft.catalog.DedupQueries.bandsOf,
-        graft.catalog.DedupQueries.minhashPairsDelta,
-        compactEvery = compactEvery)
-      try feed.foreach { c => mem.addData(c); q.processAllAvailable() }
-      finally q.stop()
+        graft.catalog.DedupQueries.minhashPairsDelta)
+      try feed.zipWithIndex.foreach { case (c, i) =>
+        mem.addData(c); q.processAllAvailable()
+        if (compact && i > 0 && i % 2 == 0)
+          StreamOps.compactCrawlDedupStores(spark, docStore, bandStore)
+      } finally q.stop()
       val labels = StreamOps.currentComponents(spark, labelStore).get
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toVector
       val nBandDirs = Option(new java.io.File(bandStore).listFiles())
@@ -1581,9 +1590,9 @@ class StreamingSpec extends AnyFunSuite {
       (labels, nBandDirs, (docStore, bandStore, labelStore))
     }
 
-    val (plain, plainBandDirs, _) = run(0, "crawldedup_plain")
+    val (plain, plainBandDirs, _) = run(compact = false, "crawldedup_plain")
     val (compacted, compactedBandDirs, (docStore, bandStore, labelStore)) =
-      run(2, "crawldedup_compact")
+      run(compact = true, "crawldedup_compact")
     // every pair found: 12 nodes in 6 two-member components
     assert(plain.map(_._1) == (0L to 11L).toVector,
       s"unexpected labeled nodes: ${plain.map(_._1)}")
@@ -1598,7 +1607,7 @@ class StreamingSpec extends AnyFunSuite {
     // append one more epoch by hand (the streaming run's foreachBatch ids
     // may exceed the data-chunk count — stateful sources emit extra
     // batches — so use a safely-later id), then compact AGAIN: this pass
-    // GCs the in-line compactions' sources and must carry their manifest
+    // GCs the earlier compactions' sources and must carry their manifest
     // ids forward transitively
     StreamOps.applyCrawlDedupBatch(
       Seq((99L, "https://example.com/doc/99", 1L, Seq(page(99L))))

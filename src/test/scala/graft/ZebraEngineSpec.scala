@@ -14,7 +14,7 @@ import graft.engine.{EngineConfig, ZebraEngine}
   * query → dedup → remove → incremental index add → clear → reopen. */
 class ZebraEngineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val enginePath = "/tmp/graft_test_engine"
+  private val enginePath = SparkTestBase.tmpDir("test_engine")
 
   private lazy val emb = Tables.embeddings(spark, SparkTestBase.sf0001)
     .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding"))

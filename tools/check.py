@@ -18,8 +18,13 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 ok, bad, rows_only = [], [], []
 # A query that threw in Verify writes no dump: fail closed on it, or a
-# lost query would pass unnoticed.
-for name in sorted(oracle):
+# lost query would pass unnoticed. Verify lists every name it attempted in
+# attempted.txt, rows-only queries (no oracle entry) included.
+attempted = set(oracle)
+attempted_path = os.path.join(out_dir, "attempted.txt")
+if os.path.exists(attempted_path):
+    attempted |= {l.strip() for l in open(attempted_path) if l.strip()}
+for name in sorted(attempted):
     if not os.path.isdir(os.path.join(out_dir, name)):
         bad.append((name, "no dump: the query failed in Verify or never ran"))
 for name in sorted(os.listdir(out_dir)):
