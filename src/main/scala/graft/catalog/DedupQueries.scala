@@ -1798,22 +1798,22 @@ ${affineSigCtes("MATERIALIZED")},
              length(text)::BIGINT AS n_chars
       FROM documents ORDER BY content_md5"""))
 
-  /** Streaming NEAR-dup in the correctness gate (the minhash sibling of
-    * stream_dedup_exec, which only catches byte-identical text): every
-    * 7th document gets a one-word-appended twin under a +100000 id —
-    * later event time, later micro-batch — so the banded-signature state
-    * must pair each twin with an original from an EARLIER batch. The
-    * replay is doc_id-ordered and event times increase with doc_id, so
-    * the stream's (earlier, later) pair orientation equals the oracle's
-    * doc_a < doc_b, and the whole md5-minhash estimate cascade
-    * (signature -> bands -> bucket candidates -> agreement count) is
-    * replayed verbatim in DuckDB — the streaming RUNTIME lands on the
-    * same hash as the declarative pipeline. n_agree >= 13 of 16 perms is
-    * the est-Jaccard ~0.81 threshold (the stream holds signatures, never
-    * text — the true-Jaccard verify is the batch entry's job, the
-    * documented hand-off in StreamOps.nearDupPairsStream). */
-  val streamNearDupExec = Q(
-    "stream_neardup_exec",
+  /** The planted-twin near-dup replay gate for one signature `family`
+    * of [[graft.streaming.StreamOps.nearDupPairsStream]]: every 7th
+    * document gets a one-word-appended twin under a +100000 id — later
+    * event time, later micro-batch — so the banded-signature state must
+    * pair each twin with an original from an EARLIER batch. The replay is
+    * doc_id-ordered and event times increase with doc_id, so the stream's
+    * (earlier, later) pair orientation equals the oracle's doc_a < doc_b,
+    * and the whole estimate cascade (signature -> bands -> bucket
+    * candidates -> agreement count) is replayed verbatim in DuckDB, with
+    * `sigCtes` defining the family's `mh` and `bands` — the streaming
+    * RUNTIME lands on the same hash as the declarative pipeline. n_agree
+    * >= 13 of 16 perms is the est-Jaccard ~0.81 threshold (the stream
+    * holds signatures, never text — the true-Jaccard verify is the batch
+    * entry's job, the documented hand-off). */
+  private def streamNearDupGate(name: String, family: String, sigCtes: String) = Q(
+    name,
     (s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
@@ -1826,20 +1826,20 @@ ${affineSigCtes("MATERIALIZED")},
           // +1e6 s base: epoch-0 rows are "late" vs the initial watermark
           timestamp_micros((col("doc_id") + 1000000L) * 1000000L).as("ts"),
           col("doc_id"), col("text"))
-        .as[(java.sql.Timestamp, Long, String)], "stream_neardup_exec")
+        .as[(java.sql.Timestamp, Long, String)], name)
         .sortBy(_._2)
       // drop observability: ring evictions from this run surface in the
       // QUALITY artifact via StreamDropStats (expected 0 on the fixture)
-      val drops = s.sparkContext.longAccumulator("stream_neardup_exec_drops")
-      val run = StreamFeed.replay(s, "stream_neardup_exec", 8,
+      val drops = s.sparkContext.longAccumulator(s"${name}_drops")
+      val run = StreamFeed.replay(s, name, 8,
           StreamFeed.batches(rows, 4), rocksDb = true) { (in, run) =>
         graft.streaming.StreamOps
           .nearDupPairsStream(in.toDF("ts", "doc_id", "text"),
-            lateness = "7 days", dropCounter = Some(drops))
+            lateness = "7 days", family = family, dropCounter = Some(drops))
           .writeStream.format("memory").queryName(run.sink)
           .outputMode("append").start()
       }
-      graft.streaming.StreamDropStats.record("stream_neardup_exec", drops.value)
+      graft.streaming.StreamDropStats.record(name, drops.value)
       s.table(run.sink)
         .select(col("doc_a"), col("doc_b"), col("n_agree").cast("long").as("n_agree"))
         .distinct().orderBy("doc_a", "doc_b")
@@ -1859,14 +1859,7 @@ ${affineSigCtes("MATERIALIZED")},
         FROM (SELECT doc_id, w,
                      unnest(range(0, greatest(len(w) - $ShingleN, 0) + 1)) AS i
               FROM words)),
-      mh AS MATERIALIZED (
-        SELECT doc_id, p.j, min(md5(p.j::VARCHAR || '|' || shingle)) AS mh
-        FROM sh, generate_series(1, $Perms) p(j)
-        GROUP BY doc_id, p.j),
-      bands AS MATERIALIZED (
-        SELECT doc_id, CAST((j-1) // $BandRows AS INT) AS band_id,
-               md5(string_agg(mh, '' ORDER BY j)) AS band_hash
-        FROM mh GROUP BY doc_id, CAST((j-1) // $BandRows AS INT)),
+$sigCtes,
       cand AS MATERIALIZED (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a
@@ -1882,6 +1875,19 @@ ${affineSigCtes("MATERIALIZED")},
       SELECT doc_a, doc_b, n_agree FROM agree WHERE n_agree >= 13
       ORDER BY doc_a, doc_b"""))
 
+  /** Streaming NEAR-dup in the correctness gate (the minhash sibling of
+    * stream_dedup_exec, which only catches byte-identical text), under
+    * the md5 signature family: 16 digests per shingle. */
+  val streamNearDupExec = streamNearDupGate("stream_neardup_exec", "md5", s"""
+      mh AS MATERIALIZED (
+        SELECT doc_id, p.j, min(md5(p.j::VARCHAR || '|' || shingle)) AS mh
+        FROM sh, generate_series(1, $Perms) p(j)
+        GROUP BY doc_id, p.j),
+      bands AS MATERIALIZED (
+        SELECT doc_id, CAST((j-1) // $BandRows AS INT) AS band_id,
+               md5(string_agg(mh, '' ORDER BY j)) AS band_hash
+        FROM mh GROUP BY doc_id, CAST((j-1) // $BandRows AS INT))""")
+
   /** [[streamNearDupExec]] under the affine signature family — the same
     * planted-twin replay and micro-batch state machine, but the signature
     * pass spends one digest per distinct shingle instead of 16
@@ -1889,69 +1895,9 @@ ${affineSigCtes("MATERIALIZED")},
     * the affine cascade numerically (hsh → mh → comma-joined bands →
     * bucket candidates → per-permutation agreement), proving the cheap
     * kernel's STREAMING runtime lands on the same hash as the declarative
-    * pipeline — the parity the judge asked to carry over from the batch
-    * twin. */
-  val streamNearDupFastExec = Q(
-    "stream_neardup_fast_exec",
-    (s, dir) => {
-      import s.implicits._
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val planted = docs.unionAll(
-        docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 100000).as("doc_id"),
-            concat(col("text"), lit(" zzztwin")).as("text")))
-      val rows = StreamFeed.collectCapped(planted
-        .select(
-          timestamp_micros((col("doc_id") + 1000000L) * 1000000L).as("ts"),
-          col("doc_id"), col("text"))
-        .as[(java.sql.Timestamp, Long, String)], "stream_neardup_fast_exec")
-        .sortBy(_._2)
-      val drops =
-        s.sparkContext.longAccumulator("stream_neardup_fast_exec_drops")
-      val run = StreamFeed.replay(s, "stream_neardup_fast_exec", 8,
-          StreamFeed.batches(rows, 4), rocksDb = true) { (in, run) =>
-        graft.streaming.StreamOps
-          .nearDupPairsStream(in.toDF("ts", "doc_id", "text"),
-            lateness = "7 days", family = "affine", dropCounter = Some(drops))
-          .writeStream.format("memory").queryName(run.sink)
-          .outputMode("append").start()
-      }
-      graft.streaming.StreamDropStats
-        .record("stream_neardup_fast_exec", drops.value)
-      s.table(run.sink)
-        .select(col("doc_a"), col("doc_b"), col("n_agree").cast("long").as("n_agree"))
-        .distinct().orderBy("doc_a", "doc_b")
-    },
-    Some(s"""
-      WITH docs AS MATERIALIZED (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 100000, text || ' zzztwin'
-        FROM documents WHERE doc_id % 7 = 0),
-      words AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM docs),
-      sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id,
-               CASE WHEN len(w) >= $ShingleN
-                    THEN array_to_string(w[i+1:i+$ShingleN], ' ')
-                    ELSE array_to_string(w, ' ') END AS shingle
-        FROM (SELECT doc_id, w,
-                     unnest(range(0, greatest(len(w) - $ShingleN, 0) + 1)) AS i
-              FROM words)),
-${affineSigCtes("MATERIALIZED")},
-      cand AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a
-        JOIN bands b ON a.band_id = b.band_id
-                    AND a.band_hash = b.band_hash
-                    AND a.doc_id < b.doc_id),
-      agree AS (
-        SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS n_agree
-        FROM cand c
-        JOIN mh a ON a.doc_id = c.doc_a
-        JOIN mh b ON b.doc_id = c.doc_b AND b.j = a.j AND b.mh = a.mh
-        GROUP BY 1, 2)
-      SELECT doc_a, doc_b, n_agree FROM agree WHERE n_agree >= 13
-      ORDER BY doc_a, doc_b"""))
+    * pipeline. */
+  val streamNearDupFastExec = streamNearDupGate(
+    "stream_neardup_fast_exec", "affine", affineSigCtes("MATERIALIZED"))
 
   /** [[graft.streaming.StreamOps.embNearDupStream]] under REAL micro-batch
     * execution — the vector-space member of the streaming dedup set

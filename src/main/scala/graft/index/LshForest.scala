@@ -42,30 +42,10 @@ import graft.ops.SimSearch
   */
 object LshForest {
 
-  /** One live Broadcast per (SparkContext, model) INSTANCE: a 65k-sample
-    * forest is ~200 MB of node objects, and re-broadcasting it on every
-    * route/probe call costs seconds of serialization per call and piles up
-    * broadcast blocks faster than the ContextCleaner reclaims them — the
-    * engine-lifecycle probe degraded ~10x over a session from exactly this.
-    * Weak keys let a dropped model (and, via the cleaner, its blocks) be
-    * collected; a stale entry from a stopped context is re-broadcast. */
-  private val bcCache = new java.util.WeakHashMap[
-    ForestModel,
-    (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[ForestModel])]()
-
-  private def broadcastModel(spark: SparkSession, model: ForestModel)
-      : org.apache.spark.broadcast.Broadcast[ForestModel] =
-    bcCache.synchronized {
-      val sc = spark.sparkContext
-      bcCache.get(model) match {
-        case (`sc`, b) => b
-        case _ =>
-          val b = sc.broadcast(model)
-          bcCache.put(model, (sc, b))
-          b
-      }
-    }
+  /** The forest's one live Broadcast per SparkContext (every route and
+    * probe call, and the embedding near-dup stream, read it). */
+  private[graft] val broadcastModel =
+    new graft.core.BroadcastCache[ForestModel, ForestModel](identity)
 
   sealed trait Node extends Serializable
   final case class Inner(coeff: Array[Double], const: Double, left: Node, right: Node)

@@ -30,26 +30,10 @@ object Ivf {
     def nlist: Int = centroids.length
   }
 
-  /** One live Broadcast per (SparkContext, model) instance — same rationale
-    * as LshForest's model cache: at nlist=4096 and 768-d the centroid array
-    * is ~25 MB, and assign/probes are called repeatedly per session. */
-  private val bcCache = new java.util.WeakHashMap[
-    IvfModel,
-    (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])]()
-
-  private def broadcastCentroids(spark: SparkSession, model: IvfModel)
-      : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] =
-    bcCache.synchronized {
-      val sc = spark.sparkContext
-      bcCache.get(model) match {
-        case (`sc`, b) => b
-        case _ =>
-          val b = sc.broadcast(model.centroids)
-          bcCache.put(model, (sc, b))
-          b
-      }
-    }
+  /** assign/probes run repeatedly per session: one live centroid
+    * Broadcast per SparkContext. */
+  private val broadcastCentroids =
+    new graft.core.BroadcastCache[IvfModel, Array[Array[Double]]](_.centroids)
 
   /** Deterministic trained centroids: take the `sampleCap` rows with the
     * smallest xxhash64(vec_id, seed) — a seeded uniform sample, one bounded

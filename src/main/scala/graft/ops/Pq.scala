@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
@@ -49,23 +49,8 @@ object Pq {
       o
     }
 
-  private val bcCache = new java.util.WeakHashMap[
-    PqModel,
-    (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])]()
-
-  private def broadcastBooks(spark: SparkSession, model: PqModel)
-      : org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]] =
-    bcCache.synchronized {
-      val sc = spark.sparkContext
-      bcCache.get(model) match {
-        case (`sc`, b) => b
-        case _ =>
-          val b = sc.broadcast(model.codebooks)
-          bcCache.put(model, (sc, b))
-          b
-      }
-    }
+  private val broadcastBooks = new graft.core.BroadcastCache[
+    PqModel, Array[Array[Array[Double]]]](_.codebooks)
 
   /** Per-subspace Lloyd on a bounded seeded driver sample (the same
     * sampling rule as [[Ivf.chooseCentroids]] — quantizers train on

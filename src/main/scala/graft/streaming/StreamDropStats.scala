@@ -2,7 +2,7 @@ package graft.streaming
 
 /** Per-JVM registry of ring-drop totals from the LAST completed run of
   * each streaming near-dup gate. The occupancy-ring drop accumulator
-  * (`dropCounter` on [[EmbNearDupProcessor]] / SigNearDupProcessor) is the
+  * (`dropCounter` on [[BucketRingProcessor]]) is the
   * signal a production stream watches for cap bite; the probes assert on
   * it, but probe runs live outside the round artifacts — this registry
   * lets QualityReport surface the gate-run totals in QUALITY_r{N}.json so

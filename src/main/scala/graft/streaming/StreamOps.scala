@@ -217,15 +217,10 @@ object StreamOps {
     *    bounds the batch join, so only near-colliding docs ever meet;
     *  - per bucket the state holds (doc_id, signature, event-time) for
     *    docs inside the watermark horizon — signatures only (256 B/doc at
-    *    16 md5 perms, 64 B affine), never text — as a transformWithState
-    *    ListState with
-    *    APPEND-ONLY hot-path writes, per-key event-time timers, and a
-    *    newest-`occupancyCap` ring ([[SigNearDupProcessor]]; requires
-    *    the RocksDB provider — wrap query start in
-    *    [[withRocksDbStateStore]]). The ring matters exactly where text
-    *    banding degenerates: a boilerplate-heavy stream lands every
-    *    template copy in one bucket (the batch hot-bucket trap), and the
-    *    cap bounds its state and per-arrival compare cost;
+    *    16 md5 perms, 64 B affine), never text — in the bucket ring
+    *    [[BucketRingProcessor]] (its scaladoc has the state layout,
+    *    expiry, `occupancyCap` ring and `dropCounter`; wrap query start
+    *    in [[withRocksDbStateStore]]);
     *  - a later arrival is compared against every live prior in the
     *    bucket; agreement >= minAgree emits the pair. Duplicate emissions
     *    from a pair sharing several bands are for the caller's
@@ -235,9 +230,7 @@ object StreamOps {
     * verifies candidates with TRUE n-gram Jaccard; the stream uses the
     * signature ESTIMATE (holding texts in state would be unbounded), and
     * pairs farther apart than `lateness` are left to the batch pass.
-    * Within a micro-batch, rows process in (ts, doc_id) order, so doc_a
-    * is always the earlier (ties: smaller id) — deterministic output for
-    * a deterministic replay.
+    * doc_a is always the earlier arrival (ties: smaller id).
     *
     * Input: (ts TIMESTAMP, doc_id LONG, text STRING). Output:
     * (doc_a, doc_b, n_agree LONG).
@@ -316,8 +309,9 @@ object StreamOps {
     *    median projection bits, no shuffle before the state operator;
     *  - state keys on the bucket and holds (vec_id, embedding,
     *    event-time) for arrivals inside the watermark horizon — dim·4 B
-    *    per vector per tree, occupancy-bounded by the cuts' cap within
-    *    `lateness`, expired by event-time timeout plus an in-call prune;
+    *    per vector per tree — in the bucket ring [[BucketRingProcessor]]
+    *    (its scaladoc has the state layout, expiry, `occupancyCap` ring
+    *    and `dropCounter`; wrap query start in [[withRocksDbStateStore]]);
     *  - a later arrival emits (vec_a = earlier, vec_b = later, cos_1e4)
     *    for every live prior with cosine >= `simThreshold`; the 1e4
     *    integer quantization keeps the exec gate hash-exact. Duplicate
@@ -328,17 +322,6 @@ object StreamOps {
     * occupancy drift past the frozen cuts, are the batch pass's and the
     * retrain trigger's jobs respectively — this op's contract is the
     * within-horizon continuous surface.
-    *
-    * State runs on `transformWithState` (requires the RocksDB provider —
-    * wrap query start in [[withRocksDbStateStore]]): per-bucket
-    * `ListState` with APPEND-ONLY hot-path writes, per-key event-time
-    * timers for physical expiry, opportunistic compaction, and a
-    * newest-`occupancyCap` ring bounding the bucket at 4× the batch
-    * path's refinement-cut occupancy target — see
-    * [[EmbNearDupProcessor]] for the full state-layout rationale and the
-    * measured growth term this replaced. DedupScaleProbe's
-    * `streamembdedup` leg gates the result: flat per-batch walls under
-    * BOTH a production 1-hour horizon and an unbounded 365-day one.
     *
     * Input: (ts TIMESTAMP, vec_id LONG, embedding ARRAY<FLOAT>). Output:
     * (vec_a, vec_b, cos_1e4 LONG). */
@@ -351,9 +334,8 @@ object StreamOps {
       : DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import vectors.sparkSession.implicits._
-    val sc = vectors.sparkSession.sparkContext
-    val bcModel = sc.broadcast(model)
-    val bcCuts = sc.broadcast(cuts)
+    val bcModel = graft.index.LshForest.broadcastModel(vectors.sparkSession, model)
+    val bcCuts = vectors.sparkSession.sparkContext.broadcast(cuts)
     val routeUdf = udf { (emb: Seq[Float]) =>
       val m = bcModel.value
       val cs = bcCuts.value

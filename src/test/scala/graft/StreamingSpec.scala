@@ -1062,19 +1062,22 @@ class StreamingSpec extends AnyFunSuite {
     // (round 12) the compare set an arrival sees is the newest cap live
     // priors REGARDLESS of micro-batch chunking — previously same-batch
     // arrivals compared against the full untrimmed buffer (ADVICE r11).
+    // The vector stream runs the same ring over six identical vectors.
+    import org.apache.spark.sql.{DataFrame, Encoder}
     val text = (0 until 40).map(i => s"tmpl$i").mkString(" ")
+    val e: Seq[Float] = (0 until 8).map(i => (i + 1).toFloat / 10f)
+    val model = graft.index.LshForest.build(Seq(0L -> e).toDF("vec_id", "embedding"))
+    val cuts = Map.empty[(Int, Int), (Int, Array[Double])]
     val t0 = 30L * 86400000L
-    val rows = (0 until 6).map(i =>
-      (new Timestamp(t0 + i * 1000L), i.toLong, text))
+    def rows[P](p: P) = (0 until 6).map(i =>
+      (new Timestamp(t0 + i * 1000L), i.toLong, p))
 
-    def run(framing: Seq[Seq[(Timestamp, Long, String)]],
-        sink: String): Set[(Long, Long)] = {
+    def run[T: Encoder](framing: Seq[Seq[T]], sink: String)(
+        query: DataFrame => DataFrame): Set[(Long, Long)] = {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = MemoryStream[(Timestamp, Long, String)]
+      val mem = MemoryStream[T]
       StreamOps.withRocksDbStateStore(spark) {
-        val q = StreamOps
-          .nearDupPairsStream(mem.toDF().toDF("ts", "doc_id", "text"),
-            lateness = "7 days", occupancyCap = 2)
+        val q = query(mem.toDF())
           .writeStream.format("memory").queryName(sink)
           .outputMode("append").start()
         try framing.foreach { c => mem.addData(c); q.processAllAvailable() }
@@ -1083,15 +1086,27 @@ class StreamingSpec extends AnyFunSuite {
       spark.table(sink).distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
+    def sig(in: DataFrame) = StreamOps.nearDupPairsStream(
+      in.toDF("ts", "doc_id", "text"), lateness = "7 days", occupancyCap = 2)
+    def emb(in: DataFrame) = StreamOps.embNearDupStream(
+      in.toDF("ts", "vec_id", "embedding"), model, cuts,
+      lateness = "7 days", occupancyCap = 2)
 
-    val one = run(Seq(rows), "sig_framing_one")
-    val three = run(rows.grouped(2).toSeq, "sig_framing_three")
-    assert(one == three, s"framing-dependent output: $one vs $three")
     // the ring semantics themselves: each arrival pairs with exactly the
     // 2 newest priors
     val expect = (0 until 6).flatMap(b =>
       Seq(b - 2, b - 1).filter(_ >= 0).map(a => (a.toLong, b.toLong))).toSet
-    assert(one == expect, s"ring compare set wrong: $one vs $expect")
+    val texts = rows(text)
+    val vecs = rows(e)
+    Seq(
+      ("sig", run(Seq(texts), "sig_framing_one")(sig),
+        run(texts.grouped(2).toSeq, "sig_framing_three")(sig)),
+      ("emb", run(Seq(vecs), "emb_framing_one")(emb),
+        run(vecs.grouped(2).toSeq, "emb_framing_three")(emb))
+    ).foreach { case (op, one, three) =>
+      assert(one == three, s"$op: framing-dependent output: $one vs $three")
+      assert(one == expect, s"$op: ring compare set wrong: $one vs $expect")
+    }
   }
 
   test("ring-cap drop counter: zero on an organic stream, nonzero when the " +
