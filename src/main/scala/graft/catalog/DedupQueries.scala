@@ -112,8 +112,8 @@ object DedupQueries {
       allDocs: DataFrame, allBands: DataFrame, deltaBands: DataFrame): DataFrame = {
     // localCheckpoint: the endpoint probe take() and the verify join BOTH
     // drive the candidate set — uncached, the delta-vs-base bucket join
-    // and its distinct would execute twice per micro-batch (the
-    // LshForest.candidates lesson: materialize once, stay distributed).
+    // and its distinct would execute twice per micro-batch (materialize
+    // once, stay distributed).
     val pairs = deltaBands.as("d")
       .join(allBands.as("a"),
         col("d.band_id") === col("a.band_id") &&
@@ -131,10 +131,10 @@ object DedupQueries {
     // is the irreducible delta banding + bucket join).
     val pairDocs = pairs.select(col("doc_a").as("doc_id"))
       .unionAll(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // Two-tier endpoint fetch (the LshForest.candidates pattern): a SMALL
-    // endpoint set pushes into the corpus scan as a literal IN predicate —
-    // row-group pruning against the doc_id-clustered compacted doc store
-    // makes the fetch pruned I/O instead of a corpus scan + semi-join.
+    // Two-tier endpoint fetch: a SMALL endpoint set pushes into the corpus
+    // scan as a literal IN predicate — row-group pruning against the
+    // doc_id-clustered compacted doc store makes the fetch pruned I/O
+    // instead of a corpus scan + semi-join.
     // Large sets keep the semi-join (a 100k-literal predicate costs more
     // than it saves, and row-group stats can't help it).
     val probe = pairDocs.take(1025)
@@ -356,11 +356,13 @@ ${affineSigCtes()},
     * cascade, hash-checked against the DuckDB replay. The md5-per-
     * permutation entry stays as the cross-engine parity twin; THIS is the
     * kernel a 100 TB run uses (signature pass severalfold cheaper —
-    * measured in DedupScaleProbe's minhash leg). */
+    * measured by the deleted DedupScaleProbe's `sigkernel` leg, whose
+    * figures PROBES.md keeps). */
   /** Per-JVM cache of the affine family's verified pair set — the same
     * build-once-read-many pattern (and bench comparability) as the md5
     * family's [[PairsCache]]; the kernel's cost claim is measured where
-    * it belongs, in DedupScaleProbe's sigkernel leg. */
+    * it belongs, in the deleted DedupScaleProbe's `sigkernel` leg
+    * (figures in PROBES.md). */
   private object FastPairsCache {
     def get(s: SparkSession, dir: String): DataFrame =
       Scratch.parquet(s, "fastpairs", dir) {
@@ -1412,8 +1414,9 @@ ${affineSigCtes("MATERIALIZED")},
   /** The embedding increment: delta vectors routed through the FROZEN
     * base forest and assigned against the frozen cuts, then only
     * delta-involving co-located pairs verified by cosine — cost
-    * O(|delta| · occupancy), never a corpus re-route (the probe leg in
-    * DedupScaleProbe measures wall tracking |delta| under a fixed base).
+    * O(|delta| · occupancy), never a corpus re-route (the deleted
+    * DedupScaleProbe's `embdelta` leg measured wall tracking |delta| under
+    * a fixed base; PROBES.md keeps its figures).
     * Delta = the same planted shifted-id re-crawl as
     * [[embeddingNearDup]]: identical vectors route identically through
     * the frozen forest AND refine identically against frozen medians, so

@@ -95,8 +95,9 @@ final class ZebraEngine private (
   /** Corpus size, cached per engine instance: the IVF-PQ default rerank
     * budget consults it on EVERY query call, and a parquet count() —
     * though footer-metadata-only — is still a scheduler round-trip that
-    * would dominate small-batch query latency. Mutators invalidate
-    * (insertRecords advances it by the row count its write observed). */
+    * would dominate small-batch query latency; an LSH lookup bounds its
+    * candidate pairs with it. Every mutator keeps it from the row count
+    * its own write observed. */
   @volatile private var countCache: Long = -1L
 
   def count(): Long = {
@@ -137,6 +138,8 @@ final class ZebraEngine private (
     * document BINARY columns are preserved, missing ids are minted. */
   def insertRecords(records: DataFrame): Unit = {
     val base = nextSeq()
+    // the first write counts from 0
+    if (countCache < 0L && !hasData(vectorsDir)) countCache = 0L
     // seq = base + monotonically_increasing_id(): unique within the batch,
     // strictly greater than every previous batch's seq (ids are < 2^63-base),
     // and computed without any shuffle — a global row_number window would
@@ -313,9 +316,12 @@ final class ZebraEngine private (
                 Some(LshForest.scaledBudget(base, keptCount, count()))
               case None => searchK
             }
+            // the live count bounds the pairs: inserts grew the leaves
+            // past the model's build sample
             LshForest.topK(
               queries, readTable(indexDir), recs, model, k,
-              metric = m, searchKOpt = sk, vecId = "id")
+              metric = m, searchKOpt = sk, vecId = "id",
+              liveRows = Some(count()))
           case _ => exact
         }
     }
@@ -416,9 +422,8 @@ final class ZebraEngine private (
     * index — the intended semantics, not the reference's root-leaf-only
     * prune (lsh.rs:487). */
   def remove(ids: DataFrame): Unit = {
-    countCache = -1L
     val idCol = ids.columns.head
-    rewrite(vectorsDir, vectors.join(
+    countCache = rewrite(vectorsDir, vectors.join(
       ids.select(col(idCol).as("id")), Seq("id"), "left_anti"))
     if (hasData(indexDir))
       rewriteIndex(readTable(indexDir).join(
@@ -433,14 +438,13 @@ final class ZebraEngine private (
     * patterns, lsh.rs to_bits). The row shuffled by the window already
     * carries the embedding column, so the extra key costs nothing. */
   def deduplicate(): Unit = {
-    countCache = -1L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(xxhash64(col("embedding")), col("embedding"))
       .orderBy(col("seq"))
     val kept = vectors
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-    rewrite(vectorsDir, kept)
+    countCache = rewrite(vectorsDir, kept)
     // the index keep-set comes from the REWRITTEN table: `kept` is a plan
     // over the files the swap just moved away
     if (hasData(indexDir))
@@ -565,7 +569,7 @@ final class ZebraEngine private (
     * reach; queries already ignore them, but they inflate every index
     * scan) WITHOUT a retrain: rewrite the REACHABLE rows only
     * ([[liveIndex]] — the broadcast-semi-join view), restoring the
-    * leaf-sorted pruning layout. Decouples space reclamation from model
+    * leaf-sorted layout. Decouples space reclamation from model
     * retraining, which previously only a full [[refreshIndex]] did: the
     * model file is untouched, so routing — and therefore every query
     * result — is bit-identical pre/post (IncrementalSpec gates this; the
@@ -705,7 +709,7 @@ final class ZebraEngine private (
     }
   }
 
-  private[engine] def loadModel(): Option[LshForest.ForestModel] =
+  private[graft] def loadModel(): Option[LshForest.ForestModel] =
     if (config.indexKind != "lsh") None
     else loadRawModel().map(_.asInstanceOf[LshForest.ForestModel])
 
@@ -753,19 +757,23 @@ final class ZebraEngine private (
   def save(): Unit = writeMeta(path, config)
 
   /** Rewrite a table in place: stage, then swap (atomic at the dir level —
-    * the engine's replacement for the reference's per-key LSM deletes). */
-  private def rewrite(dir: String, df: DataFrame): Unit = {
+    * the engine's replacement for the reference's per-key LSM deletes).
+    * Returns the rows written, observed by the write itself. */
+  private def rewrite(dir: String, df: DataFrame): Long = {
     val tmp = dir + ".staging"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    val stats = Observation()
+    df.observe(stats, org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
     swap(dir, tmp, Some(df.schema))
+    stats.get("rows").asInstanceOf[Long]
   }
 
   /** Index rewrite in the layout its kind serves from. The LSH bucket
     * table is flat and leaf-sorted: range partitioning on (tree_id,
     * leaf_id) keeps the write parallel with one contiguous leaf range per
-    * file, so probe-time row-group pruning survives remove, deduplicate
-    * and vacuum (a plain rewrite would lose it); the extra sampling pass is
-    * fine for a maintenance op. The sq8/pq codes table is flat with no
+    * file, so the layout [[LshForest.writeIndex]] writes survives remove,
+    * deduplicate and vacuum (a plain rewrite would lose it); the extra
+    * sampling pass is fine for a maintenance op. The sq8/pq codes table is flat with no
     * routing layout. IVF-PQ is the one index still partitioned on disk,
     * by cell_id. */
   private def rewriteIndex(df: DataFrame): Unit = {

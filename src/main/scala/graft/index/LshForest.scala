@@ -28,13 +28,17 @@ import graft.ops.SimSearch
   *    and broadcast to executors;
   *  - the corpus is routed through the broadcast forest in ONE narrow map
   *    (no shuffle), producing a `(vec_id, tree_id, leaf_id)` bucket table
-  *    written as one flat parquet table whose files are sorted by
-  *    (tree_id, leaf_id), so probes prune at file + row-group level (every
-  *    query probes every tree, so `tree_id` directories would prune
-  *    nothing);
+  *    written as one flat parquet table whose files each hold one
+  *    contiguous (tree_id, leaf_id) range, sorted (every query probes every
+  *    tree, so `tree_id` directories would prune nothing);
   *  - a query probes |trees| · (1 + backups) leaves: the probe list is tiny,
-  *    broadcast, and the bucket join never shuffles the corpus;
-  *  - rerank reuses the bounded top-k aggregate (map-side partial).
+  *    broadcast, and the bucket join reads the table without shuffling it
+  *    (no scan predicate: a lookup's probed leaves span nearly every
+  *    file's range);
+  *  - rerank takes one of three join plans, chosen from a true upper bound
+  *    on the candidate pairs or from their count, never from an estimate
+  *    ([[topK]]), and reuses the bounded top-k aggregate (map-side
+  *    partial).
   *
   * Documented deviation (SURVEY.md §7.5): split points are sampled from the
   * subset being split (Annoy-correct), not from all vectors as the reference
@@ -272,8 +276,9 @@ object LshForest {
     probeLeavesSized(root, p, need)._1
 
   /** [[probeLeaves]] plus the accumulated build-sample occupancy of the
-    * probed leaves — a driver-side candidate-count estimate (exact when the
-    * sample is the whole corpus, an underestimate otherwise). */
+    * probed leaves: the exact bucket-row count of the model's own corpus
+    * when the build sample was that whole corpus, an underestimate on a
+    * capped sample or after inserts grew the leaves ([[routeOnDriver]]). */
   private def probeLeavesSized(
       root: Node, p: Array[Double], need: Int): (Seq[Int], Int) = {
     final case class Entry(priority: Double, node: Node)
@@ -324,8 +329,9 @@ object LshForest {
   }
 
   /** Persist the bucket table as one flat parquet table (tree_id is a data
-    * column, not a directory), each file sorted by (tree_id, leaf_id) so
-    * leaf probes prune files and row groups on their min/max stats.
+    * column, not a directory), each file sorted by (tree_id, leaf_id) over
+    * one contiguous leaf range, so its min/max stats name the leaves it
+    * holds.
     *
     * The shuffle key is a sub-leaf slice id, not tree_id: hashing on
     * tree_id alone caps write parallelism at numTrees (15 lumpy tasks for
@@ -384,42 +390,23 @@ object LshForest {
 
   /** Candidate generation: probed buckets joined against the bucket table,
     * deduped across trees (reference: DashSet union, lsh.rs:550-556).
-    * The probe side is collected to literals for partition/row-group pruning
-    * and broadcast for the join — the bucket table itself never shuffles. */
+    * The probe list is broadcast, so the bucket table never shuffles, and
+    * the join alone selects the probed leaves. A scan predicate built
+    * from them (per-tree leaf ranges) skipped no rows: a batch's probed
+    * leaves span every file's (tree_id, leaf_id) range. Measured on a
+    * 160-query batch over a 14k-vector, 210k-bucket-row engine table
+    * after appends and one compaction: 356,520 records read with it and
+    * without it, 472,658 pairs both ways. Nothing bounds these pairs
+    * before they are counted, so [[topK]] reranks them with its second or
+    * third plan. */
   def candidates(
       queries: DataFrame, buckets: DataFrame, model: ForestModel, searchK: Int,
-      queryId: String = "query_id", vecId: String = "vec_id"): DataFrame = {
-    // Materialize the probe list once: the pruning collect below and the
-    // bucket join both consume it, and re-running the routing UDF doubles
-    // the per-query tree-walk cost at large batches.
-    val probes = routeQueries(queries, model, searchK, queryId).localCheckpoint()
-    // Scan-pruning predicate. EXACT leaf selection is the broadcast join
-    // below — this predicate only exists so the bucket scan skips files and
-    // row groups, so it must stay cheap PER ROW too (Spark re-applies pushed
-    // filters post-scan): a per-leaf IN list beyond a few hundred literals
-    // costs more evaluating than it saves (8s vs 0.4s at a 6M-row bucket
-    // table). This path serves batches above SmallBatchCap only (smaller
-    // ones take topKSmall, which has no predicate): probe sets of at most
-    // 256 leaves keep exact literals, larger ones use per-tree leaf_id
-    // ranges — sargable, O(numTrees) per row, and still row-group-tight
-    // against the leaf-sorted file layout.
-    val probed = probes.select("tree_id", "leaf_id").distinct().collect()
-      .groupBy(_.getInt(0)).map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq }
-    val totalLeaves = probed.valuesIterator.map(_.size).sum
-    val pruned =
-      if (totalLeaves <= 256)
-        probed.map { case (t, leaves) =>
-          (col("tree_id") === t) && col("leaf_id").isin(leaves: _*)
-        }.reduceOption(_ || _).getOrElse(lit(false))
-      else
-        probed.map { case (t, leaves) =>
-          (col("tree_id") === t) && col("leaf_id").between(leaves.min, leaves.max)
-        }.reduceOption(_ || _).getOrElse(lit(false))
-    buckets.filter(pruned)
-      .join(broadcast(probes), Seq("tree_id", "leaf_id"))
+      queryId: String = "query_id", vecId: String = "vec_id"): DataFrame =
+    buckets
+      .join(broadcast(routeQueries(queries, model, searchK, queryId)),
+        Seq("tree_id", "leaf_id"))
       .select(col(queryId), col("q_emb"), col(vecId))
       .dropDuplicates(queryId, vecId)
-  }
 
   private def toDoubleArray(v: Any): Array[Double] = v match {
     case s: scala.collection.Seq[_] =>
@@ -438,131 +425,73 @@ object LshForest {
     case a: Array[Double] => a
   }
 
-  /** Small-batch latency path for [[topK]]: the forest model already lives
-    * on the driver, so a handful of queries can be routed locally —
-    * probe lists and the broadcast probe relation both come from driver
-    * arrays, so routing launches no Spark job where
-    * the distributed path runs a probe job, a checkpoint, a distinct-collect
-    * and a count. Only the bucket join and the rerank execute on
-    * the cluster, when the result is collected (plus one bounded `take` at
-    * build time when the candidate set is small enough to push into the
-    * vectors scan as a literal filter).
-    *
-    * Candidate pairs are NOT deduplicated here: a (query, vec) pair found
-    * by several trees reaches the rerank once per tree, and the top-k
-    * aggregate ([[graft.ops.TopKAgg]], at most one entry per (dist, id))
-    * collapses the repeats inside its bounded buffer. A `dropDuplicates`
-    * would cost a shuffle stage per call to save a few distance
-    * evaluations. At 100 TB the routing cost is |Q|·numTrees tree walks —
-    * microseconds against any corpus size. */
-  private def topKSmall(
-      qRows: Array[org.apache.spark.sql.Row],
-      buckets: DataFrame, vectors: DataFrame, model: ForestModel, k: Int,
-      metric: Distances.Metric, searchK: Int,
-      queryId: String, vecId: String, roundTo: Int,
-      qIdType: org.apache.spark.sql.types.DataType,
-      sampleExact: Boolean): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val spark = buckets.sparkSession
-    val qEmbs = qRows.map(r => (r.get(0), toDoubleArray(r.get(1))))
+  /** Query batches at or below this size route driver-side; larger
+    * batches keep the fully distributed probe pipeline ([[candidates]]). */
+  private[graft] val SmallBatchCap = 128
 
-    // Driver-side routing: per-(query, tree) probe lists. `candEst` sums
-    // the probed leaves' BUILD-SAMPLE occupancy: an exact upper bound on
-    // the candidate row count (pairs repeated across trees included) when
-    // the sample was the whole corpus AND nothing was ingested since the
-    // build; an underestimate on capped samples and after incremental adds
-    // (which append bucket rows into existing leaves without touching the
-    // model). It therefore only ever
-    // NOMINATES the cheapest tier below — a bounded take() verifies it
-    // before anything trusts it.
-    var candEst = 0L
+  /** The most candidate rows the rerank broadcasts; past it the pairs
+    * hash-join the vectors instead. */
+  private val MaxBroadcastPairs = 2000000L
+
+  /** Driver-side routing of a small batch: its (query, tree, leaf) probe
+    * rows, and an upper bound on the bucket rows they select (pairs found
+    * by several trees counted once per tree).
+    *
+    * With `liveRows` (the live vector count of an engine whose inserts
+    * append bucket rows without touching the model) the bound is
+    * |Q| · numTrees · liveRows: each tree holds one reachable bucket row
+    * per live vector, a query probes distinct leaves of a tree, and rows
+    * stale from leaf splits sit under leaf ids no probe reaches. Without
+    * it, `buckets` must be the bucket table of the model's own corpus:
+    * when the build sample was that whole corpus the probed leaves'
+    * summed sample occupancy is exact, otherwise nothing bounds the
+    * pairs before they are counted (Long.MaxValue). */
+  private[graft] def routeOnDriver(
+      qEmbs: Seq[(Any, Array[Double])], model: ForestModel, searchK: Int,
+      liveRows: Option[Long]): (Seq[org.apache.spark.sql.Row], Long) = {
+    import org.apache.spark.sql.Row
+    var occupancy = 0L
     val probeRows = collection.mutable.ArrayBuffer.empty[Row]
     for ((qid, p) <- qEmbs; t <- model.trees.indices) {
       val (leaves, got) = probeLeavesSized(model.trees(t), p, searchK)
-      candEst += got
+      occupancy += got
       leaves.foreach(l => probeRows += Row(qid, t, l))
     }
-
-    // No scan-pruning predicate on the bucket scan: the broadcast probe
-    // join below is the exact leaf selector. A predicate built from this
-    // call's leaf ids writes them into the generated code as literals, so
-    // every new lookup compiled fresh classes, and Spark re-evaluates it on
-    // every scanned row; it skipped almost nothing, since a lookup's
-    // probed leaves span nearly every file's (tree_id, leaf_id) range.
-    // Measured at 1M 64-d vectors (800k bulk + 4 appends of 50k, 4 CPUs,
-    // 20 distinct single-query lookups a stage, answers identical): rows
-    // read per lookup 12,855,386 with the predicate vs 12,858,096
-    // without, codegen compiles per lookup 2 vs 0, lookup median 6.1 s vs
-    // 2.1 s (5.5 s vs 2.4 s after the appends). The distributed
-    // candidates() keeps its predicate: one large batch amortizes one
-    // compile. The <= 1024 collect tier below does still push this call's
-    // candidate ids into the vectors scan as literals.
-    val probeSchema = StructType(Seq(
-      StructField(queryId, qIdType),
-      StructField("tree_id", IntegerType),
-      StructField("leaf_id", IntegerType)))
-    val probeRel = spark.createDataFrame(probeRows.toSeq.asJava, probeSchema)
-    val cand0 = buckets
-      .join(broadcast(probeRel), Seq("tree_id", "leaf_id"))
-      .select(col(queryId), col(vecId))
-
-    val v0 = vectors.select(
-      col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-    // Join-strategy decision. The estimate NOMINATES the collect tier;
-    // a bounded take() verifies it (early-terminating — cheap when right,
-    // and it is only wrong after incremental ingest grew the leaves past
-    // the build snapshot). Every other case materializes the pair set
-    // once (localCheckpoint) and lets its TRUE count decide, exactly like
-    // the distributed path — an estimate that undercounts can therefore
-    // nominate a cheaper tier but never an unsafe one. Tiers:
-    //  - <= 1024 candidate rows: collect them (bounded), push the ids into
-    //    the vectors scan as a literal filter (row-group pruning of the fetch);
-    //  - <= 2M true pairs: broadcast (same bar as the distributed path);
-    //  - beyond: plain hash join — both sides hash on vecId, nothing
-    //    collects anywhere.
-    val verified: Option[Array[Row]] =
-      if (sampleExact && candEst <= 1024) {
-        val t = cand0.take(1025)
-        if (t.length <= 1024) Some(t) else None
-      } else None
-    val (candSide, v) = verified match {
-      case Some(t) =>
-        val vIdType = buckets.schema(vecId).dataType
-        val candSchema = StructType(Seq(
-          StructField(queryId, qIdType), StructField(vecId, vIdType)))
-        val candRel = spark.createDataFrame(t.toSeq.asJava, candSchema)
-        val ids = t.map(_.get(1)).distinct.toSeq
-        (broadcast(candRel), v0.filter(col(vecId).isin(ids: _*)))
-      case None if sampleExact && candEst <= 2000000 =>
-        // FUSED serving path (r16, guide §2.4/§3.1): when the build sample
-        // covered the corpus, candEst is an exact UPPER bound on the pair
-        // count, so the broadcast tier is provably safe without the
-        // materialize + count round-trip — the bucket join executes ONCE,
-        // inside the broadcast build of the rerank join, collapsing two
-        // scheduler barriers (checkpoint job + count job) per serving call.
-        (broadcast(cand0), v0)
-      case None =>
-        val c = cand0.localCheckpoint()
-        val n = c.count()
-        if (n <= 2000000) (broadcast(c), v0) else (c, v0)
+    val sampleExact = qEmbs.headOption.forall { case (_, p) =>
+      model.sampleTotal < byteBoundedCap(model.opts.sampleCap, p.length) }
+    val bound = liveRows match {
+      case Some(n) => qEmbs.length.toLong * model.numTrees * n
+      case None => if (sampleExact) occupancy else Long.MaxValue
     }
-    val qSchema = StructType(Seq(
-      StructField(queryId, qIdType),
-      StructField("q_emb", ArrayType(DoubleType))))
-    val qRel = spark.createDataFrame(
-      qEmbs.map { case (id, e) => Row(id, e.toSeq) }.toSeq.asJava, qSchema)
-    val scored = v.join(candSide, vecId)
-      .join(broadcast(qRel), queryId)
+    (probeRows.toSeq, bound)
+  }
+
+  /** Exact rerank of candidate (query, vec) pairs, in one of three plans:
+    *  1. `bound` <= 2M rows: broadcast the pairs and the queries, with no
+    *     job before the action;
+    *  2. otherwise materialize the pairs once (localCheckpoint) and count
+    *     them, then broadcast when the count is <= 2M;
+    *  3. otherwise a plain hash join: both sides hash on vecId, nothing
+    *     collects anywhere.
+    * `bound` must be a true upper bound on `cand`'s rows, never a guess. */
+  private def rerank(
+      cand: DataFrame, q: DataFrame, bound: Long, vectors: DataFrame, k: Int,
+      metric: Distances.Metric, queryId: String, vecId: String,
+      roundTo: Int): DataFrame = {
+    val (candSide, qSide) =
+      if (bound <= MaxBroadcastPairs) (broadcast(cand), broadcast(q))
+      else {
+        val c = cand.localCheckpoint()
+        if (c.count() <= MaxBroadcastPairs) (broadcast(c), broadcast(q)) else (c, q)
+      }
+    val scored = vectors
+      .select(col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
+      .join(candSide, vecId)
+      .join(qSide, queryId)
       .withColumn("dist",
         SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
     SimSearch.takeTopK(scored, k, queryId, vecId)
   }
-
-  /** Query batches at or below this size route driver-side ([[topKSmall]]);
-    * larger batches keep the fully distributed probe pipeline. */
-  private[graft] val SmallBatchCap = 128
 
   /** Default candidate budget: k·numTrees sample points per tree — Annoy's
     * documented serving default (search_k = n·n_trees), floored by the old
@@ -579,78 +508,68 @@ object LshForest {
     math.max(k * model.numTrees, math.max(4 * k, model.opts.maxNodeSize))
 
   /** `search` (reference: lsh.rs:544-565): candidates from every tree,
-    * exact-metric rerank, take k. searchK defaults to
-    * [[defaultSearchK]] per tree.
+    * exact-metric rerank, take k. searchK defaults to [[defaultSearchK]]
+    * per tree.
     *
-    * The candidate pipeline executes exactly ONCE via an eager
-    * localCheckpoint — the probe + bucket join runs a single time and its
-    * (query, vec) pairs stay distributed in executor block storage, so
-    * driver memory is flat in the query-batch size (the round-2 version
-    * collect()ed the pairs: linear driver memory, OOM at ~10⁶ queries).
-    * For small batches the candidate ids additionally push into the vectors
-    * scan as a literal IN filter so parquet row-group stats prune the fetch;
-    * past that the (broadcast-candidate) join alone prunes — row-group stats
-    * can't help a 100k-literal predicate, and the optimizer would choke on
-    * it. The reference's in-leaf "rank and take n best" (lsh.rs:309-330) is
+    * A batch of at most [[SmallBatchCap]] queries routes on the driver
+    * ([[routeOnDriver]]), where the forest already lives: no job runs
+    * before the action when its pair bound is at most 2M rows, which
+    * covers single lookups. Its candidate pairs are not deduplicated: a
+    * pair found by several trees reaches the rerank once per tree, and the
+    * top-k aggregate ([[graft.ops.TopKAgg]], at most one entry per
+    * (dist, id)) collapses the repeats inside its bounded buffer, where a
+    * `dropDuplicates` would cost a shuffle stage per call. A larger batch
+    * takes the distributed [[candidates]] and has no bound before its
+    * pairs are counted. Both feed one [[rerank]] and its three plans.
+    *
+    * The bound's contract: `buckets` is the bucket table of the model's
+    * corpus, unless the caller passes `liveRows`, the live row count of a
+    * corpus whose inserts appended bucket rows under the model's leaves
+    * (see [[routeOnDriver]]).
+    *
+    * The reference's in-leaf "rank and take n best" (lsh.rs:309-330) is
     * deliberately not reproduced — keeping whole leaves gives a candidate
-    * superset, so recall can only be >= the reference's at equal settings. */
+    * superset, so recall can only be >= the reference's at equal
+    * settings. */
   def topK(
       queries: DataFrame, buckets: DataFrame, vectors: DataFrame,
       model: ForestModel, k: Int,
       metric: Distances.Metric = Distances.L2Squared,
       searchKOpt: Option[Int] = None,
       queryId: String = "query_id", vecId: String = "vec_id",
-      roundTo: Int = 4): DataFrame = {
+      roundTo: Int = 4, liveRows: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
     val searchK = searchKOpt.getOrElse(defaultSearchK(k, model))
-    // Latency path: a small query batch (the reference CLI's k-NN lookups,
-    // the engine's per-call batches) never needs the distributed probe
-    // pipeline — one bounded take() decides, and the take's partial scan is
-    // noise for the large-batch case it falls through to. Whether the build
-    // sample covered the whole corpus decides how topKSmall sizes its
-    // joins: exact sample → driver-side estimates; capped sample → one
-    // materialize + count (see topKSmall).
-    val qProbe = queries
+    val qRows = queries
       .select(col(queryId), col("embedding")).take(SmallBatchCap + 1)
-    val qDim = qProbe.headOption.map(_.get(1) match {
-      case s: scala.collection.Seq[_] => s.length
-      case a: Array[_] => a.length
-    }).getOrElse(64)
-    val sampleExact =
-      model.sampleTotal < byteBoundedCap(model.opts.sampleCap, qDim)
-    if (qProbe.length <= SmallBatchCap)
-      return topKSmall(
-        qProbe, buckets, vectors, model, k, metric, searchK,
-        queryId, vecId, roundTo, queries.schema(queryId).dataType,
-        sampleExact)
-    val cand = candidates(queries, buckets, model, searchK, queryId, vecId)
+    if (qRows.length > SmallBatchCap) {
+      val cand = candidates(queries, buckets, model, searchK, queryId, vecId)
+        .select(col(queryId), col(vecId))
+      val q = queries.select(
+        col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
+      return rerank(cand, q, Long.MaxValue, vectors, k, metric,
+        queryId, vecId, roundTo)
+    }
+    val spark = buckets.sparkSession
+    val qIdType = queries.schema(queryId).dataType
+    val qEmbs = qRows.toSeq.map(r => (r.get(0), toDoubleArray(r.get(1))))
+    val (probeRows, bound) = routeOnDriver(qEmbs, model, searchK, liveRows)
+    val probeRel = spark.createDataFrame(probeRows.asJava, StructType(Seq(
+      StructField(queryId, qIdType),
+      StructField("tree_id", IntegerType),
+      StructField("leaf_id", IntegerType))))
+    val cand = buckets
+      .join(broadcast(probeRel), Seq("tree_id", "leaf_id"))
       .select(col(queryId), col(vecId))
-      .localCheckpoint() // eager: materialize once, cut lineage, stay distributed
-    val nPairs = cand.count() // free: served from the checkpointed blocks
-    val v0 = vectors.select(
-      col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-    // Literal-IN fetch pruning pays off only when the id list is small:
-    // single-query lookups (the latency path — ~searchK·numTrees ids against
-    // a huge corpus scan). Past ~1k literals the optimizer spends more
-    // building the predicate than row-group stats save, and at the
-    // exhaustive-budget extreme the list IS the corpus — pure overhead.
-    val v =
-      if (nPairs <= 1024) {
-        val candIds =
-          cand.select(col(vecId)).distinct().collect().map(_.get(0)).toSeq
-        v0.filter(col(vecId).isin(candIds: _*))
-      } else v0
-    val q = queries.select(
-      col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
-    // Broadcast the pair set while it plausibly fits an executor; at very
-    // large query batches fall back to a shuffle join (the right plan there
-    // — both sides hash on vec_id, nothing collects anywhere).
-    val (candSide, qSide) =
-      if (nPairs <= 2000000) (broadcast(cand), broadcast(q)) else (cand, q)
-    val scored = v.join(candSide, vecId)
-      .join(qSide, queryId)
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    SimSearch.takeTopK(scored, k, queryId, vecId)
+    val qRel = spark.createDataFrame(
+      qEmbs.map { case (id, e) => Row(id, e.toSeq) }.asJava,
+      StructType(Seq(
+        StructField(queryId, qIdType),
+        StructField("q_emb", ArrayType(DoubleType)))))
+    rerank(cand, broadcast(qRel), bound, vectors, k, metric,
+      queryId, vecId, roundTo)
   }
 
   /** Candidate budget for a FILTERED search: candidates route through the

@@ -192,7 +192,7 @@ object Ivf {
       queryId: String = "query_id", vecId: String = "vec_id",
       roundTo: Int = 4): DataFrame = {
     // Materialize the probe list once: the partition-pruning collect and
-    // the cell join both consume it (same pattern as LshForest.candidates).
+    // the cell join both consume it.
     val p = probes(queries, model, nprobe, queryId).localCheckpoint()
     val probedCells = p.select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq

@@ -207,11 +207,12 @@ object Minhash {
     *   sig[j-1]    = min over shingles of perm_j        (a BIGINT)
     *
     * Everything after the digest is a multiply-add — the signature pass
-    * drops from nPerms digests to one per shingle (measured severalfold in
-    * DedupScaleProbe). TWO independent 60-bit folds of the SAME digest
-    * seed the family (the digest has 32 hex chars; one fold only spends
-    * 15): with a single base hash, whether a near-dup pair's differing
-    * shingle wins the min is correlated across ALL permutations, and the
+    * drops from nPerms digests to one per shingle (measured severalfold by
+    * the deleted DedupScaleProbe's `sigkernel` leg, figures in PROBES.md).
+    * TWO independent 60-bit folds of the SAME digest seed the family (the
+    * digest has 32 hex chars; one fold only spends 15): with a single base
+    * hash, whether a near-dup pair's differing shingle wins the min is
+    * correlated across ALL permutations, and the
     * decontam probe measured that correlation as a deterministic ~1%
     * banding miss at J ≈ 0.97 vs the md5 family's ~0%; splitting the
     * bands across two independent folds squares the correlated-miss

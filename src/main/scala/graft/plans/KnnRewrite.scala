@@ -28,12 +28,13 @@ import graft.index.LshForest
   *
   * over a corpus with a REGISTERED LSH index, and rewrites it to the
   * engine's index/candidate path ([[LshForest.topK]]: driver-side probe
-  * routing → pruned bucket join → exact rerank of candidates only). Naive
-  * user SQL then hits the index instead of scoring + sorting the full
-  * corpus — at 100 TB the difference between a full scan-and-sort and a
-  * few probed row groups. The reference has no planner at all (SURVEY
-  * §4.1); this is the Spark-native analogue of its hardcoded index
-  * access path (lsh.rs:544-565) made available to DECLARATIVE queries.
+  * routing → bucket join against the broadcast probe list → exact rerank
+  * of the candidates only). Naive user SQL then hits the index instead of
+  * scoring + sorting the full corpus — at 100 TB the difference between
+  * scoring every vector and scoring a few thousand candidates. The
+  * reference has no planner at all (SURVEY §4.1); this is the Spark-native
+  * analogue of its hardcoded index access path (lsh.rs:544-565) made
+  * available to DECLARATIVE queries.
   *
   * Semantics: the rewrite preserves the plan's results exactly when the
   * registered budget is exhaustive (every leaf probed — candidates = the

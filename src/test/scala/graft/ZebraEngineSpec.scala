@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
 import graft.engine.{EngineConfig, ZebraEngine}
+import graft.index.LshForest
 
 /** Engine lifecycle round-trip (SURVEY.md §2.2 D1–D10): create → insert →
   * query → dedup → remove → incremental index add → clear → reopen. */
@@ -432,5 +433,110 @@ class ZebraEngineSpec extends AnyFunSuite {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, containsNull = true))
     check("clear, re-insert and refreshIndex")
+  }
+
+  test("remove and deduplicate keep the count cache: count() runs no job after either") {
+    val eng = freshEngine()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    eng.insertRecords(emb.filter(col("id") < "v000020")
+      .select(concat(lit("dup_"), col("id")).as("id"), col("embedding")))
+    def stored(): Long = spark.read.parquet(s"$enginePath/vectors").count()
+    withPhaseLog { log =>
+      eng.remove(emb.filter(col("id") >= "v000497").select("id"))
+      val afterRemove = log.phase("count after remove")(eng.count())
+      assert(afterRemove == stored() && afterRemove == 517)
+      eng.deduplicate()
+      val afterDedup = log.phase("count after dedup")(eng.count())
+      assert(afterDedup == stored() && afterDedup == 497)
+      log.drain()
+      assert(log.jobCount("count after remove") == 0)
+      assert(log.jobCount("count after dedup") == 0)
+    }
+  }
+
+  /** Pins a one-query lookup of stored vector `id`, built a second time
+    * (the first reads the tables' schemas): no job to build it, at most 5
+    * in its action, and `id` among its hits. */
+  private def pinLookup(eng: ZebraEngine, id: String): Unit = {
+    val q = eng.vectors.filter(col("id") === id)
+      .select(lit(0L).as("query_id"), col("embedding")).collect()
+    def lookup(): DataFrame = eng.queryVectors(
+      spark.createDataFrame(java.util.Arrays.asList(q: _*), q.head.schema), k = 10)
+    lookup().collect()
+    withPhaseLog { log =>
+      val df = log.phase("build")(lookup())
+      val got = log.phase("action")(df.collect())
+      log.drain()
+      assert(log.jobCount("build") == 0)
+      assert(log.jobCount("action") <= 5, s"${log.jobCount("action")} jobs")
+      assert(got.length == 10 && got.exists(_.getAs[String]("id") == id))
+    }
+  }
+
+  test("an indexed lookup builds with no job and runs at most 5 in its action, below and above the build-sample cap") {
+    val eng = freshEngine()
+    eng.insertRecords(emb)
+    eng.refreshIndex()
+    pinLookup(eng, "v000001")
+    // 1024-d rows cap the build sample at 4,096, so no build-sample
+    // figure bounds this engine's pairs: only its live count does
+    val dim = 1024
+    val path = SparkTestBase.tmpDir("test_engine_capped")
+    ZebraEngine.destroy(path)
+    val capped = ZebraEngine.create(spark, path, EngineConfig(dim = dim))
+    val gauss = udf { (i: Long) =>
+      val r = new scala.util.Random(i)
+      Array.fill(dim)(r.nextGaussian().toFloat)
+    }
+    capped.insertRecords(spark.range(0L, 4200L, 1L, 4)
+      .select(format_string("r%05d", col("id")).as("id"), gauss(col("id")).as("embedding")))
+    capped.refreshIndex()
+    assert(capped.loadModel().get.sampleTotal == LshForest.byteBoundedCap(65536, dim))
+    pinLookup(capped, "r00007")
+    ZebraEngine.destroy(path)
+  }
+
+  test("LshForest.candidates on a 150-query batch runs 4 jobs: no probe checkpoint, no leaf collect") {
+    val rows = emb.orderBy("id").collect().toSeq
+    val vecs = local(rows)
+    val model = LshForest.build(vecs, vecId = "id")
+    val dir = SparkTestBase.tmpDir("test_candidates_index")
+    LshForest.writeIndex(vecs, model, dir, vecId = "id")
+    val buckets = spark.read.parquet(dir)
+    val batch = local(rows.take(150)).select(col("id").as("query_id"), col("embedding"))
+    withPhaseLog { log =>
+      val pairs = log.phase("candidates")(
+        LshForest.candidates(batch, buckets, model, searchK = 150, vecId = "id").count())
+      log.drain()
+      assert(pairs >= 150L * 10)
+      assert(log.jobCount("candidates") == 4, s"${log.jobCount("candidates")} jobs")
+    }
+  }
+
+  test("after inserts grow the leaves, the bound a lookup plans with covers every probed pair") {
+    val eng = freshEngine()
+    val rows = emb.orderBy("id").collect().toSeq
+    eng.insertRecords(local(rows.take(100))) // the build sample is the corpus
+    eng.refreshIndex()
+    // 1,000 vectors in one tight cluster around a stored one: they pile
+    // into the leaves its lookup probes, which the model never sees
+    val centre = rows.head.getSeq[Float](1).toArray
+    val rnd = new scala.util.Random(7)
+    eng.insertRecords(local((0 until 1000).map(i => Row(f"c$i%05d",
+      centre.map(x => x + 1e-3f * rnd.nextGaussian().toFloat).toSeq))))
+    val model = eng.loadModel().get
+    val searchK = LshForest.defaultSearchK(10, model)
+    val q = Seq[(Any, Array[Double])]((0L, centre.map(_.toDouble)))
+    val (probes, bound) = LshForest.routeOnDriver(q, model, searchK, Some(eng.count()))
+    import spark.implicits._
+    val probed = probes.map(r => (r.getInt(1), r.getInt(2))).toDF("tree_id", "leaf_id")
+    val pairs = spark.read.parquet(s"$enginePath/index")
+      .join(probed, Seq("tree_id", "leaf_id")).count()
+    assert(bound >= pairs, s"bound $bound < $pairs probed pairs")
+    // the build-sample occupancy, which the broadcast plan once trusted,
+    // undercounts here
+    val (_, occupancy) = LshForest.routeOnDriver(q, model, searchK, None)
+    assert(occupancy < pairs, s"occupancy $occupancy >= $pairs probed pairs")
   }
 }
