@@ -66,37 +66,29 @@ object EngineQueries {
     * the instance/model identity: a fresh `open` per query would reload and
     * re-broadcast the model on every execution. */
   object EngineCache {
+    /** The fixture embeddings inserted into an engine of `kind`, with its
+      * index built when `indexed`. */
     private def build(s: org.apache.spark.sql.SparkSession, dir: String,
-        name: String, indexed: Boolean): ZebraEngine =
+        name: String, kind: String, indexed: Boolean): ZebraEngine =
       Scratch.cached(name, dir) { p =>
-        val eng = ZebraEngine.create(s, p, EngineConfig(dim = 64))
+        val eng = ZebraEngine.create(
+          s, p, EngineConfig(dim = 64, indexKind = kind))
         eng.insertRecords(Tables.embeddings(s, dir)
           .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding")))
         if (indexed) eng.refreshIndex()
         eng
       }
     def ensure(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      build(s, dir, "engine", indexed = false)
+      build(s, dir, "engine", "lsh", indexed = false)
     /** Same corpus, but with the LSH forest built — queries take the
       * indexed branch of `queryVectors`. */
     def ensureIndexed(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      build(s, dir, "engine_idx", indexed = true)
-    /** Same corpus through the PLUGGABLE index kind: the engine built and
-      * queried over an IVF-PQ codes index instead of the LSH forest. */
-    def ensureIvfPq(s: org.apache.spark.sql.SparkSession, dir: String): ZebraEngine =
-      ensureKind(s, dir, "ivfpq")
-    /** Same corpus through ANY pluggable index kind (ivfpq / sq8 / pq). */
+      build(s, dir, "engine_idx", "lsh", indexed = true)
+    /** Same corpus through a pluggable index kind (ivfpq / sq8 / pq). */
     def ensureKind(
         s: org.apache.spark.sql.SparkSession, dir: String,
         kind: String): ZebraEngine =
-      Scratch.cached(s"engine_$kind", dir) { p =>
-        val eng = ZebraEngine.create(
-          s, p, EngineConfig(dim = 64, indexKind = kind))
-        eng.insertRecords(Tables.embeddings(s, dir)
-          .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding")))
-        eng.refreshIndex()
-        eng
-      }
+      build(s, dir, s"engine_$kind", kind, indexed = true)
   }
 
   /** D1+D9+D11 through the real engine lifecycle: records inserted via

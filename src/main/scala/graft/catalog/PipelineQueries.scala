@@ -32,8 +32,7 @@ object PipelineQueries {
       if (!nearDedup) None
       else Some(DedupQueries.NgramPairsCache.get(s, dir)
         .select(col("doc_b").as("doc_id")).distinct()),
-      recrawlShift = 100000L,
-      materialize = true)
+      recrawlShift = 100000L)
 
   /** The shared crawl→shard head: simulated re-crawl (every doc fetched
     * twice under distinct ids — the dedup stage must provably halve the
@@ -78,19 +77,19 @@ object PipelineQueries {
       .withColumn("quality_1e4", expr("(q_num * 100) div text_len"))
   }
 
-  /** The pipeline parameterized by its input frame (PipelineScaleProbe
-    * runs it on synthetic million-doc corpora; the catalog entries bind
-    * it to the fixture + cached near-dup pair table). `nearDupDrop`, when
-    * present, is the doc_id drop-list the near-dup stage anti-joins. */
+  /** The pipeline parameterized by its input frame (the catalog entries
+    * bind it to the fixture + cached near-dup pair table). `nearDupDrop`,
+    * when present, is the doc_id drop-list the near-dup stage anti-joins.
+    * The filtered crawl is checkpointed between the heuristic and LM
+    * stages: a production pipeline persists between stages anyway, and
+    * without it the dedup+gate subtree recomputes for each consumer. */
   private[graft] def curateFrom(
       s: org.apache.spark.sql.SparkSession,
       d: org.apache.spark.sql.DataFrame,
       nearDupDrop: Option[org.apache.spark.sql.DataFrame],
-      recrawlShift: Long,
-      materialize: Boolean = false): org.apache.spark.sql.DataFrame = {
+      recrawlShift: Long): org.apache.spark.sql.DataFrame = {
       import s.implicits._
-      val gated = dedupAndGate(d, nearDupDrop, recrawlShift)
-      val filtered = if (materialize) gated.localCheckpoint() else gated
+      val filtered = dedupAndGate(d, nearDupDrop, recrawlShift).localCheckpoint()
       // Language-ID: best stopword-hit ratio (text_lang_id). Docs with no
       // stopword hit at all have no prediction and drop out — a real
       // pipeline routes those to a review queue, not the training set.
@@ -291,12 +290,12 @@ object PipelineQueries {
     * boundary doc) flips the hash. Scale shape is each stage's own
     * (documented on its operator); the cascade adds no new shuffle
     * beyond its stages. */
-  /** `tauMicro` is the LM keep threshold (fixture-calibrated default);
-    * `materialize` checkpoints the filtered crawl between the heuristic
-    * and LM stages (a production pipeline persists between stages anyway,
-    * and without it the dedup+gate subtree recomputes for each of its
-    * three consumers). The catalog entry passes true since the r15
-    * optimization round: the single-plan form re-executed the corpus-sized
+  /** `tauMicro` is the LM keep threshold (fixture-calibrated default).
+    * The filtered crawl is checkpointed between the heuristic and LM
+    * stages (a production pipeline persists between stages anyway, and
+    * without it the dedup+gate subtree recomputes for each of its three
+    * consumers), as it has been since the r15 optimization round: the
+    * single-plan form re-executed the corpus-sized
     * dedup+gate+LM subtree once per downstream consumer — a 907-operator
     * physical plan whose EXECUTED work measured 9.5–11.2 s of task time
     * and 12.9 MB of shuffle per run at sf0.1; checkpointed it is
@@ -310,12 +309,11 @@ object PipelineQueries {
       d: org.apache.spark.sql.DataFrame,
       recrawlShift: Long,
       budget: Long,
-      tauMicro: Long = 34200L,
-      materialize: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val filtered0 = dedupAndGate(d, nearDupDrop = None, recrawlShift)
+      tauMicro: Long = 34200L): org.apache.spark.sql.DataFrame = {
+    val filtered = dedupAndGate(d, nearDupDrop = None, recrawlShift)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("word_tokens").as("n_tok"))
-    val filtered = if (materialize) filtered0.localCheckpoint() else filtered0
+      .localCheckpoint()
     val trusted = d.filter(col("doc_id") % 4 === 0).select("doc_id", "text")
     val lm = graft.ops.QualityModels
       .lmScore(filtered.select("doc_id", "text"), trusted, tauMicro = tauMicro)
@@ -323,12 +321,11 @@ object PipelineQueries {
       .select(col("doc_id"), col("nll_micro"), col("n_tokens").as("n_lm"))
     // The selection stages each scan their input more than once
     // (temperatureSample: counts + filter; tokenBudgetSelect: histogram +
-    // full-bucket semi-join + boundary), so under `materialize` the
-    // post-LM frame — text already dropped, a few numeric cols per
-    // surviving doc — is checkpointed too; otherwise the corpus-sized
-    // LM-scoring join above re-executes once per downstream scan.
-    val lmKept0 = filtered.drop("text").join(lm, "doc_id")
-    val lmKept = if (materialize) lmKept0.localCheckpoint() else lmKept0
+    // full-bucket semi-join + boundary), so the post-LM frame — text
+    // already dropped, a few numeric cols per surviving doc — is
+    // checkpointed too; otherwise the corpus-sized LM-scoring join above
+    // re-executes once per downstream scan.
+    val lmKept = filtered.drop("text").join(lm, "doc_id").localCheckpoint()
     val mixed = graft.ops.Curation
       .temperatureSample(lmKept, strata = "lang", tau = 0.5)
     val bucket =
@@ -352,8 +349,7 @@ object PipelineQueries {
     (s, dir) => shardV2From(
       Tables.documents(s, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source")),
-      recrawlShift = 100000L, budget = PretrainV2Budget,
-      materialize = true),
+      recrawlShift = 100000L, budget = PretrainV2Budget),
     Some(s"""
       WITH crawl AS (SELECT doc_id, text, lang, source FROM documents
                      UNION ALL
@@ -458,28 +454,23 @@ object PipelineQueries {
     * shuffles beyond their proven plans), the tercile table is
     * languages-sized and BROADCASTS, bucket assignment is map-side; the
     * only windows are per-doc-partitioned (lang-ID top-1). */
-  /** `materialize` checkpoints the corpus-sized `scored` frame (lang-ID ⋈
-    * LM cascade) between its TWO consumers — the tercile aggregation and
-    * the final bucket-assignment join; without it the whole upstream
-    * cascade re-executes once per consumer (the shardV2From lesson, same
-    * knob convention: the catalog entry keeps the pure single-plan form,
-    * the scale probe and production pass true). Measured at r15: the
-    * checkpointed form is NOT faster here — the initial plan shows the
+  /** The corpus-sized `scored` frame (lang-ID ⋈ LM cascade) feeds TWO
+    * consumers — the tercile aggregation and the final bucket-assignment
+    * join — and is deliberately NOT checkpointed. Measured at r15: the
+    * checkpointed form is not faster here — the initial plan shows the
     * scored subtree twice (58 Exchanges) but the EXECUTED work is
     * 0.3–0.6 s task time / 0.2 MB shuffle, because the two consumers
     * read the frame through IDENTICAL subtrees and AQE reuses the
-    * materialized exchanges at runtime; the eager checkpoint only adds
+    * materialized exchanges at runtime; an eager checkpoint only adds
     * a barrier job. Contrast shardV2From, whose consumers' subtrees
     * differ (different projections/filters) and defeat that reuse. */
   private[graft] def ccnetFrom(
-      docs: org.apache.spark.sql.DataFrame,
-      materialize: Boolean = false): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val pred = TextQueries.langIdPred(docs).select("doc_id", "pred_lang")
     val lm = graft.ops.QualityModels
       .lmScore(docs, docs.filter(col("doc_id") % 4 === 0), tauMicro = 0L)
       .select(col("doc_id"), expr("nll_micro div n_tokens").as("ppl_q"))
-    val scored0 = lm.join(pred, "doc_id")
-    val scored = if (materialize) scored0.localCheckpoint() else scored0
+    val scored = lm.join(pred, "doc_id")
     val thr = scored.groupBy("pred_lang").agg(
       expr("percentile(ppl_q, 0.3333333333333333d)").as("t1"),
       expr("percentile(ppl_q, 0.6666666666666666d)").as("t2"))

@@ -4,6 +4,8 @@ import java.io.{File, FileInputStream, FileOutputStream, ObjectInputStream, Obje
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,10 +24,54 @@ final case class EngineConfig(
     numTrees: Int = 15,
     maxNodeSize: Int = 5,
     seed: Long = 42L,
-    indexKind: String = "lsh") {
-  require(Set("lsh", "ivfpq", "sq8", "pq")(indexKind),
-    s"unknown indexKind '$indexKind' (lsh | ivfpq | sq8 | pq)")
+    indexKind: String = IndexKind.Lsh.name) {
+  /** The index kind `indexKind` names, resolved once. */
+  val kind: IndexKind = IndexKind.byName.getOrElse(indexKind,
+    throw new IllegalArgumentException(s"unknown indexKind '$indexKind' " +
+      IndexKind.byName.keys.toSeq.sorted.mkString("(", " | ", ")")))
   def distanceMetric: Distances.Metric = Distances.byName(metric)
+}
+
+/** The engine's index kinds. [[EngineConfig.kind]] resolves the configured
+  * name once, and each lifecycle step (build, append, serve, rewrite,
+  * retrain) dispatches on the result in one place. */
+sealed abstract class IndexKind(val name: String)
+
+object IndexKind {
+  /** The LSH forest: a flat, leaf-sorted bucket table plus the trees. */
+  case object Lsh extends IndexKind("lsh")
+
+  /** IVF-PQ: coarse cells plus PQ codes, partitioned on disk by cell. */
+  case object IvfPq extends IndexKind("ivfpq")
+
+  /** A flat quantizer: one (id, codes) row per vector and no routing
+    * layout. `train` fits a model on (vectors, dim); `topK` takes
+    * (queries, codes, vectors, model, k, rerank, metric), shortlists by a
+    * codes-only scan and reranks the shortlist exactly. */
+  sealed abstract class Flat[M <: AnyRef](name: String,
+      val train: (DataFrame, Int) => M,
+      val encode: (DataFrame, M) => DataFrame,
+      val topK: (DataFrame, DataFrame, DataFrame, M, Int, Int,
+        Distances.Metric) => DataFrame)(implicit val tag: ClassTag[M])
+      extends IndexKind(name)
+
+  /** SQ8: exact per-dimension bounds (one aggregation, no RNG), one byte
+    * per component. */
+  case object Sq8 extends Flat[graft.ops.Sq.SqModel]("sq8",
+    train = (vectors, _) => graft.ops.Sq.train(vectors),
+    encode = graft.ops.Sq.encode(_, _, vecId = "id"),
+    topK = graft.ops.Sq.topKRerank(_, _, _, _, _, _, _, vecId = "id"))
+
+  /** PQ: PQ16 when the dimension allows (16 bytes per vector), halving m
+    * until it divides; the codebooks train on a bounded seeded sample. */
+  case object Pq extends Flat[graft.ops.Pq.PqModel]("pq",
+    train = (vectors, dim) => graft.ops.Pq.train(vectors,
+      m = Seq(16, 8, 4, 2, 1).find(dim % _ == 0).get, vecId = "id"),
+    encode = graft.ops.Pq.encode(_, _, vecId = "id"),
+    topK = graft.ops.Pq.topK(_, _, _, _, _, _, _, vecId = "id"))
+
+  val byName: Map[String, IndexKind] =
+    Seq(Lsh, IvfPq, Sq8, Pq).map(k => k.name -> k).toMap
 }
 
 /** The engine lifecycle (reference: src/database/core.rs:92-254) as a
@@ -35,8 +81,12 @@ final case class EngineConfig(
   *   <path>/zebra.json        metadata (dim, metric, index options)  [.zebra file, core.rs:183-190]
   *   <path>/vectors/          parquet (id, seq, embedding, document) [fjall KV + doc files]
   *   <path>/index/            LSH bucket table (id, tree_id, leaf_id),  [tree blobs]
-  *                            flat, files sorted by (tree_id, leaf_id)
-  *   <path>/index_model.bin   broadcast-able forest (hyperplanes)
+  *                            flat, files sorted by (tree_id, leaf_id);
+  *                            or the quantizer codes, by cell_id for IVF-PQ
+  *   <path>/index_model.bin   the index kind's model (forest hyperplanes or quantizers)
+  *   <path>/trained_on.txt    IVF-PQ, SQ8 and PQ: the corpus size at the last
+  *                            fit, which [[retrainIfGrown]] reads; an engine
+  *                            without the file reads as always stale
   * }}}
   *
   * Mutations are table rewrites (stage to a sibling dir, then atomic swap)
@@ -65,6 +115,8 @@ final class ZebraEngine private (
   private def vectorsDir = s"$path/vectors"
   private def indexDir = s"$path/index"
   private def modelFile = s"$path/index_model.bin"
+  private def trainedOnFile = s"$path/trained_on.txt"
+  private def kind = config.kind
 
   /** Read schemas of the engine's tables, keyed by dir (see the class
     * doc's read-schema rule). */
@@ -173,41 +225,29 @@ final class ZebraEngine private (
     // query time). seq >= base selects exactly this batch, and parquet
     // min/max stats prune every older file from the read-back.
     val written = readTable(vectorsDir).filter(col("seq") >= base)
-    config.indexKind match {
-      case "ivfpq" =>
-        // route the batch through the EXISTING quantizers (I7's shape):
-        // coarse assignment + codes, appended into the cell partitions
-        loadIvfPqModel().foreach { m =>
-          graft.ops.Ivf.assign(written, m.coarse, vecId = "id")
-            .drop("embedding")
-            .join(graft.ops.Pq.encode(written, m.pq, vecId = "id"), Seq("id"))
-            .repartition(col("cell_id"))
-            .write.mode(SaveMode.Append).partitionBy("cell_id").parquet(indexDir)
-        }
-      case "sq8" =>
-        // FROZEN bounds (the frozen-quantizer increment pattern): encode
-        // stays linearly exact even for values outside the trained
-        // [min, max] — code and reconstruction are inverse affine maps, so
-        // drift costs only step size, never correctness of the shortlist
-        // contract (rerank fixes the rest)
-        loadSqModel().foreach { m =>
-          graft.ops.Sq.encode(written, m, vecId = "id")
-            .write.mode(SaveMode.Append).parquet(indexDir)
-        }
-      case "pq" =>
-        loadPqModel().foreach { m =>
-          graft.ops.Pq.encode(written, m, vecId = "id")
-            .write.mode(SaveMode.Append).parquet(indexDir)
-        }
-      case _ =>
+    // every kind routes the batch through its EXISTING model (I7's shape)
+    kind match {
+      case IndexKind.Lsh =>
         // read back, route and append in one job: each read-back task
         // sorts its own rows by (tree_id, leaf_id) and writes one flat
         // file, so nothing shuffles
-        loadModel().foreach { model =>
+        forest.foreach { model =>
           LshForest.bucketTable(written, model, vecId = "id")
             .sortWithinPartitions("tree_id", "leaf_id")
             .write.mode(SaveMode.Append).parquet(indexDir)
         }
+      case IndexKind.IvfPq =>
+        // coarse assignment + codes, appended into the cell partitions
+        loadModel[IvfPq.IvfPqModel].foreach(m => IvfPq.writeCells(
+          IvfPq.encode(written, m, vecId = "id"), SaveMode.Append, indexDir))
+      case f: IndexKind.Flat[qm] =>
+        // FROZEN quantizers stay correct: SQ8's encode is linearly exact
+        // even outside the trained [min, max] (code and reconstruction
+        // are inverse affine maps, so drift costs only step size), and a
+        // PQ code decodes to its nearest trained centroid; the rerank
+        // fixes the rest
+        loadModel[qm](f.tag).foreach(model =>
+          f.encode(written, model).write.mode(SaveMode.Append).parquet(indexDir))
     }
   }
 
@@ -239,90 +279,64 @@ final class ZebraEngine private (
     // Selectivity of the predicate, 1.0 when unfiltered; lazy so the
     // extra count job only runs on indexed filtered paths.
     lazy val keptCount = where.map(_ => recs.count()).getOrElse(count())
+    // The candidate budget of every indexed kind: `searchK`, else the
+    // kind's default, scaled by the measured 1/selectivity when filtered.
+    def budget(default: => Int): Int = {
+      val base = searchK.getOrElse(default)
+      if (where.isDefined) LshForest.scaledBudget(base, keptCount, count())
+      else base
+    }
     def exact = SimSearch.exactTopK(queries, recs, k, metric = m, vecId = "id")
-    config.indexKind match {
-      case "ivfpq" =>
-        loadIvfPqModel() match {
-          case Some(model) if hasData(indexDir) =>
-            // searchK plays its LSH role of the candidate budget: it is
-            // the rerank size, and an exhaustive budget also probes every
-            // cell — so full-budget queries degenerate to exact kNN under
-            // ANY metric (the shortlist is the whole corpus).
-            val full = searchK.exists(_ >= Int.MaxValue)
-            val nprobe =
-              if (full || where.isDefined) model.coarse.nlist
-              else math.max(1, (model.coarse.nlist * 3) / 4)
-            // Default rerank follows the occupancy sizing law rather than a
-            // fixed 32·k: the scale probe showed fixed shortlists decay to
-            // recall 0.41 at 1.6M vectors (SURVEY §8.2) — the budget must
-            // track how many rows the probed cells actually hold. Filtered
-            // search probes every cell (survivors may live anywhere) and
-            // scales the rerank shortlist by 1/selectivity.
-            val baseRerank = searchK.getOrElse(
-              IvfPq.defaultRerank(k, count(), nprobe, model.coarse.nlist))
-            val rerank =
-              if (where.isDefined)
-                LshForest.scaledBudget(baseRerank, keptCount, count())
-              else baseRerank
-            IvfPq.topK(
-              queries, readTable(indexDir), recs, model, k,
-              nprobe = nprobe, rerank = rerank,
-              metric = m, vecId = "id")
-          case _ => exact
+    if (!hasData(indexDir)) exact
+    else kind match {
+      case IndexKind.Lsh =>
+        forest.fold(exact) { model =>
+          // the live count bounds the pairs: inserts grew the leaves
+          // past the model's build sample
+          LshForest.topK(
+            queries, readTable(indexDir), recs, model, k, metric = m,
+            searchKOpt = Some(budget(LshForest.defaultSearchK(k, model))),
+            vecId = "id", liveRows = Some(count()))
         }
-      case "sq8" | "pq" =>
+      case IndexKind.IvfPq =>
+        loadModel[IvfPq.IvfPqModel].fold(exact) { model =>
+          // searchK plays its LSH role of the candidate budget: it is
+          // the rerank size, and an exhaustive budget also probes every
+          // cell — so full-budget queries degenerate to exact kNN under
+          // ANY metric (the shortlist is the whole corpus). Filtered
+          // search probes every cell (survivors may live anywhere).
+          val full = searchK.exists(_ >= Int.MaxValue)
+          val nprobe =
+            if (full || where.isDefined) model.coarse.nlist
+            else math.max(1, (model.coarse.nlist * 3) / 4)
+          // Default rerank follows the occupancy sizing law rather than a
+          // fixed 32·k: the scale probe showed fixed shortlists decay to
+          // recall 0.41 at 1.6M vectors (SURVEY §8.2) — the budget must
+          // track how many rows the probed cells actually hold.
+          IvfPq.topK(
+            queries, readTable(indexDir), recs, model, k, nprobe = nprobe,
+            rerank = budget(
+              IvfPq.defaultRerank(k, count(), nprobe, model.coarse.nlist)),
+            metric = m, vecId = "id")
+        }
+      case f: IndexKind.Flat[qm] =>
         // COMPRESSED-SCAN serving (the 100 TB memory lever in the product
         // API, VERDICT r13 ask 7): shortlist from a codes-only scan (4 x
         // smaller for SQ8, ~30x for PQ16 at 64-d), exact rerank of just
-        // the shortlist. The rerank budget follows the same occupancy law
-        // as IVF-PQ's (corpus-tracking, never fixed); `searchK` overrides
-        // it, and an exhaustive budget degenerates to exact kNN under any
-        // metric. Filtered search semi-joins the code table down to the
-        // predicate's survivors FIRST and scales the budget by measured
-        // 1/selectivity — same contract as the other families.
-        val quantized = hasData(indexDir) &&
-          (config.indexKind == "sq8" && loadSqModel().isDefined ||
-            config.indexKind == "pq" && loadPqModel().isDefined)
-        if (!quantized) exact
-        else {
-          val baseRerank = searchK.getOrElse(
-            graft.ops.Pq.defaultRerank(k, count()))
-          val rerank =
-            if (where.isDefined)
-              LshForest.scaledBudget(baseRerank, keptCount, count())
-            else baseRerank
+        // the shortlist, under IVF-PQ's occupancy budget law. Filtered
+        // search semi-joins the code table down to the predicate's
+        // survivors FIRST.
+        loadModel[qm](f.tag).fold(exact) { model =>
           // never materialize a shortlist larger than the (filtered)
           // corpus: Int.MaxValue budgets mean "exhaustive", not "allocate"
-          val cappedRerank =
-            math.max(k, math.min(rerank.toLong, keptCount).toInt)
-          val codes0 = readTable(indexDir)
-          val codes = where
-            .map(_ => codes0.join(recs.select("id"), Seq("id"), "left_semi"))
-            .getOrElse(codes0)
-          if (config.indexKind == "sq8")
-            graft.ops.Sq.topKRerank(queries, codes, recs, loadSqModel().get,
-              k, cappedRerank, metric = m, vecId = "id")
-          else
-            graft.ops.Pq.topK(queries, codes, recs, loadPqModel().get,
-              k, cappedRerank, metric = m, vecId = "id")
-        }
-      case _ =>
-        loadModel() match {
-          case Some(model) if hasData(indexDir) =>
-            val sk = where match {
-              case Some(_) =>
-                val base =
-                  searchK.getOrElse(LshForest.defaultSearchK(k, model))
-                Some(LshForest.scaledBudget(base, keptCount, count()))
-              case None => searchK
-            }
-            // the live count bounds the pairs: inserts grew the leaves
-            // past the model's build sample
-            LshForest.topK(
-              queries, readTable(indexDir), recs, model, k,
-              metric = m, searchKOpt = sk, vecId = "id",
-              liveRows = Some(count()))
-          case _ => exact
+          val rerank = math.max(k, math.min(
+            budget(graft.ops.Pq.defaultRerank(k, count())).toLong,
+            keptCount).toInt)
+          val codes = readTable(indexDir)
+          f.topK(queries,
+            where.fold(codes)(_ =>
+              codes.join(recs.select("id"), Seq("id"), "left_semi")),
+            recs, model, k, rerank, m)
         }
     }
   }
@@ -469,7 +483,7 @@ final class ZebraEngine private (
 
   /** Every (tree_id, leaf_id) some tree of the LSH model routes to, each
     * once (leaf ids are unique within a tree); None without a model. */
-  private def reachableLeaves: Option[DataFrame] = loadModel().map { model =>
+  private def reachableLeaves: Option[DataFrame] = forest.map { model =>
     import spark.implicits._
     model.trees.zipWithIndex.flatMap { case (t, i) =>
       LshForest.leafIds(t).map(l => (i, l))
@@ -503,7 +517,7 @@ final class ZebraEngine private (
     * rows outgrow live ones or the overflow membership is too big to fetch.
     * Returns true when any compaction work happened. */
   def compactIndexIfNeeded(factor: Double = 4.0): Boolean = {
-    if (!hasData(indexDir) || loadModel().isEmpty) return false
+    if (!hasData(indexDir) || forest.isEmpty) return false
     val n = count()
     // Leaf populations are CORPUS rows, but maxNodeSize bounds the leaf in
     // BUILD-SAMPLE rows. The floor any compaction can reach is what a FRESH
@@ -531,7 +545,7 @@ final class ZebraEngine private (
         memberRows * config.dim > 512L * 1024 * 1024 / 8) {
       refreshIndex(); return true
     }
-    var model = loadModel().get
+    var model = forest.get
     val sizeScale = model.sampleTotal.toDouble / math.max(n, 1L)
     import spark.implicits._
     val ovDf = overflowing.map(o => (o._1, o._2)).toSeq.toDF("tree_id", "leaf_id")
@@ -582,63 +596,38 @@ final class ZebraEngine private (
     stale
   }
 
-  /** IVF-PQ staleness maintenance — the quantizer-family sibling of
-    * [[compactIndexIfNeeded]]. Incremental ingest ([[insertRecords]])
-    * routes new vectors through the FROZEN coarse centroids and PQ
-    * codebooks, which stay exactly correct (every vector is assigned and
-    * encoded) but drift in QUALITY as the corpus outgrows the fit:
-    * cells fill past the ~sqrt(n) sizing rule (so a fixed nprobe scans
-    * ever-fatter cells) and codebooks quantize a distribution they were
-    * never fit on (so ADC ordering noise grows and the occupancy-scaled
-    * rerank pays for it). Neither rots correctness the way LSH leaf
-    * overflow does — there is no incremental half-measure worth taking
-    * (re-fitting codebooks re-encodes every stored code anyway), so the
-    * trigger goes straight to the full [[refreshIndex]] retrain, which
-    * re-chooses nlist for today's corpus, refits both quantizers, and
-    * rewrites the cell partitions in one pass.
+  /** The retrain rule of the quantizer kinds (IVF-PQ, SQ8, PQ), their
+    * sibling of [[compactIndexIfNeeded]]. Incremental ingest
+    * ([[insertRecords]]) encodes through FROZEN quantizers, which stay
+    * correct (every vector is assigned and encoded) but drift in QUALITY
+    * as the corpus outgrows the fit: IVF cells fill past the ~sqrt(n)
+    * sizing rule (so a fixed nprobe scans ever-fatter cells), codebooks
+    * quantize a distribution they were never fit on (so ADC ordering noise
+    * grows and the occupancy-scaled rerank pays for it), and SQ8's step
+    * widens when new data exceeds the trained extremes. There is no
+    * incremental half-measure (refitting any quantizer re-encodes every
+    * stored code anyway), so the trigger goes straight to the full
+    * [[refreshIndex]], which re-chooses nlist for today's corpus, refits
+    * and rewrites the codes in one pass.
     *
     * Fires when the corpus has grown past `growthFactor`× the size the
-    * model was fit on (models from before staleness tracking, trainedOn=0,
-    * read as always-stale). growthFactor=4 matches the LSH compaction
-    * factor and keeps the amortized retrain cost logarithmic: each retrain
+    * index was fit on ([[trainedOn]]; an engine without the record reads
+    * as always stale). growthFactor=4 matches the LSH compaction factor
+    * and keeps the amortized retrain cost logarithmic: each retrain
     * processes ≤ 4/3 of all rows ever ingested since the last one.
-    * Returns true when a retrain happened. */
-  def maintainIvfPqIfNeeded(growthFactor: Double = 4.0): Boolean = {
-    if (config.indexKind != "ivfpq" || !hasData(indexDir)) return false
-    loadIvfPqModel() match {
-      case Some(m) =>
-        val n = count()
-        if (m.trainedOn > 0L && n < growthFactor * m.trainedOn) false
-        else { refreshIndex(); true }
-      case None => false
-    }
-  }
-
-  private def trainedOnFile = s"$path/trained_on.txt"
-
-  /** Staleness maintenance for the flat quantized kinds — the
-    * [[maintainIvfPqIfNeeded]] analog for sq8/pq: incremental ingest
-    * encodes through FROZEN quantizers, which stay CORRECT (SQ8's affine
-    * map is linearly exact even out-of-range; PQ codes always decode to
-    * their nearest trained centroid) but drift in QUALITY as the corpus
-    * outgrows the fit — PQ codebooks quantize a distribution they were
-    * never fit on, SQ8's step widens when new data exceeds the trained
-    * extremes. There is no incremental half-measure (refitting either
-    * quantizer re-encodes every stored code anyway), so the trigger goes
-    * straight to [[refreshIndex]]. Fires past `growthFactor`× the corpus
-    * size the quantizer was fit on (recorded in a `trained_on` sidecar at
-    * build time; pre-sidecar indexes read as always-stale — the
-    * trainedOn=0 convention). Returns true when a retrain happened. */
-  def maintainQuantizedIfNeeded(growthFactor: Double = 4.0): Boolean = {
-    if (config.indexKind != "sq8" && config.indexKind != "pq") return false
-    if (!hasData(indexDir)) return false
-    val trainedOn =
-      try new String(Files.readAllBytes(Paths.get(trainedOnFile)),
-        StandardCharsets.UTF_8).trim.toLong
-      catch { case _: Throwable => 0L }
-    if (trainedOn > 0L && count() < growthFactor * trainedOn) false
+    * Returns true when a retrain happened; an LSH engine never retrains
+    * here. */
+  def retrainIfGrown(growthFactor: Double = 4.0): Boolean =
+    if (kind == IndexKind.Lsh || !hasData(indexDir)) false
+    else if (trainedOn > 0L && count() < growthFactor * trainedOn) false
     else { refreshIndex(); true }
-  }
+
+  /** The corpus size the quantizer index was fit on, from
+    * `trained_on.txt`; 0 when the file is absent or unreadable. */
+  private[graft] def trainedOn: Long =
+    try new String(Files.readAllBytes(Paths.get(trainedOnFile)),
+      StandardCharsets.UTF_8).trim.toLong
+    catch { case _: Exception => 0L }
 
   /** Build (or rebuild — leaf-split compaction) the configured index. */
   def refreshIndex(): Unit = {
@@ -646,42 +635,32 @@ final class ZebraEngine private (
     buildIndex()
   }
 
-  private def buildIndex(): Unit = config.indexKind match {
-    case "sq8" =>
-      // exact per-dimension bounds (one aggregation, no RNG) + the 4x
-      // codes table; a rebuild re-derives the bounds for today's corpus
-      val model = graft.ops.Sq.train(vectors)
-      graft.ops.Sq.encode(vectors, model, vecId = "id")
-        .write.mode(SaveMode.Overwrite).parquet(indexDir)
-      saveModel(model)
-      Files.write(Paths.get(trainedOnFile),
-        count().toString.getBytes(StandardCharsets.UTF_8))
-      ()
-    case "pq" =>
-      // PQ16 when the dimension allows (16 bytes/vector), halving m until
-      // it divides — the codebooks train on a bounded seeded sample
-      val m = Seq(16, 8, 4, 2, 1).find(config.dim % _ == 0).get
-      val model = graft.ops.Pq.train(vectors, m = m, vecId = "id")
-      graft.ops.Pq.encode(vectors, model, vecId = "id")
-        .write.mode(SaveMode.Overwrite).parquet(indexDir)
-      saveModel(model)
-      Files.write(Paths.get(trainedOnFile),
-        count().toString.getBytes(StandardCharsets.UTF_8))
-      ()
-    case "ivfpq" =>
-      // nlist ~ sqrt(n): cells stay ~sqrt(n)-sized, the classic IVF rule
-      val n = count()
-      val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-      val model = IvfPq.train(vectors, nlist = nlist, vecId = "id",
-        trainedOn = n)
-      IvfPq.buildIndex(vectors, model, indexDir, vecId = "id")
-      saveModel(model)
-    case _ =>
+  private def buildIndex(): Unit = kind match {
+    case IndexKind.Lsh =>
       val model = LshForest.build(
         vectors, LshForest.Options(
           config.numTrees, config.maxNodeSize, config.seed), vecId = "id")
       LshForest.writeIndex(vectors, model, indexDir, vecId = "id")
       saveModel(model)
+    case IndexKind.IvfPq =>
+      // nlist ~ sqrt(n): cells stay ~sqrt(n)-sized, the classic IVF rule
+      val nlist = math.max(16, math.min(4096, math.sqrt(count().toDouble).toInt))
+      val model = IvfPq.train(vectors, nlist = nlist, vecId = "id")
+      IvfPq.buildIndex(vectors, model, indexDir, vecId = "id")
+      saveFit(model)
+    case f: IndexKind.Flat[qm] =>
+      // a rebuild refits the quantizer on today's corpus
+      val model = f.train(vectors, config.dim)
+      f.encode(vectors, model).write.mode(SaveMode.Overwrite).parquet(indexDir)
+      saveFit(model)
+  }
+
+  /** Save a quantizer model with the corpus size it was fit on. */
+  private def saveFit(model: AnyRef): Unit = {
+    saveModel(model)
+    Files.write(Paths.get(trainedOnFile),
+      count().toString.getBytes(StandardCharsets.UTF_8))
+    ()
   }
 
   /** In-process model cache, stamped with the file's (mtime, length): at a
@@ -691,44 +670,28 @@ final class ZebraEngine private (
     * coherent when another process (or a saveModel here) rewrites the file. */
   @volatile private var modelCache: Option[((Long, Long), AnyRef)] = None
 
-  /** Stamp-cached deserialization of whatever model the configured index
-    * kind persisted (the file holds a ForestModel or an IvfPqModel). */
-  private def loadRawModel(): Option[AnyRef] = {
+  /** The persisted model when it is an `M`: the one model loader. The
+    * file holds the model of the engine's own kind, so any other type
+    * reads as None. Deserialization is stamp-cached. */
+  private[graft] def loadModel[M <: AnyRef](implicit tag: ClassTag[M]): Option[M] = {
     val f = new File(modelFile)
     if (!f.exists()) { modelCache = None; None }
     else {
       val stamp = (f.lastModified(), f.length())
-      modelCache match {
-        case Some((s, m)) if s == stamp => Some(m)
+      val model = modelCache match {
+        case Some((s, m)) if s == stamp => m
         case _ =>
           val in = new ObjectInputStream(new FileInputStream(f))
           val m = try in.readObject() finally in.close()
           modelCache = Some((stamp, m))
-          Some(m)
+          m
       }
+      Some(model).collect { case m: M => m }
     }
   }
 
-  private[graft] def loadModel(): Option[LshForest.ForestModel] =
-    if (config.indexKind != "lsh") None
-    else loadRawModel().map(_.asInstanceOf[LshForest.ForestModel])
-
-  /** Read-only view of the persisted IVF-PQ model (None for LSH engines):
-    * maintenance introspection — the staleness probe and specs check
-    * `trainedOn` / `coarse.nlist` against the live corpus through this. */
-  def ivfPqModel: Option[IvfPq.IvfPqModel] = loadIvfPqModel()
-
-  private[engine] def loadIvfPqModel(): Option[IvfPq.IvfPqModel] =
-    if (config.indexKind != "ivfpq") None
-    else loadRawModel().map(_.asInstanceOf[IvfPq.IvfPqModel])
-
-  private[engine] def loadSqModel(): Option[graft.ops.Sq.SqModel] =
-    if (config.indexKind != "sq8") None
-    else loadRawModel().map(_.asInstanceOf[graft.ops.Sq.SqModel])
-
-  private[engine] def loadPqModel(): Option[graft.ops.Pq.PqModel] =
-    if (config.indexKind != "pq") None
-    else loadRawModel().map(_.asInstanceOf[graft.ops.Pq.PqModel])
+  private def forest: Option[LshForest.ForestModel] =
+    loadModel[LshForest.ForestModel]
 
   private def saveModel(m: AnyRef): Unit = {
     val out = new ObjectOutputStream(new FileOutputStream(modelFile))
@@ -778,21 +741,20 @@ final class ZebraEngine private (
     * by cell_id. */
   private def rewriteIndex(df: DataFrame): Unit = {
     val tmp = indexDir + ".staging"
-    config.indexKind match {
-      case "ivfpq" =>
-        df.repartition(col("cell_id"))
-          .write.mode(SaveMode.Overwrite).partitionBy("cell_id").parquet(tmp)
-        // the partition column reads back last: infer on the next read
-        swap(indexDir, tmp, None)
-      case "sq8" | "pq" =>
-        df.write.mode(SaveMode.Overwrite).parquet(tmp)
-        swap(indexDir, tmp, Some(df.schema))
-      case _ =>
+    val written = kind match {
+      case IndexKind.Lsh =>
         df.repartitionByRange(col("tree_id"), col("leaf_id"))
           .sortWithinPartitions("tree_id", "leaf_id")
           .write.mode(SaveMode.Overwrite).parquet(tmp)
-        swap(indexDir, tmp, Some(df.schema))
+        Some(df.schema)
+      case IndexKind.IvfPq =>
+        IvfPq.writeCells(df, SaveMode.Overwrite, tmp)
+        None // the partition column reads back last: infer on the next read
+      case _: IndexKind.Flat[_] =>
+        df.write.mode(SaveMode.Overwrite).parquet(tmp)
+        Some(df.schema)
     }
+    swap(indexDir, tmp, written)
   }
 
   /** Swap `tmp` in as `dir`. `written` is the schema of the frame written
@@ -817,9 +779,10 @@ final class ZebraEngine private (
   /** Bucket tables written before the flat layout sit in `tree_id=`
     * directories. Parquet cannot read one directory holding both layouts,
     * and a flat append would create exactly that, so [[ZebraEngine.open]]
-    * rewrites such a table flat once, before anything else touches it. */
+    * rewrites such a table flat once, before anything else touches it.
+    * Only the LSH kind ever wrote `tree_id=` directories. */
   private def flattenLegacyIndex(): Unit =
-    if (config.indexKind == "lsh" && hasLegacyLshLayout(indexDir))
+    if (hasLegacyLshLayout(indexDir))
       rewriteIndex(spark.read.parquet(indexDir).select("id", "tree_id", "leaf_id"))
 }
 
@@ -900,7 +863,7 @@ object ZebraEngine {
       seed = num("seed").toLong,
       // absent in pre-pluggability metadata files: those engines are LSH
       indexKind = """"index_kind"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(json).map(_.group(1)).getOrElse("lsh"))
+        .findFirstMatchIn(json).map(_.group(1)).getOrElse(IndexKind.Lsh.name))
   }
 
   private def deleteRecursively(f: File): Unit = {

@@ -478,19 +478,14 @@ object LshForest {
       cand: DataFrame, q: DataFrame, bound: Long, vectors: DataFrame, k: Int,
       metric: Distances.Metric, queryId: String, vecId: String,
       roundTo: Int): DataFrame = {
-    val (candSide, qSide) =
-      if (bound <= MaxBroadcastPairs) (broadcast(cand), broadcast(q))
+    val (pairs, fits) =
+      if (bound <= MaxBroadcastPairs) (cand, true)
       else {
         val c = cand.localCheckpoint()
-        if (c.count() <= MaxBroadcastPairs) (broadcast(c), broadcast(q)) else (c, q)
+        (c, c.count() <= MaxBroadcastPairs)
       }
-    val scored = vectors
-      .select(col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-      .join(candSide, vecId)
-      .join(qSide, queryId)
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    SimSearch.takeTopK(scored, k, queryId, vecId)
+    SimSearch.rerankPairs(pairs, q, vectors, k, metric, queryId, vecId, roundTo,
+      broadcastPairs = fits, broadcastQueries = fits)
   }
 
   /** Default candidate budget: k·numTrees sample points per tree — Annoy's
@@ -547,10 +542,8 @@ object LshForest {
     if (qRows.length > SmallBatchCap) {
       val cand = candidates(queries, buckets, model, searchK, queryId, vecId)
         .select(col(queryId), col(vecId))
-      val q = queries.select(
-        col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
-      return rerank(cand, q, Long.MaxValue, vectors, k, metric,
-        queryId, vecId, roundTo)
+      return rerank(cand, SimSearch.queryEmbeddings(queries, queryId),
+        Long.MaxValue, vectors, k, metric, queryId, vecId, roundTo)
     }
     val spark = buckets.sparkSession
     val qIdType = queries.schema(queryId).dataType

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
@@ -19,14 +19,7 @@ import graft.functions.Distances
   * exact kNN, which is what the catalog twin hash-checks. */
 object IvfPq {
 
-  /** `trainedOn` records the corpus size the quantizers were fit on
-    * (0 = unknown, pre-staleness-tracking builds): incremental ingest
-    * routes new vectors through these FROZEN quantizers, and the engine's
-    * retrain trigger ([[graft.engine.ZebraEngine.maintainIvfPqIfNeeded]])
-    * compares the live corpus against this to decide when the fit has
-    * gone stale. */
-  final case class IvfPqModel(
-      coarse: Ivf.IvfModel, pq: Pq.PqModel, trainedOn: Long = 0L)
+  final case class IvfPqModel(coarse: Ivf.IvfModel, pq: Pq.PqModel)
 
   /** Occupancy-scaled default rerank budget — the sizing law the scale
     * probe measured (SURVEY §8.2): a FIXED shortlist decays as cells grow
@@ -43,27 +36,31 @@ object IvfPq {
     math.max(32 * k, math.ceil(probedEst / 500.0).toInt)
   }
 
-  /** Train both quantizers on the same bounded-sample discipline.
-    * `trainedOn`: corpus size at fit time, stamped into the model for the
-    * staleness trigger (callers that already counted pass it; 0 = untracked). */
+  /** Train both quantizers on the same bounded-sample discipline. */
   def train(
       vectors: DataFrame, nlist: Int, m: Int = 8, ksub: Int = 256,
-      vecId: String = "vec_id", trainedOn: Long = 0L): IvfPqModel =
+      vecId: String = "vec_id"): IvfPqModel =
     IvfPqModel(
       Ivf.chooseCentroids(vectors, nlist, vecId = vecId),
-      Pq.train(vectors, m = m, ksub = ksub, vecId = vecId),
-      trainedOn)
+      Pq.train(vectors, m = m, ksub = ksub, vecId = vecId))
 
-  /** Build + persist (cell_id, vecId, codes), partitioned by cell — the
-    * compressed, partition-pruned layout. One narrow map per quantizer,
-    * one equi-join on vecId, one clustering shuffle for the write. */
+  /** (cell_id, vecId, codes) of `vectors` through the model: one narrow
+    * map per quantizer, one equi-join on vecId. */
+  def encode(vectors: DataFrame, model: IvfPqModel, vecId: String = "vec_id"): DataFrame =
+    Ivf.assign(vectors, model.coarse, vecId).drop("embedding")
+      .join(Pq.encode(vectors, model.pq, vecId), Seq(vecId))
+
+  /** Write index rows partitioned by cell — the compressed,
+    * partition-pruned layout — after one clustering shuffle. */
+  def writeCells(rows: DataFrame, mode: SaveMode, path: String): Unit =
+    rows.repartition(col("cell_id"))
+      .write.mode(mode).partitionBy("cell_id").parquet(path)
+
+  /** Build + persist (cell_id, vecId, codes). */
   def buildIndex(
       vectors: DataFrame, model: IvfPqModel, path: String,
       vecId: String = "vec_id"): Unit =
-    Ivf.assign(vectors, model.coarse, vecId).drop("embedding")
-      .join(Pq.encode(vectors, model.pq, vecId), Seq(vecId))
-      .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(path)
+    writeCells(encode(vectors, model, vecId), SaveMode.Overwrite, path)
 
   def loadIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -88,17 +85,7 @@ object IvfPq {
       .join(broadcast(p), Seq("cell_id"))
       .select(col(queryId), col(vecId), col("codes"))
     val scored = Pq.adcScoresKeyed(probedCodes, queries, model.pq, queryId, vecId)
-    val shortlist = SimSearch.takeTopK(scored, rerank, queryId, vecId)
-      .select(col(queryId), col(vecId))
-    val q = queries.select(
-      col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
-    val v = vectors.select(
-      col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-    val reranked = shortlist
-      .join(v, Seq(vecId))
-      .join(broadcast(q), Seq(queryId))
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    SimSearch.takeTopK(reranked, k, queryId, vecId)
+    SimSearch.rerankTopK(SimSearch.takeTopK(scored, rerank, queryId, vecId),
+      queries, vectors, k, metric, queryId, vecId, roundTo)
   }
 }

@@ -71,13 +71,8 @@ object KnnJoin {
       .select(col(vecId), col("tree_id"), col("leaf_id"))
     val cand = qRoutes.join(cRoutes, Seq("tree_id", "leaf_id"))
       .select(col(queryId), col(vecId)).distinct()
-    val scored = cand
-      .join(corpus.select(
-        col(vecId), Distances.asDouble(corpus("embedding")).as("v_emb")), Seq(vecId))
-      .join(queries.select(
-        col(queryId), Distances.asDouble(queries("embedding")).as("q_emb")), Seq(queryId))
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), 4))
-    SimSearch.takeTopK(scored, k, queryId, vecId)
+    // both sides may be corpus-sized: nothing broadcasts
+    SimSearch.rerankPairs(cand, SimSearch.queryEmbeddings(queries, queryId),
+      corpus, k, metric, queryId, vecId, roundTo = 4, broadcastQueries = false)
   }
 }

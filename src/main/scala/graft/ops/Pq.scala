@@ -343,19 +343,9 @@ object Pq {
       queryId: String = "query_id", vecId: String = "vec_id",
       roundTo: Int = 4): DataFrame = {
     require(rerank >= k, "rerank budget must be at least k")
-    val shortlist = SimSearch.takeTopK(
-      adcScores(queries, codes, model, queryId, vecId), rerank, queryId, vecId)
-      .select(col(queryId), col(vecId))
-    val q = queries.select(
-      col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
-    val v = vectors.select(
-      col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-    val scored = shortlist
-      .join(v, Seq(vecId))
-      .join(broadcast(q), Seq(queryId))
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    SimSearch.takeTopK(scored, k, queryId, vecId)
+    SimSearch.rerankTopK(
+      adcTopK(queries, codes, model, rerank, queryId, vecId),
+      queries, vectors, k, metric, queryId, vecId, roundTo)
   }
 
   /** Pure-ADC top-k (no rerank) — what a codes-only scan can answer. */

@@ -55,10 +55,4 @@ object Rotation {
   def rotateUdf: UserDefinedFunction = udf { (emb: Seq[Float]) =>
     fwht(emb.map(_.toDouble).toArray).map(_.toFloat)
   }
-
-  /** FWHT keeping doubles (integer-valued md5-count vectors — the
-    * hash-gate form: components stay exact integers). */
-  def rotateDoubleUdf: UserDefinedFunction = udf { (emb: Seq[Double]) =>
-    fwht(emb.toArray)
-  }
 }

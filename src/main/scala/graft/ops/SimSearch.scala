@@ -56,17 +56,10 @@ object SimSearch {
       queries: DataFrame, vectors: DataFrame, k: Int,
       metric: Distances.Metric = Distances.L2Squared,
       queryId: String = "query_id", vecId: String = "vec_id",
-      roundTo: Int = 4): DataFrame = {
-    val q = queries.select(
-      col(queryId),
-      Distances.asDouble(queries("embedding")).as("q_emb"))
-    val v = vectors.select(
-      col(vecId),
-      Distances.asDouble(vectors("embedding")).as("v_emb"))
-    val scored = v.crossJoin(broadcast(q))
-      .withColumn("dist", quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    takeTopK(scored, k, queryId, vecId)
-  }
+      roundTo: Int = 4): DataFrame =
+    scoreTopK(vectorEmbeddings(vectors, vecId)
+      .crossJoin(broadcast(queryEmbeddings(queries, queryId))),
+      k, metric, queryId, vecId, roundTo)
 
   /** Exact rerank of a bounded candidate PAIR set: score only the given
     * (query_id, vec_id) pairs against the full-dimension vectors and keep
@@ -78,17 +71,45 @@ object SimSearch {
       pairs: DataFrame, queries: DataFrame, vectors: DataFrame, k: Int,
       metric: Distances.Metric = Distances.L2Squared,
       queryId: String = "query_id", vecId: String = "vec_id",
-      roundTo: Int = 4): DataFrame = {
-    val q = queries.select(
-      col(queryId), Distances.asDouble(queries("embedding")).as("q_emb"))
-    val v = vectors.select(
-      col(vecId), Distances.asDouble(vectors("embedding")).as("v_emb"))
-    val scored = pairs.select(queryId, vecId)
-      .join(v, vecId)
-      .join(broadcast(q), queryId)
-      .withColumn("dist", quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    takeTopK(scored, k, queryId, vecId)
+      roundTo: Int = 4): DataFrame =
+    rerankPairs(pairs.select(queryId, vecId), queryEmbeddings(queries, queryId),
+      vectors, k, metric, queryId, vecId, roundTo)
+
+  /** (queryId, q_emb): the query side of an exact score. */
+  private[graft] def queryEmbeddings(queries: DataFrame, queryId: String): DataFrame =
+    queries.select(col(queryId), Distances.asDouble(queries("embedding")).as("q_emb"))
+
+  private def vectorEmbeddings(vectors: DataFrame, vecId: String): DataFrame =
+    vectors.select(col(vecId), Distances.asDouble(vectors("embedding")).as("v_emb"))
+
+  /** The exact-rerank tail of every candidate-generating search (LSH
+    * forest, IVF-PQ, PQ, SQ8, the cross-table kNN join): `pairs`
+    * (queryId, vecId) ⋈ vectors ⋈ query embeddings `q` (queryId, q_emb),
+    * exact score, top-k. Only the join hints differ per caller: by default
+    * the pairs probe the vectors and the queries broadcast;
+    * `broadcastPairs` makes the pairs the build side the vectors stream
+    * past; `broadcastQueries = false` hash-joins a large query side. */
+  private[graft] def rerankPairs(
+      pairs: DataFrame, q: DataFrame, vectors: DataFrame, k: Int,
+      metric: Distances.Metric, queryId: String, vecId: String, roundTo: Int,
+      broadcastPairs: Boolean = false,
+      broadcastQueries: Boolean = true): DataFrame = {
+    val v = vectorEmbeddings(vectors, vecId)
+    val withVectors =
+      if (broadcastPairs) v.join(broadcast(pairs), vecId) else pairs.join(v, vecId)
+    scoreTopK(withVectors.join(if (broadcastQueries) broadcast(q) else q, queryId),
+      k, metric, queryId, vecId, roundTo)
   }
+
+  /** Score joined (q_emb, v_emb) rows with the exact metric and keep k per
+    * query: the one place an exact distance is computed. */
+  private def scoreTopK(
+      joined: DataFrame, k: Int, metric: Distances.Metric,
+      queryId: String, vecId: String, roundTo: Int): DataFrame =
+    takeTopK(
+      joined.withColumn("dist",
+        quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo)),
+      k, queryId, vecId)
 
   /** Recall@k of `approx` against `exact` (both (query_id, vec_id, ...)). */
   def recallAtK(approx: DataFrame, exact: DataFrame): Double = {

@@ -105,17 +105,8 @@ object Sq {
     val shortlist = SimSearch.exactTopK(
       queries, decode(codes, model, vecId), rerank, metric = metric,
       queryId = queryId, vecId = vecId)
-      .select(col(queryId), col(vecId))
-    val q = queries.select(
-      col(queryId), Distances.asDouble(col("embedding")).as("q_emb"))
-    val v = vectors.select(
-      col(vecId), Distances.asDouble(col("embedding")).as("v_emb"))
-    val scored = shortlist
-      .join(v, Seq(vecId))
-      .join(broadcast(q), Seq(queryId))
-      .withColumn("dist",
-        SimSearch.quantize(metric, metric(col("q_emb"), col("v_emb")), roundTo))
-    SimSearch.takeTopK(scored, k, queryId, vecId)
+    SimSearch.rerankTopK(shortlist, queries, vectors, k, metric,
+      queryId, vecId, roundTo)
   }
 
   /** Per-JVM model + persisted code table (the family cache pattern). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.embed.{AudioSpectrogramEmbedder, Embedder, HashingTextEmbedder, ImageFeatureEmbedder}
-import graft.engine.{EngineConfig, ZebraEngine}
+import graft.engine.{EngineConfig, IndexKind, ZebraEngine}
 
 /** Terminal previews of query hits — the reference renders result images
   * in the terminal (viuer) and plays audio hits (rodio), main.rs:230-254,
@@ -72,7 +72,7 @@ private[graft] object HitPreview {
   *   graft.tools.Cli image  insert-from-files <engine-dir> <file|dir> ...
   *   graft.tools.Cli audio  query-from-files <engine-dir> <wav> [k]
   *   graft.tools.Cli <mod>  clear  <engine-dir>
-  *   graft.tools.Cli <mod>  maintain <engine-dir>   (compact + vacuum)
+  *   graft.tools.Cli <mod>  maintain <engine-dir>   (compact + vacuum, or retrain)
   * }}}
   */
 object Cli {
@@ -161,18 +161,19 @@ object Cli {
         println("cleared")
 
       case "maintain" => // beyond-reference: the index maintenance pass a
-        // long-lived engine runs between ingest batches — leaf-split
-        // compaction (or IVF-PQ staleness retrain), then vacuum of the
-        // stranded dead rows, each step reporting what it did
-        if (engine.config.indexKind == "ivfpq") {
-          // retrain rewrites the cells whole — there is nothing to vacuum,
-          // and liveIndex is unfiltered for ivfpq (two wasted index scans)
-          val retrained = engine.maintainIvfPqIfNeeded()
-          println(s"retrained: $retrained")
-        } else {
+        // long-lived engine runs between ingest batches, each step
+        // reporting what it did. An LSH engine splits its overflowing
+        // leaves, then vacuums the dead rows the splits strand. A quantizer
+        // engine (ivfpq, sq8, pq) retrains once the corpus has grown 4x
+        // past its fit; the retrain rewrites the codes whole, so there is
+        // nothing to vacuum.
+        if (engine.config.kind == IndexKind.Lsh) {
           val compacted = engine.compactIndexIfNeeded()
           val reclaimed = engine.vacuumIndex()
           println(s"compacted: $compacted, vacuumed: $reclaimed stale rows")
+        } else {
+          val retrained = engine.retrainIfGrown()
+          println(s"retrained: $retrained")
         }
 
       case other => sys.error(s"unknown command: $other")

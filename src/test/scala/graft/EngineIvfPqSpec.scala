@@ -79,44 +79,6 @@ class EngineIvfPqSpec extends AnyFunSuite {
     }
   }
 
-  test("staleness retrain: maintainIvfPqIfNeeded fires at 4x growth, not before") {
-    val p2 = SparkTestBase.tmpDir("test_engine_ivfpq_stale")
-    ZebraEngine.destroy(p2)
-    val e = ZebraEngine.create(
-      spark, p2, EngineConfig(dim = 16, indexKind = "ivfpq"))
-    def synth(from: Long, until: Long) = spark.range(from, until).select(
-      format_string("s%06d", col("id")).as("id"),
-      transform(sequence(lit(0), lit(15)),
-        j => (pmod(xxhash64(col("id"), j), lit(1000)) / lit(500.0) - 1.0)
-          .cast("float")).as("embedding"))
-    e.insertRecords(synth(0, 200))
-    e.refreshIndex()
-    val m0 = e.ivfPqModel.get
-    assert(m0.trainedOn == 200L, "train must stamp the fit-time corpus size")
-    assert(!e.maintainIvfPqIfNeeded(), "fresh index must not retrain")
-
-    // 2x growth: frozen quantizers still within budget — no retrain.
-    e.insertRecords(synth(200, 400))
-    assert(!e.maintainIvfPqIfNeeded(), "2x growth must not cross the 4x bar")
-
-    // 4x growth: the trigger fires, re-choosing nlist for today's corpus
-    // and refitting both quantizers on it.
-    e.insertRecords(synth(400, 800))
-    assert(e.maintainIvfPqIfNeeded(), "4x growth must retrain")
-    val m1 = e.ivfPqModel.get
-    assert(m1.trainedOn == 800L, "retrain must re-stamp the corpus size")
-    assert(m1.coarse.nlist > m0.coarse.nlist,
-      s"nlist must track sqrt(n): ${m0.coarse.nlist} -> ${m1.coarse.nlist}")
-
-    // The rebuilt index serves: every query's top-1 at default budgets is
-    // itself, across old and new regions of the corpus.
-    val q = synth(0, 3).union(synth(700, 703))
-      .select(col("id").as("query_id"), col("embedding"))
-    val top1 = e.queryVectors(q, k = 1).collect()
-    assert(top1.length == 6)
-    top1.foreach(r => assert(r.getString(0) == r.getString(1), r))
-  }
-
   test("metadata round-trips the index kind; legacy metadata reads as lsh") {
     val reopened = ZebraEngine.open(spark, path)
     assert(reopened.config.indexKind == "ivfpq")

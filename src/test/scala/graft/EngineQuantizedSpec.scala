@@ -99,35 +99,6 @@ class EngineQuantizedSpec extends AnyFunSuite {
       .forall(_.getLong(1) == 10L))
   }
 
-  test("quantized staleness maintenance: retrains past 4x growth, no-ops " +
-      "inside it, and full-budget stays exact after the retrain") {
-    import spark.implicits._
-    val path = SparkTestBase.tmpDir("test_engine_sq_maint")
-    ZebraEngine.destroy(path)
-    val e = ZebraEngine.create(
-      spark, path, EngineConfig(dim = 64, indexKind = "sq8"))
-    val emb = Tables.embeddings(spark, dir)
-      .select(format_string("v%06d", col("vec_id")).as("id"), col("embedding"))
-    e.insertRecords(emb.limit(40))
-    e.refreshIndex()
-    // inside the growth window: no retrain
-    e.insertRecords(emb.limit(40).select(
-      concat(lit("w"), col("id")).as("id"), col("embedding")))
-    assert(!e.maintainQuantizedIfNeeded(), "retrained inside the window")
-    // past 4x the trained size: retrain fires once, then quiesces
-    (2 to 5).foreach(i => e.insertRecords(emb.limit(40).select(
-      concat(lit(s"x$i"), col("id")).as("id"), col("embedding"))))
-    assert(e.maintainQuantizedIfNeeded(), "no retrain past 4x growth")
-    assert(!e.maintainQuantizedIfNeeded(), "retrain did not quiesce")
-    // the retrained index still serves exactly at full budget
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val exact = SimSearch.exactTopK(q, e.vectors, k = 5, vecId = "id")
-    assert(key(e.queryVectors(q, k = 5, searchK = Some(Int.MaxValue))) ==
-      key(exact))
-    ZebraEngine.destroy(path)
-  }
-
   test("sq8: frozen bounds stay linearly exact for OUT-OF-RANGE inserts " +
       "(drift costs step size, never shortlist correctness)") {
     // a vector far outside the trained [min, max] still reconstructs to

@@ -492,7 +492,7 @@ class ZebraEngineSpec extends AnyFunSuite {
     capped.insertRecords(spark.range(0L, 4200L, 1L, 4)
       .select(format_string("r%05d", col("id")).as("id"), gauss(col("id")).as("embedding")))
     capped.refreshIndex()
-    assert(capped.loadModel().get.sampleTotal == LshForest.byteBoundedCap(65536, dim))
+    assert(capped.loadModel[LshForest.ForestModel].get.sampleTotal == LshForest.byteBoundedCap(65536, dim))
     pinLookup(capped, "r00007")
     ZebraEngine.destroy(path)
   }
@@ -525,7 +525,7 @@ class ZebraEngineSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     eng.insertRecords(local((0 until 1000).map(i => Row(f"c$i%05d",
       centre.map(x => x + 1e-3f * rnd.nextGaussian().toFloat).toSeq))))
-    val model = eng.loadModel().get
+    val model = eng.loadModel[LshForest.ForestModel].get
     val searchK = LshForest.defaultSearchK(10, model)
     val q = Seq[(Any, Array[Double])]((0L, centre.map(_.toDouble)))
     val (probes, bound) = LshForest.routeOnDriver(q, model, searchK, Some(eng.count()))
